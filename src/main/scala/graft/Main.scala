@@ -2,7 +2,7 @@ package graft
 
 import graft.config.DedupConfig
 import graft.io.{CheckpointStore, TableIO}
-import graft.operators.{Ingest, Validate}
+import graft.operators.{Ingest, Spread, Validate}
 import graft.pipeline.DedupPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -242,7 +242,7 @@ object Main {
     val outIo = TableIO.resolve(spark, output)
     val parts =
       if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+      else Spread.shufflePartitions(spark)
     val store = checkpoint.map(new CheckpointStore(spark, _, runId))
 
     incremental match {

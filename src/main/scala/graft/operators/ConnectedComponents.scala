@@ -156,7 +156,7 @@ object ConnectedComponents {
           val solved = localSolve(canon.as[(Long, Long)].collect())
           return spark.createDataset(
             spark.sparkContext.parallelize(solved.toIndexedSeq,
-              math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt / 4)))
+              math.max(1, Spread.shufflePartitions(spark) / 4)))
             .toDF("id", "component")
         }
       }

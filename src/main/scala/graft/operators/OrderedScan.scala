@@ -75,9 +75,6 @@ object OrderedScan {
       (1 until nPart).map(_.toDouble / nPart).toArray, 0.001).distinct.sorted
   }
 
-  private def shufflePartitions(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
   /**
    * Cumulative sums over a global ordering, fully distributed.
    *
@@ -105,7 +102,7 @@ object OrderedScan {
    */
   def cumSumsBy(df: DataFrame, partCols: Seq[String], orderCol: String,
       sums: Seq[(String, String)]): DataFrame = {
-    val bounds = rangeBounds(df, orderCol, shufflePartitions(df))
+    val bounds = rangeBounds(df, orderCol, Spread.shufflePartitions(df.sparkSession))
     val bucketed = df.withColumn("__bk", bucketCol(orderCol, bounds))
     val keyCols = partCols :+ "__bk"
 
@@ -152,7 +149,7 @@ object OrderedScan {
    * wraparound target is the global minimum — both <= buckets-row frames.
    */
   def cyclicLead(df: DataFrame, orderCol: String, outCol: String): DataFrame = {
-    val bounds = rangeBounds(df, orderCol, shufflePartitions(df))
+    val bounds = rangeBounds(df, orderCol, Spread.shufflePartitions(df.sparkSession))
     val bucketed = df.withColumn("__bk", bucketCol(orderCol, bounds))
 
     val w = Window.partitionBy("__bk").orderBy(col(orderCol))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /**
  * Explicit-count keyed repartition for CPU-heavy reduce stages (guide §2).
@@ -28,11 +28,13 @@ import org.apache.spark.sql.{Column, DataFrame}
  */
 object Spread {
 
-  def partitions(df: DataFrame): Int = {
-    val s = df.sparkSession
-    math.max(s.sparkContext.defaultParallelism,
-      s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-  }
+  def partitions(df: DataFrame): Int =
+    math.max(df.sparkSession.sparkContext.defaultParallelism, shufflePartitions(df.sparkSession))
+
+  /** `spark.sql.shuffle.partitions` as the session resolves it: typed, with
+    * Spark's own default when unset. The one place the engine reads it. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
 
   /** Hash-repartition on the next aggregation's keys, explicit count. */
   def byKeys(df: DataFrame, cols: Column*): DataFrame =

@@ -22,7 +22,10 @@ object TextScores {
     * 2.9 s with the small idf branch as the build side; constant-key
     * equi-join attachment constant-folds back to the same nested loop).
     * The count itself is one column-pruned pass, far cheaper than the
-    * mis-planned join it avoids. */
+    * mis-planned join it avoids.
+    *
+    * @note Eager: building the plan runs one driver job (`docs.count()`),
+    *       before the returned frame is ever executed. */
   def idfTable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val n = docs.count()
     // Spread.byKeys: the df reduce is vocabulary-cardinality — partial agg
@@ -172,6 +175,8 @@ object TextScores {
    *
    * @return (query_id, item_id, score) — raw double; round before ranking
    *         (the q63 tie-determinism contract)
+   * @note Eager: building the plan runs one driver job (the corpus stats
+   *       `.head()`), before the returned frame is ever executed.
    */
   def bm25IndexScores(corpus: DataFrame, queries: DataFrame, idCol: String,
       textCol: String, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -243,6 +248,8 @@ object TextScores {
    *
    * @return (query_id, item_id, tfidf_score, bm25_score) — raw doubles;
    *         round before ranking (the q63 tie-determinism contract)
+   * @note Eager: building the plan runs one driver job (the corpus stats
+   *       `.head()`), before the returned frame is ever executed.
    */
   def tfidfBm25IndexScores(corpus: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, k1: Double = 1.2,

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.synth.ImageGen
-import org.apache.spark.sql.SparkSession
 
 /** Generate a bench input table: `runMain graft.tools.GenInput <bases> <dir> [light]`. */
 object GenInput {
@@ -9,11 +8,7 @@ object GenInput {
     val bases = args(0).toLong
     val dir = args(1)
     val light = args.length < 3 || args(2) == "light"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchExtra.session()
     val t0 = System.nanoTime()
     ImageGen.generate(spark, bases, 42L, light = light)
       .write.mode("overwrite").parquet(dir)

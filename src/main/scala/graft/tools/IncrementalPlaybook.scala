@@ -4,7 +4,7 @@ import graft.config.DedupConfig
 import graft.operators.VerifyStage
 import graft.pipeline.DedupPipeline
 import graft.synth.ImageGen
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -37,7 +37,7 @@ object IncrementalPlaybook {
     val bases = if (args.length > 0) args(0).toLong else 20000L
     val work = if (args.length > 1) args(1) else "/tmp/graft_inc_playbook"
     val light = args.length > 2 && args(2) == "light"
-    val spark = QueryDiag.session(32)
+    val spark = BenchExtra.session()
     import spark.implicits._
 
     val corpusDir = s"$work/corpus"

@@ -10,29 +10,30 @@ import scala.io.Source
  *
  * {{{
  * runMain graft.tools.MoverDiag <prev_bench.json> <curr_bench.json> \
- *   [sfDir] [factor=2.0] [cpus=32] [reps=3]
+ *   [sfDir] [factor=2.0] [cpus=<host cores>] [reps=3]
  * }}}
  *
  * A query is a mover when curr/prev >= factor or <= 1/factor (both
  * directions: an unexplained speed-up is usually the previous round's steal
  * window, worth recording too). Output is a markdown table ready for
- * BENCH.md. Wall verdicts: a mover whose warm task-cpu is within 1.5x of
- * its warm wall did real work (plan cost — investigate); warm wall far
- * above cpu, or a diag wall far below the bench wall, points at steal.
+ * BENCH.md; each mover is re-run with [[BenchExtra.run]] and its fastest
+ * pass reported. Wall verdicts: a mover whose task-cpu is within 1.5x of
+ * its wall did real work (plan cost — investigate); wall far above cpu, or
+ * a diag wall far below the bench wall, points at steal.
  */
 object MoverDiag {
 
   /** Extracts the per-query seconds map from a bench JSON line/file — the
     * `"queries":{"qNN_name":secs,...}` object. Regex-scoped to the queries
     * block so metric/sf fields cannot leak in. */
-  private[tools] def queryTimes(json: String): Map[String, Double] = {
+  def queryTimes(json: String): Map[String, Double] = {
     val block = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r
       .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
     "\"(q[0-9A-Za-z_]+)\"\\s*:\\s*([0-9.Ee+-]+)".r.findAllMatchIn(block)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
-  private[tools] def movers(prev: Map[String, Double], curr: Map[String, Double],
+  def movers(prev: Map[String, Double], curr: Map[String, Double],
       factor: Double): Seq[(String, Double, Double, Double)] =
     (prev.keySet intersect curr.keySet).toSeq.flatMap { q =>
       val (p, c) = (prev(q), curr(q))
@@ -48,7 +49,7 @@ object MoverDiag {
     val curr = queryTimes(slurp(args(1)))
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val factor = if (args.length > 3) args(3).toDouble else 2.0
-    val cpus = if (args.length > 4) args(4).toInt else 32
+    val cpus = if (args.length > 4) args(4).toInt else Runtime.getRuntime.availableProcessors
     val reps = if (args.length > 5) args(5).toInt else 3
     val m = movers(prev, curr, factor)
     if (m.isEmpty) {
@@ -56,13 +57,15 @@ object MoverDiag {
       return
     }
     println(s"MOVERS (factor $factor): ${m.map(_._1).mkString(", ")}")
-    val spark = QueryDiag.session(cpus)
-    println("| query | prev wall | curr wall | ratio | diag warm wall | diag warm cpu |")
-    println("|---|---|---|---|---|---|")
-    for ((q, p, c, r) <- m) {
-      val (wall, cpu) = QueryDiag.measure(spark, q, sfDir, reps, verbose = false)
-      println(f"| $q | $p%.2f s | $c%.2f s | $r%.2fx | $wall%.2f s | $cpu%.2f s |")
+    val spark = BenchExtra.session(cpus)
+    val rows = for ((q, p, c, r) <- m) yield {
+      val best = BenchExtra.run(spark, q, sfDir, reps).minByOption(_.wallS)
+      val (wall, cpu) = best.fold((-1.0, -1.0))(b => (b.wallS, b.total.cpuS))
+      f"| $q | $p%.2f s | $c%.2f s | $r%.2fx | $wall%.2f s | $cpu%.2f s |"
     }
     spark.stop()
+    println("| query | prev wall | curr wall | ratio | diag wall | diag cpu |")
+    println("|---|---|---|---|---|---|")
+    rows.foreach(println)
   }
 }

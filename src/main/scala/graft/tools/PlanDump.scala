@@ -2,39 +2,36 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Write the `explain("formatted")` plan of SparkEntry queries to files —
+/** Write the `explain("formatted")` plans of SparkEntry queries to files —
   * the round-6 plan-evidence artifacts (plans/r06/<query>_<tag>.txt):
-  * `runMain graft.tools.PlanDump <q1,q2,...> <tag> [outDir] [sfDir] [cpus]`.
-  * Uses the bench session shape (local[cpus], shuffle.partitions=cpus,
-  * AQE on) so the dumped initial plan matches what the bench executes. */
+  * `runMain graft.tools.PlanDump <q1,q2,...> <tag> [outDir] [sfDir] [cpus] [k=v ...]`.
+  * Runs on the bench session shape ([[BenchExtra.session]]) plus any `k=v`
+  * confs. It then executes the query's OWN QueryExecution (a noop write
+  * would plan a separate one) and writes the FINAL adaptive plan to
+  * <query>_<tag>_final.txt: the AQEShuffleRead coalescing, runtime join
+  * rewrites and ReusedExchange the initial plan hides. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <q1,q2,...|all> <tag> [outDir] [sfDir] [cpus]")
-    val names =
-      if (args(0) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
-      else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(args.length >= 2,
+      "usage: PlanDump <q1,q2,...|all> <tag> [outDir] [sfDir] [cpus] [k=v ...]")
+    val names = BenchExtra.queryNames(args(0))
     val tag = args(1)
     val outDir = if (args.length > 2) args(2) else "plans/r06"
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 4) args(4).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = if (args.length > 4) args(4).toInt else Runtime.getRuntime.availableProcessors
+    val spark = BenchExtra.session(cpus, BenchExtra.confs(args.drop(5).toSeq))
     Files.createDirectories(Paths.get(outDir))
+    def dump(file: String, plan: String): Unit = {
+      Files.writeString(Paths.get(outDir, file), plan)
+      println(s"[plan-dump] $outDir/$file (${plan.length} chars)")
+    }
     names.foreach { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        ExplainMode.fromString("formatted"))
-      Files.writeString(Paths.get(outDir, s"${n}_$tag.txt"), plan)
-      println(s"[plan-dump] $outDir/${n}_$tag.txt (${plan.length} chars)")
+      val qe = graft.SparkEntry.queries(n)(spark, sfDir).queryExecution
+      dump(s"${n}_$tag.txt", qe.explainString(ExplainMode.fromString("formatted")))
+      qe.toRdd.count()
+      dump(s"${n}_${tag}_final.txt", qe.explainString(ExplainMode.fromString("formatted")))
     }
     spark.stop()
   }

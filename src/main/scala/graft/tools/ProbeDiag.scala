@@ -1,47 +1,46 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.config.DedupConfig
+import graft.io.TableIO
+import graft.obs.StageMetrics
+import graft.operators.{Ingest, Validate}
+import graft.pipeline.DedupPipeline
 
-/** Stage-wall diagnosis of the probe job (fused ingest + dedup), with the
-  * full metric split — cpu / run / deserialize / gc / shuffle fetch wait /
-  * shuffle write / result serialization — so scheduler-concurrency artifacts
-  * (parallel stage submission sharing the core pool inflates per-stage wall)
-  * are distinguishable from real engine waste.
+/** Profile of the DAG `Bench`'s scaling probe times: Ingest (decode-validate
+  * + features, cached) materialized by `Validate.report`, then
+  * `DedupPipeline.runFromFeatures` to assignments. Each round prints, per
+  * half, the [[StageMetrics]] job and stage rows and totals; per-stage CPU
+  * next to wall separates scheduler-concurrency artifacts (parallel stages
+  * sharing the core pool) from real engine waste.
   * `runMain graft.tools.ProbeDiag <cpus> <inputDir> [rounds=2]`. */
 object ProbeDiag {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: ProbeDiag <cpus> <inputDir> [rounds]")
     val cpus = args(0).toInt
     val inputDir = args(1)
     val rounds = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val wall = (for (s <- i.submissionTime; e <- i.completionTime)
-          yield (e - s) / 1000.0).getOrElse(-1.0)
-        val m = i.taskMetrics
-        if (wall > 0.3)
-          println(f"[stage] id=${i.stageId}%4d tasks=${i.numTasks}%4d wall=$wall%6.2f s " +
-            f"cpu=${m.executorCpuTime / 1e9}%7.1f run=${m.executorRunTime / 1000.0}%7.1f " +
-            f"deser=${m.executorDeserializeTime / 1000.0}%5.1f " +
-            f"gc=${m.jvmGCTime / 1000.0}%5.1f " +
-            f"fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1000.0}%5.1f " +
-            f"shWrite=${m.shuffleWriteMetrics.writeTime / 1e9}%5.1f " +
-            f"resSer=${m.resultSerializationTime / 1000.0}%5.1f " +
-            f"${i.name.take(50)}")
-      }
-    })
+    // Bench's probe session: the same data-sized partition count on every
+    // leg, AQE off, 512m scan splits
+    val spark = BenchExtra.session(cpus, Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.files.maxPartitionBytes" -> "512m"))
+    val cfg = DedupConfig.default
     for (r <- 1 to rounds) {
-      val t0 = System.nanoTime()
-      val (tv, td) = ProbeBench.runPipeline(spark, inputDir)
-      println(f"[round $r] ingest=$tv%.2f dedup=$td%.2f total=${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val (feat, ingest) = StageMetrics.measure(spark) {
+        val feat = Ingest.run(spark, TableIO.readLocation(spark, inputDir), cfg,
+          partitions = 32)
+        BenchExtra.materialize(Validate.report(feat))
+        feat
+      }
+      val (_, dedup) = StageMetrics.measure(spark) {
+        BenchExtra.materialize(DedupPipeline.runFromFeatures(spark, feat, cfg).assignments)
+      }
+      feat.unpersist()
+      for ((half, report) <- Seq("ingest" -> ingest, "dedup" -> dedup)) {
+        report.breakdown().foreach(println)
+        println(s"[round $r] $half ${report.summary}")
+      }
     }
     spark.stop()
   }

@@ -34,7 +34,7 @@ object StreamPlaybook {
     val bases = if (args.length > 0) args(0).toLong else 20000L
     val work = if (args.length > 1) args(1) else "/tmp/graft_stream_playbook"
     val light = args.length > 2 && args(2) == "light"
-    val spark = QueryDiag.session(32)
+    val spark = BenchExtra.session()
 
     val watched = s"$work/watched"
     val out = s"$work/out"

@@ -1,10 +1,12 @@
 /*
  * Lives under org.apache.spark.sql solely to reach the private[sql]
  * Expression <-> Column conversion (org.apache.spark.sql.classic.ExpressionUtils),
- * the supported pattern for third-party Catalyst expressions on Spark 4.
+ * the supported pattern for third-party Catalyst expressions on Spark 4, and
+ * the private[spark] listener bus.
  */
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
@@ -22,4 +24,8 @@ object Bridge {
     * during SQL function resolution). */
   def resolvedExpression(c: Column): Expression =
     ColumnNodeToExpressionConverter(c.node)
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (the bus is private[spark]). */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -137,4 +137,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     val relabeled = inc.relabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(relabeled == Map(5L -> 1L, 10L -> 1L))
   }
+
+  test("unset shuffle.partitions: Spread and the local solve derive from one value") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.unset(key)
+    try {
+      val n = spark.sessionState.conf.numShufflePartitions
+      val edges = spark.createDataset(Seq((1L, 2L), (2L, 3L))).toDF("src", "dst")
+      assert(Spread.partitions(edges) ==
+        math.max(spark.sparkContext.defaultParallelism, n))
+      val solved = ConnectedComponents.run(edges)
+      assert(solved.rdd.getNumPartitions == math.max(1, n / 4))
+    } finally spark.conf.set(key, saved)
+  }
 }

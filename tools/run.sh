@@ -1,7 +1,10 @@
 #!/bin/bash
 # Launch a graft main class directly on the compiled classes + Spark jars
 # (skips sbt JVM startup). Usage: tools/run.sh <mainClass> [args...]
+# Heap: SPARK_DRIVER_MEM, else half of RAM clamped to 2-8g.
 MAIN=$1; shift
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -17,6 +20,6 @@ exec java \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-48g} \
+  -Xmx$MEM \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
