@@ -50,12 +50,12 @@ object StageMetrics {
         s"jobs=${jobs.size} stages=${stages.size} tasks=${t.tasks}"
     }
 
-    /** One line per job and per stage whose wall is at least `minWallS`;
+    /** One line per job and per stage whose wall is at least 0.1 s;
       * [[summary]] covers the rest. */
-    def breakdown(minWallS: Double = 0.1): Seq[String] =
-      jobs.filter(_.wallS >= minWallS).map(j =>
+    def breakdown: Seq[String] =
+      jobs.filter(_.wallS >= BreakdownMinWallS).map(j =>
         f"[job]   id=${j.id}%4d wall=${j.wallS}%6.2f s stages=${j.stages}%3d ${j.name}") ++
-      stages.filter(_.wallS >= minWallS).map { s =>
+      stages.filter(_.wallS >= BreakdownMinWallS).map { s =>
         val c = s.cost
         f"[stage] id=${s.id}%4d wall=${s.wallS}%6.2f s tasks=${c.tasks}%4d " +
           f"cpu=${c.cpuS}%7.2f run=${c.runS}%7.2f gc=${c.gcS}%5.2f " +
@@ -64,6 +64,7 @@ object StageMetrics {
       }
   }
 
+  private val BreakdownMinWallS = 0.1
   private val ScopeKey = "graft.obs.scope"
   private val scopes = new AtomicLong()
 

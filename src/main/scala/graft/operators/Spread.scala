@@ -31,10 +31,11 @@ object Spread {
   def partitions(df: DataFrame): Int =
     math.max(df.sparkSession.sparkContext.defaultParallelism, shufflePartitions(df.sparkSession))
 
-  /** `spark.sql.shuffle.partitions` as the session resolves it: typed, with
-    * Spark's own default when unset. The one place the engine reads it. */
+  /** `spark.sql.shuffle.partitions`, typed, with Spark's default when unset;
+    * the one place the engine reads it. (`numShufflePartitions` would return
+    * AQE's `coalescePartitions.initialPartitionNum` instead when that is set.) */
   def shufflePartitions(spark: SparkSession): Int =
-    spark.sessionState.conf.numShufflePartitions
+    spark.sessionState.conf.defaultNumShufflePartitions
 
   /** Hash-repartition on the next aggregation's keys, explicit count. */
   def byKeys(df: DataFrame, cols: Column*): DataFrame =

@@ -39,9 +39,8 @@ object BenchExtra {
     val names = queryNames(args(0))
     val spark = session(cpus, confs(args.drop(4).toSeq))
 
-    val smallDir = "/root/testdata/sf0.001"
     names.foreach { n =>
-      try materialize(graft.SparkEntry.queries(n)(spark, smallDir))
+      try materialize(graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
       catch { case _: Throwable => () }
     }
     val clearCache = sys.env.get("BENCH_EXTRA_CLEAR_CACHE").contains("1")
@@ -113,7 +112,7 @@ object BenchExtra {
         val (_, r) = StageMetrics.measure(spark)(materialize(query(spark, sfDir)))
         println(f"[bench-extra] $name pass $p: wall=${r.wallS}%.3f s " +
           f"cpu=${r.total.cpuS}%.2f s jobs=${r.jobs.size}")
-        if (p == passes) r.breakdown().foreach(println)
+        if (p == passes) r.breakdown.foreach(println)
         Some(r)
       } catch { case e: Throwable =>
         System.err.println(s"[bench-extra] $name failed: ${e.getMessage}"); None }

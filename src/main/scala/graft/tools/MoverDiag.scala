@@ -16,10 +16,10 @@ import scala.io.Source
  * A query is a mover when curr/prev >= factor or <= 1/factor (both
  * directions: an unexplained speed-up is usually the previous round's steal
  * window, worth recording too). Output is a markdown table ready for
- * BENCH.md; each mover is re-run with [[BenchExtra.run]] and its fastest
- * pass reported. Wall verdicts: a mover whose task-cpu is within 1.5x of
- * its wall did real work (plan cost — investigate); wall far above cpu, or
- * a diag wall far below the bench wall, points at steal.
+ * BENCH.md; each mover is re-run with [[BenchExtra.run]] and its warm
+ * (last) pass reported. Wall verdicts: a mover whose warm task-cpu is within
+ * 1.5x of its warm wall did real work (plan cost — investigate); warm wall
+ * far above cpu, or a diag wall far below the bench wall, points at steal.
  */
 object MoverDiag {
 
@@ -59,12 +59,12 @@ object MoverDiag {
     println(s"MOVERS (factor $factor): ${m.map(_._1).mkString(", ")}")
     val spark = BenchExtra.session(cpus)
     val rows = for ((q, p, c, r) <- m) yield {
-      val best = BenchExtra.run(spark, q, sfDir, reps).minByOption(_.wallS)
-      val (wall, cpu) = best.fold((-1.0, -1.0))(b => (b.wallS, b.total.cpuS))
+      val warm = BenchExtra.run(spark, q, sfDir, reps).lastOption
+      val (wall, cpu) = warm.fold((-1.0, -1.0))(w => (w.wallS, w.total.cpuS))
       f"| $q | $p%.2f s | $c%.2f s | $r%.2fx | $wall%.2f s | $cpu%.2f s |"
     }
     spark.stop()
-    println("| query | prev wall | curr wall | ratio | diag wall | diag cpu |")
+    println("| query | prev wall | curr wall | ratio | diag warm wall | diag warm cpu |")
     println("|---|---|---|---|---|---|")
     rows.foreach(println)
   }

@@ -38,7 +38,7 @@ object ProbeDiag {
       }
       feat.unpersist()
       for ((half, report) <- Seq("ingest" -> ingest, "dedup" -> dedup)) {
-        report.breakdown().foreach(println)
+        report.breakdown.foreach(println)
         println(s"[round $r] $half ${report.summary}")
       }
     }

@@ -143,12 +143,20 @@ class ConnectedComponentsSpec extends SparkSpec {
     val saved = spark.conf.get(key)
     spark.conf.unset(key)
     try {
-      val n = spark.sessionState.conf.numShufflePartitions
+      val n = spark.sessionState.conf.defaultNumShufflePartitions
       val edges = spark.createDataset(Seq((1L, 2L), (2L, 3L))).toDF("src", "dst")
       assert(Spread.partitions(edges) ==
         math.max(spark.sparkContext.defaultParallelism, n))
       val solved = ConnectedComponents.run(edges)
       assert(solved.rdd.getNumPartitions == math.max(1, n / 4))
     } finally spark.conf.set(key, saved)
+  }
+
+  test("shuffle partitions ignore AQE's initialPartitionNum") {
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    spark.conf.set(key, "7")
+    try assert(Spread.shufflePartitions(spark) ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    finally spark.conf.unset(key)
   }
 }
