@@ -3,9 +3,8 @@ package graft
 import graft.config.DedupConfig
 import graft.io.{CheckpointStore, TableIO}
 import graft.operators.{Ingest, Spread, Validate}
-import graft.pipeline.DedupPipeline
+import graft.pipeline.{CorpusState, DedupPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /**
  * Production entrypoint — the `spark-submit` surface of the north rule
@@ -204,26 +203,16 @@ object Main {
     * `relabels` (the touched clusters whose display label moved; apply with
     * [[DedupPipeline.applyClusterRelabels]] or a catalog MERGE INTO).
     *
-    * `corpusFeatures = Some(root)` persists corpus featurization across
-    * incremental runs — the 100 TB daily-ingest shape (the reference's
-    * incremental index insert, ea/sim/main/methods/index/faiss.py:40-51):
-    * the first run featurizes `--input` once and writes the feature rows as
-    * the `corpus_features` table under that root; every later run reads the
-    * table and NEVER touches `--input` (no payload decode, no re-hash — the
-    * corpus-side cost per run drops from a full featurization to a parquet
-    * scan of the signature columns). The first run also writes the corpus
-    * half of the candidate DAG as `corpus_buckets`, physically CLUSTERED BY
-    * the candidate key ([[TableIO.writeBucketed]]): later runs join the new
-    * batch against that bucketed scan with ZERO corpus-side shuffle
-    * ([[DedupPipeline.incrementalPairsFromState]]) — the per-run corpus
-    * cost is a co-located scan, not a re-explode + re-shuffle of ~25
-    * bucket keys per corpus row. The chunk-scheme inputs are frozen in
-    * `corpus_features_meta` (bucket_config + n_corpus) and validated every
-    * run, failing fast on drift exactly like the feature space. With
+    * `corpusFeatures = Some(root)` persists the corpus across incremental
+    * runs as a [[CorpusState]] — the 100 TB daily-ingest shape (the
+    * reference's incremental index insert, faiss.py:40-51): the first run
+    * featurizes `--input` once and writes the feature and bucketed
+    * candidate tables; every later run reads them and NEVER touches
+    * `--input`, joining the new batch against a bucketed scan with ZERO
+    * corpus-side shuffle, and fails fast on a config drift. With
     * `mergeNew = true` the new batch's feature AND bucket rows are upserted
-    * (MERGE INTO, keyed by image id / node id) into the tables after the
-    * evidence is written, so tomorrow's corpus includes today's accepted
-    * batch. */
+    * after the evidence is written, so tomorrow's corpus includes today's
+    * accepted batch. */
   def run(spark: SparkSession, input: String, output: String,
       cfg: DedupConfig, checkpoint: Option[String] = None,
       runId: String = "run", partitions: Int = 0,
@@ -249,124 +238,38 @@ object Main {
       case Some(newDir) =>
         val newFeat = Ingest.run(spark,
           TableIO.readLocation(spark, newDir), cfg, partitions = parts)
-        val featIo = corpusFeatures.map(TableIO.resolve(spark, _))
-        // (frozen corpus count, bucket count) of the persisted bucketed
-        // corpus_buckets table, when the state root carries one
-        var bucketState: Option[(Long, Int)] = None
-        val corpusFeat = featIo match {
-          case Some(io) if io.exists("corpus_features") =>
-            // later runs: the persisted table IS the corpus — `input` is
-            // not read at all (MainSpec proves it with a bogus input path).
-            // Fail fast if this run's feature config differs from the one
-            // the table was built with: joining across signature spaces
-            // (other bands/seed/mirrorDups) silently loses every pair.
-            if (io.exists("corpus_features_meta")) {
-              val meta = io.read("corpus_features_meta")
-              val stored = meta.select("feature_config").head().getString(0)
-              require(stored == cfg.featureConfigId,
-                s"persisted corpus_features were built with [$stored] but " +
-                  s"this run uses [${cfg.featureConfigId}] — re-featurize " +
-                  "the corpus or restore the original --set values")
-              // bucketed corpus state (state roots written before the
-              // bucketed layout existed just lack the columns and fall back
-              // to the in-memory corpus-side DAG)
-              if (meta.columns.contains("bucket_config") &&
-                  io.exists("corpus_buckets")) {
-                val r = meta
-                  .select("bucket_config", "n_corpus", "bucket_count").head()
-                require(r.getString(0) == cfg.bucketConfigId,
-                  s"persisted corpus_buckets were keyed with [${r.getString(0)}]" +
-                    s" but this run uses [${cfg.bucketConfigId}] — rebuild " +
-                    "the corpus state or restore the original --set values")
-                bucketState = Some((r.getLong(1), r.getInt(2)))
-              }
-            }
-            io.read("corpus_features")
-          case other =>
-            val f = Ingest.run(spark, TableIO.readLocation(spark, input),
-              cfg, partitions = parts)
-            other match {
-              case Some(io) =>
-                io.write(f, "corpus_features")
-                f.unpersist()
-                // downstream consumers scan the written parquet instead of
-                // holding the Ingest plan + cache
-                val feats = io.read("corpus_features")
-                // corpus half of the incremental DAG, bucketed by candidate
-                // key: every later daily run joins against this scan with
-                // ZERO corpus-side shuffle (TableIO.writeBucketed). The
-                // chunk scheme freezes at this count — recorded in the meta,
-                // validated on every read.
-                val n = feats.count()
-                io.writeBucketed(DedupPipeline.corpusStateRows(feats, n, cfg),
-                  "corpus_buckets", "key", parts)
-                io.write(spark.range(1).select(
-                  org.apache.spark.sql.functions.lit(cfg.featureConfigId)
-                    .as("feature_config"),
-                  org.apache.spark.sql.functions.lit(cfg.bucketConfigId)
-                    .as("bucket_config"),
-                  org.apache.spark.sql.functions.lit(n).as("n_corpus"),
-                  org.apache.spark.sql.functions.lit(parts)
-                    .as("bucket_count")), "corpus_features_meta")
-                bucketState = Some((n, parts))
-                feats
-              case None => f
-            }
+        // the corpus featurized from --input: runs without a persisted state,
+        // and the first run of one
+        lazy val ingested = Ingest.run(spark,
+          TableIO.readLocation(spark, input), cfg, partitions = parts)
+        val state = corpusFeatures.map(TableIO.resolve(spark, _)).map { io =>
+          // later runs: the persisted state IS the corpus — `input` is not
+          // read at all (MainSpec proves it with a bogus input path)
+          if (CorpusState.exists(io)) CorpusState.open(spark, io, cfg, parts)
+          else try CorpusState.bootstrap(spark, io, ingested, cfg, parts)
+          finally ingested.unpersist()
         }
         outIo.write(Validate.report(newFeat), "validation")
-        def pairsDag(): DataFrame = (featIo, bucketState) match {
-          case (Some(io), Some((n, nb))) =>
-            DedupPipeline.incrementalPairsFromState(spark, newFeat,
-              corpusFeat, io.readBucketed("corpus_buckets", "key", nb), n,
-              cfg, store)
-          case _ =>
-            DedupPipeline.incrementalPairs(spark, newFeat, corpusFeat, cfg,
-              store)
+        def pairsDag(): DataFrame = state match {
+          case Some(s) => s.pairs(spark, newFeat, cfg, store)
+          case None =>
+            DedupPipeline.incrementalPairs(spark, newFeat, ingested, cfg, store)
         }
-        val pairs = store match {
-          case Some(s) => s.stage("incremental_pairs")(pairsDag())
-          case None => pairsDag()
-        }
-        outIo.write(pairs, "incremental_pairs")
-        // clustering leg: fold the evidence into the existing assignment
-        // table (delta CC — the corpus is touched by two broadcast-semi
-        // scans, never re-clustered). Within-batch dups come from the batch
-        // DAG over the batch alone, so two new near-dup images land in one
-        // cluster even when neither matches the corpus. The fold consumes
-        // the WRITTEN evidence table — the candidate-join + verify DAG (the
-        // expensive half of the run) executes exactly once.
+        outIo.write(store.fold(pairsDag())(_.stage("incremental_pairs")(
+          pairsDag())), "incremental_pairs")
+        // clustering leg: the fold consumes the WRITTEN evidence table — the
+        // candidate-join + verify DAG (the expensive half of the run)
+        // executes exactly once
         assignments.foreach { loc =>
-          val corpusAssign = TableIO.readLocation(spark, loc)
-          val newPairs = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
-            .dupPairs.select("a", "b")
-          val res = DedupPipeline.incrementalAssignments(spark, corpusAssign,
-            outIo.read("incremental_pairs").select("a", "b"), newPairs,
-            newFeat.select(col("id").as("image_id")))
+          val res = CorpusState.fold(spark, TableIO.readLocation(spark, loc),
+            outIo.read("incremental_pairs"), newFeat, cfg)
           outIo.write(res.newAssignments, "new_assignments")
           outIo.write(res.relabels, "relabels")
         }
-        store.foreach(s => outIo.write(s.metrics(), "metrics"))
-        store.foreach(s => outIo.write(s.lineage(), "lineage"))
-        // merge-back AFTER the evidence is on disk: a failed run must not
-        // have half-joined the batch into the corpus. The bucketed state
-        // merges under the FROZEN scheme count (corpusStateRows doc) so
-        // tomorrow's run still joins one consistent key space; upsert (not
-        // append) so a re-crawled id's stale keys are replaced, mirroring
-        // the feature-table merge.
-        if (mergeNew)
-          featIo.foreach { io =>
-            io.upsert(newFeat, "corpus_features", Seq("id"))
-            bucketState.foreach { case (n, nb) =>
-              io.upsertBucketed(
-                DedupPipeline.corpusStateRows(newFeat, n, cfg),
-                "corpus_buckets", "key", nb, Seq("b"))
-            }
-          }
+        // merge-back AFTER the evidence is on disk
+        if (mergeNew) state.foreach(_.merge(newFeat, cfg))
         newFeat.unpersist()
-        // the no-persistence-root path returned Ingest.run's cached frame
-        // directly — release it (Ingest documents the caller owns the
-        // lifecycle; the Some(io) paths already swapped to the written table)
-        if (featIo.isEmpty) corpusFeat.unpersist()
+        if (state.isEmpty) ingested.unpersist()
       case None =>
         val feat = Ingest.run(spark, TableIO.readLocation(spark, input), cfg,
           partitions = parts)
@@ -374,9 +277,11 @@ object Main {
         outIo.write(Validate.report(feat), "validation")
         outIo.write(result.assignments, "assignments")
         outIo.write(result.dupPairs, "dup_pairs")
-        store.foreach(s => outIo.write(s.metrics(), "metrics"))
-        store.foreach(s => outIo.write(s.lineage(), "lineage"))
         feat.unpersist()
+    }
+    store.foreach { s =>
+      outIo.write(s.metrics(), "metrics")
+      outIo.write(s.lineage(), "lineage")
     }
   }
 }

@@ -266,10 +266,8 @@ object DedupPipeline {
    * two distinct nodes; a (x, x) output pair means "the new crawl of x
    * still near-matches the corpus's x".
    *
-   * The daily-ingest shape at 100 TB: the corpus-side feature rows are
-   * precomputed and persisted across runs (see [[graft.Main]]
-   * `--corpus-features`); only the new batch is featurized per run — the
-   * reference's incremental index insert (faiss.py:40-51).
+   * The daily-ingest shape at 100 TB persists the corpus side across runs
+   * ([[CorpusState]]); only the new batch is featurized per run.
    *
    * @param newFeat    [[features]]/[[graft.operators.Ingest.run]] frame of
    *                   the new batch
@@ -329,7 +327,7 @@ object DedupPipeline {
    *
    * `frozenCorpusCount` sizes the SimHash chunk scheme and MUST be the value
    * the state was first built with, even after `--merge-new` grows the
-   * corpus ([[graft.Main]] stores it in `corpus_features_meta.n_corpus`):
+   * corpus ([[CorpusState]] freezes it in its meta as `n_corpus`):
    * the scheme only tunes key-space occupancy — the subset-key recall
    * guarantee holds for any consistent scheme — but BOTH sides must use the
    * same one, and the persisted corpus rows were keyed under it. Rebuild the

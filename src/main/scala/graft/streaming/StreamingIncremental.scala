@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.config.DedupConfig
 import graft.io.TableIO
-import graft.operators.Ingest
-import graft.pipeline.DedupPipeline
+import graft.operators.{Ingest, Spread}
+import graft.pipeline.{CorpusState, DedupPipeline}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -20,7 +20,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * [[StreamingDedup]] remain the low-latency in-stream filters; this is the
  * stateful corpus-building leg.
  *
- * State tables under `stateRoot` ([[TableIO]]): `corpus_features`,
+ * State tables under `stateRoot` ([[TableIO]]): the [[CorpusState]]
+ * tables `Main --corpus-features` uses (batch 0 bootstraps them, freezing
+ * the bucket config and corpus count exactly as Main's first run does),
  * `assignments`, and a `batch_<id>_done` marker per completed batch.
  * Evidence lands under `outRoot` as one overwrite-idempotent table per
  * micro-batch (`incremental_pairs_<id>`), so a replayed batch (streaming
@@ -33,16 +35,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * snapshot commits are the production answer (TableIO picks it up when the
  * catalog is present); the marker bounds the damage to one batch either way.
  *
- * Scale: identical to the daily-ingest analysis — the corpus is touched by
- * the bipartite evidence join (hot keys capped) and the two broadcast-semi
- * scans of the assignment fold; per-batch COMPUTE is O(batch). One honest
- * caveat on state WRITES: the parquet [[TableIO]] backend implements upsert
- * as anti-join + full rewrite-and-swap, so each micro-batch rewrites the
- * state tables — O(corpus) I/O per batch, acceptable at sandbox scale and
+ * Scale: the corpus side of each micro-batch is a bucketed scan — the new
+ * batch is exploded and shuffled onto the persisted `corpus_buckets`
+ * layout, never the corpus ([[CorpusState.pairs]]) — plus the two
+ * broadcast-semi scans of the assignment fold; per-batch COMPUTE is
+ * O(batch). One caveat on state WRITES: the parquet [[TableIO]] backend
+ * implements upsert as anti-join + full rewrite-and-swap, so each
+ * micro-batch rewrites the state tables — O(corpus) I/O per batch, fine
  * for daily cadence, not for minutes-level triggers on a 100 TB corpus.
- * The Iceberg backend's `MERGE INTO` rewrites only the touched data files
- * (and the new-assignment/feature rows are pure inserts), which is the
- * production path; the code is backend-agnostic through [[TableIO.resolve]].
+ * The Iceberg backend's `MERGE INTO` rewrites only the touched data files,
+ * which is the production path; the code is backend-agnostic through
+ * [[TableIO.resolve]].
  */
 object StreamingIncremental {
 
@@ -95,43 +98,28 @@ object StreamingIncremental {
       return
     }
 
-    val newFeat = Ingest.run(spark, batch, cfg)
+    val parts = Spread.shufflePartitions(spark)
+    val newFeat = Ingest.run(spark, batch, cfg, partitions = parts)
     try {
       // per-batch validation report — the same per-row invariant surface
       // the batch and incremental Main modes publish (decode + phash +
       // dims), one overwrite-idempotent table per micro-batch
       out.write(graft.operators.Validate.report(newFeat),
         s"validation_$batchId")
-      if (!state.exists("corpus_features")) {
+      if (!CorpusState.exists(state)) {
         val result = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
         out.write(result.dupPairs
           .select(col("a"), col("b"), col("jaccard"), col("hamming")),
           s"incremental_pairs_$batchId")
         state.write(result.assignments, "assignments")
-        state.write(newFeat, "corpus_features")
-        state.write(spark.range(1).select(lit(cfg.featureConfigId)
-          .as("feature_config")), "corpus_features_meta")
+        CorpusState.bootstrap(spark, state, newFeat, cfg, parts)
       } else {
-        // a config drift against the persisted feature space (other bands/
-        // seed/mirrorDups) would silently lose every cross pair — fail fast
-        if (state.exists("corpus_features_meta")) {
-          val stored = state.read("corpus_features_meta")
-            .select("feature_config").head().getString(0)
-          require(stored == cfg.featureConfigId,
-            s"stream state was built with [$stored] but this run uses " +
-              s"[${cfg.featureConfigId}] — keep the config stable or " +
-              "rebootstrap the state")
-        }
-        val corpusFeat = state.read("corpus_features")
-        val cross = DedupPipeline.incrementalPairs(spark, newFeat, corpusFeat, cfg)
-        out.write(cross, s"incremental_pairs_$batchId")
+        val corpus = CorpusState.open(spark, state, cfg, parts)
+        out.write(corpus.pairs(spark, newFeat, cfg),
+          s"incremental_pairs_$batchId")
         // the fold consumes the WRITTEN table — the evidence join runs once
-        val crossSaved = out.read(s"incremental_pairs_$batchId")
-        val within = DedupPipeline.runFromFeatures(spark, newFeat, cfg)
-          .dupPairs.select("a", "b")
-        val res = DedupPipeline.incrementalAssignments(spark,
-          state.read("assignments"), crossSaved.select("a", "b"), within,
-          newFeat.select(col("id").as("image_id")))
+        val res = CorpusState.fold(spark, state.read("assignments"),
+          out.read(s"incremental_pairs_$batchId"), newFeat, cfg)
         // only the touched corpus rows rewrite: semi-filter by the relabel
         // map, apply, and upsert together with the batch's new rows
         val touched = DedupPipeline.applyClusterRelabels(
@@ -141,7 +129,7 @@ object StreamingIncremental {
           res.relabels)
         state.upsert(touched.unionByName(res.newAssignments),
           "assignments", Seq("image_id"))
-        state.upsert(newFeat, "corpus_features", Seq("id"))
+        corpus.merge(newFeat, cfg)
       }
       state.write(spark.range(1).select(lit(batchId).as("batch_id")), marker)
     } finally newFeat.unpersist()

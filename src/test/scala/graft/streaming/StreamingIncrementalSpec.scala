@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.config.DedupConfig
+import graft.operators.Ingest
 import graft.pipeline.DedupPipeline
 import graft.model.ImageRow
 import graft.synth.ImageGen
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -79,6 +81,83 @@ class StreamingIncrementalSpec extends SparkSpec {
         cfg.copy(bands = 32, rowsPerBand = 4), 2L)
     }
     assert(drift.getMessage.contains("bands=32"))
+  }
+
+  /** Re-ingests of `b0` under fresh ids plus a foreign tranche. */
+  private def nextBatch(b0: DataFrame) =
+    b0.limit(4).withColumn("image_id", concat(lit("n_"), col("image_id")))
+      .unionByName(ImageGen.generate(spark, bases = 3, seed = 777L).toDF()
+        .withColumn("image_id", concat(lit("f_"), col("image_id"))))
+
+  private def sameRows(x: DataFrame, y: DataFrame): Boolean =
+    x.exceptAll(y).count() == 0 && y.exceptAll(x).count() == 0
+
+  test("stream bootstrap writes the bucketed state Main --corpus-features reads") {
+    val root = "/tmp/graft_sinc_shared"
+    rmrf(root)
+    val (state, nb, mainOut) = (s"$root/state", s"$root/new", s"$root/main")
+    val b0 = ImageGen.generate(spark, bases = 12, seed = 42L).toDF()
+    StreamingIncremental.processBatch(spark, b0, state, s"$root/out", cfg, 0L)
+    val buckets = spark.read.parquet(s"$state/corpus_buckets.parquet")
+    assert(buckets.count() > 0 && buckets.columns.toSet == Set("b", "key"))
+    val meta = spark.read.parquet(s"$state/corpus_features_meta.parquet").head()
+    assert(meta.getAs[Long]("n_corpus") == b0.count())
+    assert(meta.getAs[Int]("bucket_count") > 0)
+
+    // a daily Main run on the stream's root: the bucketed evidence path
+    // writes exactly the in-memory DAG's pairs
+    nextBatch(b0).write.mode("overwrite").parquet(nb)
+    graft.Main.run(spark, "/nonexistent/never_read", mainOut, cfg,
+      partitions = 4, incremental = Some(nb), corpusFeatures = Some(state))
+    val got = spark.read.parquet(s"$mainOut/incremental_pairs.parquet")
+    val newFeat = Ingest.run(spark, spark.read.parquet(nb), cfg)
+    val want = DedupPipeline.incrementalPairs(spark, newFeat,
+      spark.read.parquet(s"$state/corpus_features.parquet"), cfg)
+    assert(got.count() > 0)
+    assert(sameRows(got, want))
+    newFeat.unpersist()
+  }
+
+  test("a stream root without bucket columns is upgraded on the next batch") {
+    val root = "/tmp/graft_sinc_legacy"
+    rmrf(root)
+    val (state, out) = (s"$root/state", s"$root/out")
+    val b0 = ImageGen.generate(spark, bases = 12, seed = 42L).toDF()
+    val b1 = nextBatch(b0)
+    // the layout earlier stream bootstraps wrote: features, assignments and
+    // a feature_config-only meta row
+    val feat0 = Ingest.run(spark, b0, cfg)
+    feat0.write.parquet(s"$state/corpus_features.parquet")
+    DedupPipeline.runFromFeatures(spark, feat0, cfg).assignments
+      .write.parquet(s"$state/assignments.parquet")
+    spark.range(1).select(lit(cfg.featureConfigId).as("feature_config"))
+      .write.parquet(s"$state/corpus_features_meta.parquet")
+    feat0.unpersist()
+
+    StreamingIncremental.processBatch(spark, b1, state, out, cfg, 1L)
+    val buckets = spark.read.parquet(s"$state/corpus_buckets.parquet")
+    assert(buckets.count() > 0 && buckets.columns.toSet == Set("b", "key"))
+    val meta = spark.read.parquet(s"$state/corpus_features_meta.parquet").head()
+    assert(meta.getAs[String]("bucket_config") == cfg.bucketConfigId)
+    assert(meta.getAs[Long]("n_corpus") == b0.count())
+    assert(spark.read.parquet(s"$state/corpus_features.parquet").count() ==
+      b0.count() + b1.count())
+    val asg = spark.read.parquet(s"$state/assignments.parquet")
+    assert(sameRows(asg,
+      DedupPipeline.run(spark, b0.unionByName(b1), cfg).assignments))
+  }
+
+  test("a stream batch under a drifted bucket config fails fast") {
+    val root = "/tmp/graft_sinc_drift"
+    rmrf(root)
+    val (state, out) = (s"$root/state", s"$root/out")
+    val b0 = ImageGen.generate(spark, bases = 4, seed = 42L).toDF()
+    StreamingIncremental.processBatch(spark, b0, state, out, cfg, 0L)
+    val drift = intercept[IllegalArgumentException] {
+      StreamingIncremental.processBatch(spark, nextBatch(b0), state, out,
+        cfg.copy(hammingMax = 7), 1L)
+    }
+    assert(drift.getMessage.contains("hammingMax=7"), drift.getMessage)
   }
 
   test("end-to-end through a real stream (foreachBatch)") {
