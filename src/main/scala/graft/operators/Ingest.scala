@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.config.DedupConfig
 import graft.pipeline.DedupPipeline
-import graft.synth.ImageCodec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -36,35 +35,19 @@ object Ingest {
     StructField("caption", StringType),
     StructField("phash", LongType)))
 
-  /** Decode-validate every row, carrying the metadata columns the dedup
-    * features need. Rows with an empty payload (light synthetic inputs) are
-    * counted as skipped: decode_ok=false, other checks vacuously true. */
+  /** Decode-validate every row ([[Validate.rowCheck]]), carrying the
+    * metadata columns the dedup features need. */
   def validatedCarry(spark: SparkSession, images: DataFrame): DataFrame = {
     val enc = ExpressionEncoder(carrySchema)
     images
       .select(col("image_id"), col("bytes"), col("w"), col("h"),
         col("caption"), col("phash"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getString(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val (w, h) = (r.getInt(2), r.getInt(3))
-          val caption = r.getString(4)
-          val ph = r.getLong(5)
-          if (bytes == null || bytes.isEmpty)
-            Row(id, false, true, true, false, caption, ph)
-          else {
-            val img = try Option(ImageCodec.decode(bytes)) catch { case _: Throwable => None }
-            img match {
-              case Some(i) =>
-                val phOk = ImageCodec.averageHash(i) == ph
-                val dimOk = i.getWidth == w && i.getHeight == h
-                Row(id, true, phOk, dimOk, phOk && dimOk, caption, ph)
-              case None => Row(id, false, false, false, false, caption, ph)
-            }
-          }
-        }
-      }(enc).toDF()
+      .mapPartitions(_.map { r =>
+        val ph = r.getLong(5)
+        val flags = Validate.rowCheck(r.getAs[Array[Byte]](1), r.getInt(2),
+          r.getInt(3), ph)
+        Row.fromSeq((r.getString(0) +: flags) :+ r.getString(4) :+ ph)
+      })(enc).toDF()
   }
 
   /**

@@ -26,31 +26,32 @@ object Validate {
     StructField("dims_match", BooleanType),
     StructField("valid", BooleanType)))
 
-  /** @param images (image_id, bytes, w, h, fmt, phash). Rows with an empty
-    *               payload (light synthetic inputs) are counted as skipped:
-    *               decode_ok=false, other checks vacuously true. */
+  /** @param images (image_id, bytes, w, h, fmt, phash); each row gets the
+    *               flags of [[rowCheck]] */
   def perRow(spark: SparkSession, images: DataFrame): DataFrame = {
     val enc = ExpressionEncoder(schema)
     images.select(col("image_id"), col("bytes"), col("w"), col("h"), col("phash"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.getString(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val (w, h, ph) = (r.getInt(2), r.getInt(3), r.getLong(4))
-          if (bytes == null || bytes.isEmpty) Row(id, false, true, true, false)
-          else {
-            val img = try Option(ImageCodec.decode(bytes)) catch { case _: Throwable => None }
-            img match {
-              case Some(i) =>
-                val phOk = ImageCodec.averageHash(i) == ph
-                val dimOk = i.getWidth == w && i.getHeight == h
-                Row(id, true, phOk, dimOk, phOk && dimOk)
-              case None => Row(id, false, false, false, false)
-            }
-          }
-        }
-      }(enc).toDF()
+      .mapPartitions(_.map { r =>
+        Row.fromSeq(r.getString(0) +: rowCheck(r.getAs[Array[Byte]](1),
+          r.getInt(2), r.getInt(3), r.getLong(4)))
+      })(enc).toDF()
   }
+
+  /** The row check [[perRow]] and [[Ingest.validatedCarry]] share: decode,
+    * then phash and dims against the declared ones, as (decode_ok,
+    * phash_match, dims_match, valid). An empty payload (light synthetic
+    * inputs) counts as skipped: decode_ok=false, other checks vacuously
+    * true. */
+  private[operators] def rowCheck(bytes: Array[Byte], w: Int, h: Int,
+      ph: Long): Seq[Boolean] =
+    if (bytes == null || bytes.isEmpty) Seq(false, true, true, false)
+    else (try Option(ImageCodec.decode(bytes)) catch { case _: Throwable => None }) match {
+      case Some(i) =>
+        val phOk = ImageCodec.averageHash(i) == ph
+        val dimOk = i.getWidth == w && i.getHeight == h
+        Seq(true, phOk, dimOk, phOk && dimOk)
+      case None => Seq(false, false, false, false)
+    }
 
   /** Aggregate validation report (one row). */
   def report(validated: DataFrame): DataFrame =

@@ -55,9 +55,12 @@ object VerifyStage {
             .otherwise(lcs_length(col("txt_a"), col("txt_b"), cfg.lcsCap)))
       else joined.withColumn("lcs", lit(0))
 
+    // the caption leg needs text on both sides: two empty shingle sets
+    // score Jaccard 1.0 but share nothing
     withLcs
       .withColumn("is_dup",
-        col("jaccard") >= cfg.jaccardMin ||
+        (size(col("sh_a")) > 0 && size(col("sh_b")) > 0 &&
+          col("jaccard") >= cfg.jaccardMin) ||
         col("hamming") <= cfg.hammingMax ||
         (lit(cfg.lcsMin) > 0 && col("lcs") >= cfg.lcsMin))
       .select("a", "b", "jaccard", "hamming", "lcs", "is_dup")

@@ -96,13 +96,13 @@ object CorpusState {
         s"[$current] — $fix or restore the original --set values")
 
   /** The assignment fold Main and the stream share: cross evidence plus the
-    * batch DAG over `newFeat` alone (new near-dups merge even when neither
-    * matches the corpus) into [[DedupPipeline.incrementalAssignments]]. */
+    * batch DAG's evidence half over `newFeat` alone (new near-dups merge even
+    * when neither matches the corpus; it reads evidence, not clusters, so no
+    * batch CC runs) into [[DedupPipeline.incrementalAssignments]]. */
   def fold(spark: SparkSession, corpusAssign: DataFrame, crossPairs: DataFrame,
       newFeat: DataFrame, cfg: DedupConfig): IncrementalAssignments =
     DedupPipeline.incrementalAssignments(spark, corpusAssign,
       crossPairs.select("a", "b"),
-      DedupPipeline.runFromFeatures(spark, newFeat, cfg).dupPairs
-        .select("a", "b"),
+      DedupPipeline.evidence(newFeat, cfg).dupPairs.select("a", "b"),
       newFeat.select(col("id").as("image_id")))
 }

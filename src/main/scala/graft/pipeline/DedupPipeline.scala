@@ -24,11 +24,11 @@ import org.apache.spark.storage.StorageLevel
  * Scale design:
  *  - "Dedup before compute" (the reference's unique=True hash dedup,
  *    ea/sim/main/data/objects/issue.py:56-73): rows with an identical
- *    normalized caption collapse to one representative for the MinHash-LSH
- *    family, rows with an identical phash collapse for the SimHash family.
- *    Exact groups contribute O(m) star edges instead of m^2/2 pairs repeated
- *    across all 64 bands — this is what keeps hot boilerplate content from
- *    exploding the band self-join.
+ *    non-empty normalized caption collapse to one representative for the
+ *    MinHash-LSH family, rows with an identical phash for the SimHash
+ *    family. Exact groups contribute O(m) star edges instead of m^2/2 pairs
+ *    repeated across all 64 bands — this is what keeps hot boilerplate
+ *    content from exploding the band self-join.
  *  - Everything after feature extraction runs on dense LONG node ids
  *    (primitive UnsafeRows through every shuffle — string ids would be
  *    GC-heavy at 10^12 rows and collide as 64-bit hashes).
@@ -107,14 +107,40 @@ object DedupPipeline {
 
   /** Run from a pre-computed [[features]] frame (e.g. the fused
     * [[graft.operators.Ingest]] pass that validates payloads and extracts
-    * features in one scan). Persists the frame if the caller has not. */
+    * features in one scan). Persists the frame if the caller has not.
+    *
+    * Two halves: the lazy [[evidence]] (eager only in one count over the
+    * cached features and, with `checkpoint`, its staged stages), then the
+    * clustering, which runs connected components eagerly and labels them. */
   def runFromFeatures(spark: SparkSession, featuresDf: DataFrame, cfg: DedupConfig,
       checkpoint: Option[CheckpointStore] = None): DedupResult = {
+    val ev = evidence(featuresDf, cfg, checkpoint)
+    val feat = featuresDf // persisted in place by evidence()
 
-    val feat =
-      if (featuresDf.storageLevel == StorageLevel.NONE)
-        featuresDf.persist(StorageLevel.MEMORY_AND_DISK)
-      else featuresDf
+    // --- clustering ----------------------------------------------------------
+    val cc = ConnectedComponents.run(ev.edges)
+
+    val assigned = feat.select(col("id").as("image_id"), col("nid"))
+      .join(cc, feat("nid") === cc("id"), "left")
+      .select(col("image_id"), coalesce(col("component"), col("nid")).as("comp"))
+
+    // Deterministic cluster label: hash of the lexicographically smallest
+    // member id (content-derived, independent of nid assignment order).
+    val labels = assigned.groupBy("comp")
+      .agg(min("image_id").as("root_image"))
+      .select(col("comp"), xxhash64(col("root_image")).as("cluster_id"))
+    val assignments = assigned.join(labels, "comp")
+      .select("image_id", "cluster_id")
+
+    DedupResult(feat, ev.dupPairs, assignments)
+  }
+
+  /** The evidence half of the batch DAG, without clustering: what
+    * [[CorpusState.fold]] reads for a batch's within-batch pairs. */
+  private[pipeline] def evidence(feat: DataFrame, cfg: DedupConfig,
+      checkpoint: Option[CheckpointStore] = None): Evidence = {
+    if (feat.storageLevel == StorageLevel.NONE)
+      feat.persist(StorageLevel.MEMORY_AND_DISK)
 
     def staged(name: String)(df: => DataFrame): DataFrame =
       checkpoint.map(_.stage(name)(df)).getOrElse(df)
@@ -122,8 +148,10 @@ object DedupPipeline {
     // --- exact-identity collapse per family --------------------------------
     // mirrorDups: the image-identity family collapses on the orbit-canonical
     // phash, so a bit-exact mirrored re-upload is an exact-identity member
-    // (star edge + hamming-0 evidence), not even a candidate to verify
-    val (capStars, capReps) = collapse(feat, "content_hash")
+    // (star edge + hamming-0 evidence), not even a candidate to verify.
+    // Caption-less rows (null, or "" once normalized) share no text: skipped
+    val (capStars, capReps) =
+      collapse(feat.where(length(col("norm_text")) > 0), "content_hash")
     val (phStars, phReps) =
       collapse(feat, if (cfg.mirrorDups) "phash_key" else "phash")
 
@@ -131,42 +159,12 @@ object DedupPipeline {
     // feat is persisted above, so this count is one cheap pass over the
     // cache (and fills it); it upper-bounds the representative count and
     // sizes the simhash bucket-key scheme — small corpora keep the classic
-    // few-keys-per-row layout, large ones get the wide-key-space subsets
+    // few-keys-per-row layout, large ones get the wide-key-space subsets.
+    // Caption reps carry the band and anchor families: members of a
+    // collapsed group share the exact norm_text, so rep-level recall implies
+    // member-level recall through the star edges.
     val nFeat = feat.count()
-    val capBuckets = CandidateGen.explodeBands(
-      capReps.where(size(col("shingles")) > 0), "nid", "band_keys")
-    val chunkBuckets = {
-      val raw = CandidateGen.simhashChunkBuckets(
-        phReps, "nid", "simhash", cfg.hammingMax, nFeat)
-      // mirror-space chunk keys ride alongside the raw ones — a mirrored
-      // near-copy collides in the canonical space, an ordinary near-dup in
-      // the raw one; cross-space key collisions only add re-verified pairs
-      if (cfg.mirrorDups)
-        raw.union(CandidateGen.simhashChunkBuckets(
-          phReps, "nid", "simhash_m", cfg.hammingMax, nFeat))
-      else raw
-    }
-    // third candidate family (north-rule suffix-array substring pass,
-    // distributed as winnowed anchors): active with the LCS detector
-    // (DedupConfig requires anchorK < lcsMin whenever lcsMin > 0), it
-    // guarantees any rep pair sharing an exact run of >= lcsMin chars in
-    // norm_text reaches verify — without it the LCS rule only ever sees
-    // pairs that happened to collide in a MinHash band or SimHash chunk.
-    // The verify side reads at most cfg.lcsCap chars per text, so runs
-    // that only occur past the cap still drop there — size lcsCap to the
-    // corpus (the candidate side has no such limit: anchors cover the
-    // full text).
-    // Caption reps are the right carrier: members of a collapsed group share
-    // the exact norm_text, so rep-level recall implies member-level recall
-    // through the star edges. Cross-family key collisions (band vs chunk vs
-    // anchor longs) only add candidates the verify stage re-checks.
-    val buckets =
-      if (cfg.lcsMin > cfg.anchorK) {
-        val anchorBuckets = capReps.select(col("nid").as("id"),
-          explode(winnow_anchors(col("norm_text"), cfg.anchorK,
-            cfg.lcsMin - cfg.anchorK + 1, cfg.seed)).as("key"))
-        capBuckets.union(chunkBuckets).union(anchorBuckets)
-      } else capBuckets.union(chunkBuckets)
+    val buckets = candidateBuckets(capReps, phReps, nFeat, cfg)
     // checkpointed runs persist the bucket-occupancy profile (resumable like
     // any stage): the artifact an operator reads to re-judge maxBucketSize /
     // saltOversized for the NEXT run of a corpus whose skew just surprised
@@ -191,36 +189,16 @@ object DedupPipeline {
       saltOversized = cfg.saltOversized)
 
     // --- verify (full OR rule on every candidate) ---------------------------
-    val featByNid = feat.select(
-      (Seq(col("nid").as("id"), col("shingles"), col("simhash"),
-        col("norm_text")) ++
-        (if (cfg.mirrorDups) Seq(col("simhash_m")) else Nil)): _*)
     // not persisted: the CC loop localCheckpoints its canonical edge set
     // immediately, so the assignment path reads this exactly once; dupPairs
     // consumers that need it materialized pass a CheckpointStore (staged)
     val verified = staged("verified_pairs") {
-      VerifyStage.verify(candidates, featByNid, cfg).where(col("is_dup"))
+      VerifyStage.verify(candidates, verifyInput(feat, cfg), cfg)
+        .where(col("is_dup"))
     }
     // with a checkpoint, staged() has materialized verified_pairs to
     // storage, so nothing downstream can re-demand the bucket rows
     checkpoint.foreach(_ => bucketRows.unpersist())
-
-    // --- clustering ----------------------------------------------------------
-    val edges = verified.select(col("a").as("src"), col("b").as("dst"))
-      .union(capStars).union(phStars)
-    val cc = ConnectedComponents.run(edges)
-
-    val assigned = feat.select(col("id").as("image_id"), col("nid"))
-      .join(cc, feat("nid") === cc("id"), "left")
-      .select(col("image_id"), coalesce(col("component"), col("nid")).as("comp"))
-
-    // Deterministic cluster label: hash of the lexicographically smallest
-    // member id (content-derived, independent of nid assignment order).
-    val labels = assigned.groupBy("comp")
-      .agg(min("image_id").as("root_image"))
-      .select(col("comp"), xxhash64(col("root_image")).as("cluster_id"))
-    val assignments = assigned.join(labels, "comp")
-      .select("image_id", "cluster_id")
 
     // --- duplicate-pair evidence (representative level + exact stars) -------
     val nidToId = feat.select(col("nid"), col("id"))
@@ -236,21 +214,55 @@ object DedupPipeline {
       .union(back(phStars.withColumn("jaccard", lit(null).cast("double"))
         .withColumn("hamming", lit(0)), "src", "dst"))
 
-    DedupResult(feat, dupPairs, assignments)
+    Evidence(verified.select(col("a").as("src"), col("b").as("dst"))
+      .union(capStars).union(phStars), dupPairs)
   }
+
+  /** Candidate bucket rows `(id, key)` — the one list of candidate
+    * families, for the batch and the bipartite DAG alike: caption band keys
+    * of `bandSide`; SimHash chunk keys of `chunkSide` in the scheme sized by
+    * `n` (plus mirror-space keys under mirrorDups: a mirrored near-copy
+    * collides in the canonical space, an ordinary near-dup in the raw one);
+    * and, with the LCS detector (cfg.lcsMin > cfg.anchorK), winnowed anchors
+    * of `bandSide`'s norm_text (the north-rule suffix-array substring pass),
+    * so any pair sharing an exact run of >= lcsMin chars reaches verify, not
+    * only pairs that collide in a band or chunk. Verify reads at most
+    * cfg.lcsCap chars per text, so runs past the cap still drop there.
+    * Cross-family key collisions only add candidates verify re-checks. */
+  private def candidateBuckets(bandSide: DataFrame, chunkSide: DataFrame,
+      n: Long, cfg: DedupConfig): DataFrame = {
+    val bands = CandidateGen.explodeBands(
+      bandSide.where(size(col("shingles")) > 0), "nid", "band_keys")
+    val chunks = {
+      val raw = CandidateGen.simhashChunkBuckets(
+        chunkSide, "nid", "simhash", cfg.hammingMax, n)
+      if (cfg.mirrorDups)
+        raw.union(CandidateGen.simhashChunkBuckets(
+          chunkSide, "nid", "simhash_m", cfg.hammingMax, n))
+      else raw
+    }
+    if (cfg.lcsMin > cfg.anchorK)
+      bands.union(chunks).union(bandSide.select(col("nid").as("id"),
+        explode(winnow_anchors(col("norm_text"), cfg.anchorK,
+          cfg.lcsMin - cfg.anchorK + 1, cfg.seed)).as("key")))
+    else bands.union(chunks)
+  }
+
+  /** The columns [[VerifyStage.verify]] reads, keyed by `nid` as `id`. */
+  private def verifyInput(f: DataFrame, cfg: DedupConfig): DataFrame =
+    f.select((Seq(col("nid").as("id"), col("shingles"), col("simhash"),
+      col("norm_text")) ++
+      (if (cfg.mirrorDups) Seq(col("simhash_m")) else Nil)): _*)
 
   /**
    * Incremental mode: near-dup evidence of a NEW batch against an EXISTING
    * corpus — bipartite only (never corpus-corpus: the corpus is already
-   * deduped; never new-new: run the batch DAG on the batch for that). All
-   * candidate families the batch DAG runs generate here too: caption band
-   * keys, SimHash chunk keys (the chunk scheme sized by the CORPUS count so
-   * both sides emit identical key layouts), and — when the LCS detector is
-   * enabled (cfg.lcsMin > cfg.anchorK, the batch-DAG gate) — winnowed
-   * anchors, without which long-match recall would silently degrade to
-   * band/chunk-collision-gated. The shared [[graft.operators.VerifyStage]]
-   * OR-rule verifies: the same evidence semantics as the batch DAG,
-   * restricted to cross-batch pairs.
+   * deduped; never new-new: run the batch DAG on the batch for that). Both
+   * sides emit the batch DAG's candidate families ([[candidateBuckets]]),
+   * with the chunk scheme sized by the CORPUS count so their key layouts
+   * match, and the shared [[graft.operators.VerifyStage]] OR-rule verifies:
+   * the same evidence semantics as the batch DAG, restricted to cross-batch
+   * pairs.
    *
    * Hot keys are bounded by [[CandidateGen.bipartitePairsFromBuckets]]
    * (cfg.maxBucketSize volume ceiling, cfg.saltOversized exact-vs-degrade):
@@ -289,31 +301,6 @@ object DedupPipeline {
   private def saltedSide(f: DataFrame, tag: Int): DataFrame =
     f.withColumn("nid", xxhash64(lit(tag), col("id")))
 
-  /** Candidate bucket rows of one (already side-salted) frame of the
-    * bipartite DAG — all the families [[incrementalPairs]] documents, with
-    * the SimHash chunk scheme sized by `nCorpus` so both sides emit
-    * identical key layouts. */
-  private def sideBuckets(f: DataFrame, nCorpus: Long,
-      cfg: DedupConfig): DataFrame = {
-    val chunks = {
-      val raw = CandidateGen.simhashChunkBuckets(f, "nid", "simhash",
-        cfg.hammingMax, nCorpus)
-      // mirror-space chunk keys, same as the batch DAG
-      if (cfg.mirrorDups)
-        raw.union(CandidateGen.simhashChunkBuckets(f, "nid", "simhash_m",
-          cfg.hammingMax, nCorpus))
-      else raw
-    }
-    val base = CandidateGen.explodeBands(f.where(size(col("shingles")) > 0),
-        "nid", "band_keys")
-      .union(chunks)
-    if (cfg.lcsMin > cfg.anchorK)
-      base.union(f.select(col("nid").as("id"),
-        explode(winnow_anchors(col("norm_text"), cfg.anchorK,
-          cfg.lcsMin - cfg.anchorK + 1, cfg.seed)).as("key")))
-    else base
-  }
-
   /**
    * The PERSISTABLE corpus half of the incremental DAG: the corpus-side
    * candidate bucket rows `(b = side-salted corpus nid, key)` that
@@ -335,9 +322,11 @@ object DedupPipeline {
    * occupancy.
    */
   def corpusStateRows(corpusFeat: DataFrame, frozenCorpusCount: Long,
-      cfg: DedupConfig): DataFrame =
-    sideBuckets(saltedSide(corpusFeat, 1), frozenCorpusCount, cfg)
+      cfg: DedupConfig): DataFrame = {
+    val f = saltedSide(corpusFeat, 1)
+    candidateBuckets(f, f, frozenCorpusCount, cfg)
       .select(col("id").as("b"), col("key"))
+  }
 
   /**
    * [[incrementalPairs]] with the corpus half supplied as pre-computed state:
@@ -354,7 +343,7 @@ object DedupPipeline {
       : DataFrame = {
     val nf = saltedSide(newFeat, 0)
     val cf = saltedSide(corpusFeat, 1)
-    val newBuckets = sideBuckets(nf, corpusCount, cfg)
+    val newBuckets = candidateBuckets(nf, nf, corpusCount, cfg)
       .select(col("id").as("a"), col("key"))
     val cb = corpusBuckets.select(col("b"), col("key"))
     // checkpointed runs publish the bipartite recall posture next to the
@@ -368,12 +357,8 @@ object DedupPipeline {
     })
     val cand = CandidateGen.bipartitePairsFromBuckets(newBuckets, cb,
       cfg.maxBucketSize, saltOversized = cfg.saltOversized)
-    val featByNid = nf.unionByName(cf)
-      .select((Seq(col("nid").as("id"), col("shingles"), col("simhash"),
-        col("norm_text")) ++
-        (if (cfg.mirrorDups) Seq(col("simhash_m")) else Nil)): _*)
-    val verified = VerifyStage.verify(cand, featByNid, cfg)
-      .where(col("is_dup"))
+    val verified = VerifyStage.verify(cand, verifyInput(nf.unionByName(cf), cfg),
+      cfg).where(col("is_dup"))
     verified
       .join(nf.select(col("nid").as("a"), col("id").as("__a")), "a")
       .join(cf.select(col("nid").as("b"), col("id").as("__b")), "b")
@@ -494,7 +479,10 @@ final case class IncrementalAssignments(
     newAssignments: DataFrame,
     relabels: DataFrame)
 
-/** @param features    per-row signatures (persisted)
+/** [[DedupPipeline.runFromFeatures]]'s two halves in one result: evidence
+  * (`features`, `dupPairs`) and the clustering over it (`assignments`).
+  *
+  * @param features    per-row signatures (persisted)
   * @param dupPairs    verified duplicate pairs with evidence (rep pairs +
   *                    exact-identity star edges; cluster co-membership is the
   *                    full transitive pair set). NOT persisted: a caller that
@@ -502,9 +490,17 @@ final case class IncrementalAssignments(
   *                    CheckpointStore recomputes the candidate+verify join for
   *                    the second action (deterministic — features are cached —
   *                    so this costs time, not correctness); pass a
-  *                    CheckpointStore to stage `verified_pairs` once
+  *                    CheckpointStore to stage `verified_pairs` once.
+  *                    [[CorpusState.fold]] builds it without `assignments`
   * @param assignments final (image_id, cluster_id) */
 final case class DedupResult(
     features: DataFrame,
     dupPairs: DataFrame,
     assignments: DataFrame)
+
+/** The lazy evidence half of the batch DAG ([[DedupPipeline.evidence]]).
+  *
+  * @param edges    (src, dst) nid edges: verified rep pairs, then the
+  *                 caption- and image-identity star edges
+  * @param dupPairs [[DedupResult.dupPairs]] */
+private[pipeline] final case class Evidence(edges: DataFrame, dupPairs: DataFrame)
