@@ -605,7 +605,7 @@ object SparkEntry {
       // genuine cross-doc long matches too (e.g. built-in near-dup docs share
       // >= 60-char runs), which the detector correctly finds but which no
       // closed-form oracle can enumerate — same enumerability move as q16
-      VerifyStage.verify(pairs, feat, cfg)
+      VerifyStage.verify(pairs, feat, feat, cfg)
         .where(col("is_dup") && col("b") - col("a") === 100000)
         .select("a", "b").orderBy("a")
     }),

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
  * (FAISS top-k, reference: ea/sim/main/methods/index/faiss.py:63-77, and the
  * marker-set duplicate join, helpers/so/steps/merge_issues_duplicates.py:28-50).
  *
- * Skew handling (SURVEY.md section 4): bucket sizes are counted first; buckets
- * up to `maxBucketSize` produce all intra-bucket pairs (exact LSH semantics);
- * oversized buckets (degenerate band keys — boilerplate/empty content) fall
- * back to sorted-neighborhood pairing (each member pairs with its `window`
- * successors in id order), which bounds work at O(m*window) per bucket while
+ * Skew handling (SURVEY.md section 4): one window sizes each bucket and
+ * ranks its members by id; buckets up to `maxBucketSize` produce all
+ * intra-bucket pairs (exact LSH semantics); oversized buckets (degenerate
+ * band keys — boilerplate/empty content) fall back to sorted-neighborhood
+ * pairing (each member pairs with its `neighborhood` successors in id
+ * order), which bounds work at O(m*neighborhood) per bucket while
  * preserving connectivity of true duplicate groups for the downstream
  * connected-components stage. AQE skew-join splitting handles the residual
  * imbalance at runtime.
@@ -34,31 +35,40 @@ object CandidateGen {
    *                      degenerate keys (boilerplate) whose exact pair set
    *                      is O(m^2) garbage.
    * @return distinct candidate pairs (`a`, `b`) with a < b.
+   *
+   * Scale: one shuffle of `keyed` on `key`; one window over it gives each
+   * row its `bucket_n` and id rank, and every branch reads that ranked
+   * frame. Small buckets self-join on `key`; an oversized bucket of m rows
+   * joins on (`key`, rank) against each row's `neighborhood` successors, so
+   * it costs O(m * neighborhood), never O(m^2). The checkpoint-only
+   * [[capLossReport]] still scans `keyed` on its own.
    */
   def pairsFromBuckets(keyed: DataFrame, maxBucketSize: Int = 4096,
       neighborhood: Int = 8, saltOversized: Boolean = false): DataFrame = {
-    val counts = keyed.groupBy("key").agg(count(lit(1)).as("bucket_n"))
+    require(neighborhood > 0, s"neighborhood($neighborhood) must be positive")
+    val byKey = Window.partitionBy("key").orderBy("id")
+    val ranked = keyed.select(col("key"), col("id"))
+      .withColumn("bucket_n", count(lit(1)).over(
+        byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("rn", row_number().over(byKey))
       .where(col("bucket_n") > 1) // singleton buckets generate nothing
 
-    val sized = keyed.join(counts, "key")
-
-    val small = sized.where(col("bucket_n") <= maxBucketSize)
+    val small = ranked.where(col("bucket_n") <= maxBucketSize)
       .select(col("key"), col("id"))
     val allPairs = small.as("x").join(small.as("y"),
         col("x.key") === col("y.key") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
 
-    val big = sized.where(col("bucket_n") > maxBucketSize)
+    val big = ranked.where(col("bucket_n") > maxBucketSize)
     val bigPairs =
       if (saltOversized) saltedAllPairs(big, maxBucketSize)
-      else {
-        val rn = big.select(col("key"), col("id")).withColumn("rn",
-          row_number().over(Window.partitionBy("key").orderBy("id")))
-        rn.as("x").join(rn.as("y"),
-            col("x.key") === col("y.key") &&
-            col("y.rn") > col("x.rn") && col("y.rn") <= col("x.rn") + neighborhood)
-          .select(col("x.id").as("a"), col("y.id").as("b"))
-      }
+      else
+        // each row meets the rows ranked 1..neighborhood after it
+        big.select(col("key"), col("id").as("a"),
+            explode(sequence(col("rn") + 1, col("rn") + neighborhood)).as("rn"))
+          .join(big.select(col("key"), col("rn"), col("id").as("b")),
+            Seq("key", "rn"))
+          .select("a", "b")
 
     allPairs.union(bigPairs).distinct()
   }
@@ -146,6 +156,16 @@ object CandidateGen {
    *    garbage, wrong for legitimate giant duplicate groups — opt into
    *    salting when pair-level recall must survive those.
    *
+   * Scale: the unsalted path reads `right` once. The left side is counted
+   * per key (`n_a`) and `right` is joined to those counts; one window on
+   * `key` (ordered by `b`) gives `n_b` and the rank, and the kept right
+   * rows join the left rows. A `right` that is already partitioned by
+   * `key` (the bucketed corpus state) is neither shuffled nor re-read;
+   * only the left side moves. Salted mode reads the ranked frame three
+   * times (small keys, the grid's right leg, its per-key sizes). The
+   * checkpoint-only [[bipartiteCapLossReport]] still scans both sides on
+   * its own.
+   *
    * @param left  (`a`, `key`: Long) bucket rows
    * @param right (`b`, `key`: Long) bucket rows
    * @return distinct cross-side pairs (`a`, `b`); `a` = `b` is possible when
@@ -156,26 +176,32 @@ object CandidateGen {
       maxBucketSize: Int = 4096, neighborhood: Int = 8,
       saltOversized: Boolean = false): DataFrame = {
     require(maxBucketSize > 1, s"maxBucketSize($maxBucketSize) must exceed 1")
+    require(neighborhood > 0, s"neighborhood($neighborhood) must be positive")
     val capPairs = maxBucketSize.toLong * (maxBucketSize - 1) / 2
-    // keys absent from either side generate nothing: inner count join
-    val kc = left.groupBy("key").agg(count(lit(1)).as("n_a"))
-      .join(right.groupBy("key").agg(count(lit(1)).as("n_b")), "key")
-    val vol = col("n_a") * col("n_b")
-    val l = left.join(kc, "key")
-    val r = right.join(kc, "key")
+    val l = left.select("a", "key")
+    // keys absent from either side generate nothing: the inner join drops
+    // them; the window then sizes and ranks each shared key's right rows
+    val byKey = Window.partitionBy("key").orderBy("b")
+    val ranked = right.select("b", "key")
+      .join(l.groupBy("key").agg(count(lit(1)).as("n_a")), "key")
+      .withColumn("n_b", count(lit(1)).over(
+        byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("rn", row_number().over(byKey))
+    val exact = col("n_a") * col("n_b") <= capPairs
+    def meet(r: DataFrame) = l.join(r.select("key", "b"), "key").select("a", "b")
 
-    val smallPairs = l.where(vol <= capPairs).select("a", "key")
-      .join(r.where(vol <= capPairs).select("b", "key"), "key")
-      .select("a", "b")
-
-    val bigL = l.where(vol > capPairs)
-    val bigR = r.where(vol > capPairs)
-    val bigPairs =
-      if (saltOversized) {
+    val pairs =
+      if (!saltOversized)
+        // bounded degrade: an oversized key keeps only its `neighborhood`
+        // smallest-id right rows, so its output is n_a * neighborhood
+        meet(ranked.where(exact || col("rn") <= neighborhood))
+      else {
         // grid cell (i, j): left row u lands in column s_u and replicates
         // across all gB rows, right row v lands in row s_v and replicates
         // across all gA columns; (u, v) meet exactly once, at (s_u, s_v)
         def g(n: Column) = (floor((n - 1) / lit(maxBucketSize)) + 1).cast("int")
+        val bigR = ranked.where(!exact)
+        val bigL = l.join(bigR.select("key", "n_a", "n_b").distinct(), "key")
         val ls = bigL
           .withColumn("sa", pmod(xxhash64(col("a")), g(col("n_a"))).cast("int"))
           .select(col("key"), col("a"), col("sa"),
@@ -184,22 +210,12 @@ object CandidateGen {
           .withColumn("sb", pmod(xxhash64(col("b")), g(col("n_b"))).cast("int"))
           .select(col("key").as("rkey"), col("b"), col("sb"),
             explode(sequence(lit(0), g(col("n_a")) - 1)).as("ia"))
-        ls.join(rs, col("key") === col("rkey") &&
+        meet(ranked.where(exact)).union(ls.join(rs, col("key") === col("rkey") &&
             col("sa") === col("ia") && col("jb") === col("sb"))
-          .select("a", "b")
-      } else {
-        // bounded degrade: the per-key window sorts n_b rows in one task —
-        // bounded WORK (sort, no pair blow-up); its output is neighborhood
-        // rows per key
-        val topR = bigR.select(col("key"), col("b"))
-          .withColumn("rn",
-            row_number().over(Window.partitionBy("key").orderBy("b")))
-          .where(col("rn") <= neighborhood)
-          .select("key", "b")
-        bigL.select("a", "key").join(topR, "key").select("a", "b")
+          .select("a", "b"))
       }
 
-    smallPairs.union(bigPairs).distinct()
+    pairs.distinct()
   }
 
   /**

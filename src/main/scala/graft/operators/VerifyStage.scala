@@ -18,26 +18,37 @@ import org.apache.spark.sql.functions._
 object VerifyStage {
 
   /**
-   * @param pairs    (`a`, `b`) candidate pairs, a < b
-   * @param features (`id`, `shingles` array<long>, `simhash` long,
-   *                 `norm_text` string) — one row per record
-   * @return pairs with `jaccard`, `hamming`, `lcs`, `is_dup`
+   * @param pairs (`a`, `b`) candidate pairs
+   * @param left  the features of every `a`: (`id`, `shingles` array<long>,
+   *              `simhash` long, `norm_text` string, plus `simhash_m` under
+   *              mirrorDups) — one row per `id`; an optional string
+   *              `image_id` rides through as `image_a`
+   * @param right the same for every `b`; its `image_id` rides through as
+   *              `image_b`. A caller with one feature frame passes it twice.
+   * @return pairs with `jaccard`, `hamming`, `lcs`, `is_dup`, and
+   *         `image_a`/`image_b` when the sides carry `image_id`
+   *
+   * Each side is read once, so a bipartite caller joins its new rows on `a`
+   * and its corpus rows on `b`, and a caller whose join key is an internal
+   * node id gets the image ids back without another join.
    */
-  def verify(pairs: DataFrame, features: DataFrame, cfg: DedupConfig): DataFrame = {
+  def verify(pairs: DataFrame, left: DataFrame, right: DataFrame,
+      cfg: DedupConfig): DataFrame = {
     // mirrorDups: the image distance is the MIN of the raw and the
     // orbit-canonical simhash Hamming — the raw leg keeps ordinary
     // near-dups exactly as without the flag (the canonical argmin can flip
     // under small phash noise), the canonical leg catches mirrored copies
     val mirrorCols =
       if (cfg.mirrorDups) Seq("simhash_m") else Seq.empty[String]
-    def side(tag: String, idAs: String) = features.select(
-      (Seq(col("id").as(idAs), col("shingles").as(s"sh_$tag"),
+    def ids(f: DataFrame, tag: String) =
+      if (f.columns.contains("image_id")) Seq(s"image_$tag") else Nil
+    def side(f: DataFrame, tag: String) = f.select(
+      (Seq(col("id").as(tag), col("shingles").as(s"sh_$tag"),
         col("simhash").as(s"sim_$tag"), col("norm_text").as(s"txt_$tag")) ++
-        mirrorCols.map(c => col(c).as(s"${c}_$tag"))): _*)
-    val fa = side("a", "a")
-    val fb = side("b", "b")
+        mirrorCols.map(c => col(c).as(s"${c}_$tag")) ++
+        ids(f, tag).map(col("image_id").as(_))): _*)
 
-    val joined = pairs.join(fa, "a").join(fb, "b")
+    val joined = pairs.join(side(left, "a"), "a").join(side(right, "b"), "b")
       .withColumn("jaccard", jaccard_sim(col("sh_a"), col("sh_b")))
       .withColumn("hamming",
         (if (cfg.mirrorDups)
@@ -63,6 +74,7 @@ object VerifyStage {
           col("jaccard") >= cfg.jaccardMin) ||
         col("hamming") <= cfg.hammingMax ||
         (lit(cfg.lcsMin) > 0 && col("lcs") >= cfg.lcsMin))
-      .select("a", "b", "jaccard", "hamming", "lcs", "is_dup")
+      .select((Seq("a", "b") ++ ids(left, "a") ++ ids(right, "b") ++
+        Seq("jaccard", "hamming", "lcs", "is_dup")).map(col): _*)
   }
 }

@@ -88,14 +88,17 @@ object DedupPipeline {
   }
 
   /** (rep star edges, representative bucket rows) for one exact-identity
-    * family. Star edges connect every non-representative member to the
-    * group's min-nid representative. */
+    * family. Star edges (`src`, `dst`, `src_id`, `dst_id`) connect every
+    * non-representative member to the group's min-nid representative; the
+    * `min` over (nid, id) keeps the representative's image id with its nid. */
   private def collapse(feat: DataFrame, identityCol: String): (DataFrame, DataFrame) = {
-    val reps = feat.groupBy(identityCol).agg(min("nid").as("rep"))
+    val reps = feat.groupBy(identityCol)
+      .agg(min(struct(col("nid"), col("id"))).as("rep"))
     val withRep = feat.join(reps, identityCol)
-    val stars = withRep.where(col("nid") =!= col("rep"))
-      .select(col("rep").as("src"), col("nid").as("dst"))
-    val repRows = withRep.where(col("nid") === col("rep"))
+    val stars = withRep.where(col("nid") =!= col("rep.nid"))
+      .select(col("rep.nid").as("src"), col("nid").as("dst"),
+        col("rep.id").as("src_id"), col("id").as("dst_id"))
+    val repRows = withRep.where(col("nid") === col("rep.nid"))
     (stars, repRows)
   }
 
@@ -192,30 +195,33 @@ object DedupPipeline {
     // not persisted: the CC loop localCheckpoints its canonical edge set
     // immediately, so the assignment path reads this exactly once; dupPairs
     // consumers that need it materialized pass a CheckpointStore (staged)
+    val vin = verifyInput(feat, cfg)
     val verified = staged("verified_pairs") {
-      VerifyStage.verify(candidates, verifyInput(feat, cfg), cfg)
-        .where(col("is_dup"))
+      VerifyStage.verify(candidates, vin, vin, cfg).where(col("is_dup"))
     }
+    require(verified.columns.contains("image_a"),
+      "a verified_pairs stage written by an older build lacks image_a/" +
+        "image_b: delete <checkpoint>/<run-id>/verified_pairs to recompute it")
     // with a checkpoint, staged() has materialized verified_pairs to
     // storage, so nothing downstream can re-demand the bucket rows
     checkpoint.foreach(_ => bucketRows.unpersist())
 
     // --- duplicate-pair evidence (representative level + exact stars) -------
-    val nidToId = feat.select(col("nid"), col("id"))
-    def back(df: DataFrame, l: String, r: String): DataFrame =
-      df.join(nidToId.withColumnRenamed("nid", l).withColumnRenamed("id", "__a"), l)
-        .join(nidToId.withColumnRenamed("nid", r).withColumnRenamed("id", "__b"), r)
-        .select(least(col("__a"), col("__b")).as("a"),
-          greatest(col("__a"), col("__b")).as("b"),
-          col("jaccard"), col("hamming"))
-    val dupPairs = back(verified, "a", "b")
-      .union(back(capStars.withColumn("jaccard", lit(1.0))
-        .withColumn("hamming", lit(null).cast("int")), "src", "dst"))
-      .union(back(phStars.withColumn("jaccard", lit(null).cast("double"))
-        .withColumn("hamming", lit(0)), "src", "dst"))
+    // every frame carries its image ids: no join back from nid to id
+    def byId(df: DataFrame, l: String, r: String, jaccard: Column,
+        hamming: Column): DataFrame =
+      df.select(least(col(l), col(r)).as("a"), greatest(col(l), col(r)).as("b"),
+        jaccard.as("jaccard"), hamming.as("hamming"))
+    val dupPairs =
+      byId(verified, "image_a", "image_b", col("jaccard"), col("hamming"))
+        .union(byId(capStars, "src_id", "dst_id", lit(1.0),
+          lit(null).cast("int")))
+        .union(byId(phStars, "src_id", "dst_id", lit(null).cast("double"),
+          lit(0)))
 
     Evidence(verified.select(col("a").as("src"), col("b").as("dst"))
-      .union(capStars).union(phStars), dupPairs)
+      .union(capStars.select("src", "dst")).union(phStars.select("src", "dst")),
+      dupPairs)
   }
 
   /** Candidate bucket rows `(id, key)` — the one list of candidate
@@ -248,10 +254,11 @@ object DedupPipeline {
     else bands.union(chunks)
   }
 
-  /** The columns [[VerifyStage.verify]] reads, keyed by `nid` as `id`. */
+  /** The columns [[VerifyStage.verify]] reads, keyed by `nid` as `id`, with
+    * the image id carried as `image_id`. */
   private def verifyInput(f: DataFrame, cfg: DedupConfig): DataFrame =
-    f.select((Seq(col("nid").as("id"), col("shingles"), col("simhash"),
-      col("norm_text")) ++
+    f.select((Seq(col("nid").as("id"), col("id").as("image_id"),
+      col("shingles"), col("simhash"), col("norm_text")) ++
       (if (cfg.mirrorDups) Seq(col("simhash_m")) else Nil)): _*)
 
   /**
@@ -349,20 +356,20 @@ object DedupPipeline {
     // checkpointed runs publish the bipartite recall posture next to the
     // pairs — dropped candidate volume per status, the incremental "no
     // silent caps" metric. The report re-derives the (narrow) new-batch
-    // bucket rows; it materializes eagerly inside stage(), so no
-    // persistence hand-off with the lazily-consumed candidate join below.
+    // bucket rows and scans `corpusBuckets` on its own; it materializes
+    // eagerly inside stage(), so no persistence hand-off with the
+    // lazily-consumed candidate join below.
     checkpoint.foreach(_.stage("incremental_cap_loss") {
       CandidateGen.bipartiteCapLossReport(newBuckets, cb,
         cfg.maxBucketSize, saltOversized = cfg.saltOversized)
     })
     val cand = CandidateGen.bipartitePairsFromBuckets(newBuckets, cb,
       cfg.maxBucketSize, saltOversized = cfg.saltOversized)
-    val verified = VerifyStage.verify(cand, verifyInput(nf.unionByName(cf), cfg),
-      cfg).where(col("is_dup"))
-    verified
-      .join(nf.select(col("nid").as("a"), col("id").as("__a")), "a")
-      .join(cf.select(col("nid").as("b"), col("id").as("__b")), "b")
-      .select(col("__a").as("a"), col("__b").as("b"),
+    // the new batch verifies the `a` side, the corpus the `b` side, and both
+    // carry their image ids through: each features frame is read once
+    VerifyStage.verify(cand, verifyInput(nf, cfg), verifyInput(cf, cfg), cfg)
+      .where(col("is_dup"))
+      .select(col("image_a").as("a"), col("image_b").as("b"),
         col("jaccard"), col("hamming"))
   }
 

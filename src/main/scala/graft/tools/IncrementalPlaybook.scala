@@ -105,7 +105,8 @@ object IncrementalPlaybook {
     val cf = tagged(corpus, "c:")
     val allPairs = nf.select(col("id").as("a"))
       .crossJoin(cf.select(col("id").as("b")))
-    val brute = VerifyStage.verify(allPairs, nf.unionByName(cf), cfg)
+    val all = nf.unionByName(cf)
+    val brute = VerifyStage.verify(allPairs, all, all, cfg)
       .where(col("is_dup"))
       .select(expr("substring(a, 3)").as("a"), expr("substring(b, 3)").as("b"))
     val evidence = p1

@@ -146,6 +146,75 @@ class CandidateGenSpec extends SparkSpec {
       "degrade must stay far below the cross product")
   }
 
+  test("oversized degrade joins on (key, rank), not on key alone") {
+    // a key of m rows joined on `key` alone and filtered on rank costs m^2
+    // comparisons; the (key, rank) equi-join costs m * neighborhood
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val big = (0L until 100L).map(i => (i, 7L)).toDF("id", "key")
+    val pairs = CandidateGen.pairsFromBuckets(big, maxBucketSize = 10,
+      neighborhood = 4)
+    val joinKeys = pairs.queryExecution.sparkPlan.collect {
+      case j: BaseJoinExec => j.leftKeys.flatMap(_.references.map(_.name)).toSet
+    }
+    assert(joinKeys.exists(k => k("key") && k("rn")),
+      s"no join keys on the rank: $joinKeys")
+    assert(pairs.count() == 100L * 4 - 4 * 5 / 2)
+  }
+
+  test("both generators reject a non-positive neighborhood") {
+    // neighborhood <= 0 would silently emit nothing for oversized keys
+    val keyed = Seq((1L, 7L), (2L, 7L)).toDF("id", "key")
+    for (w <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](
+        CandidateGen.pairsFromBuckets(keyed, neighborhood = w))
+      intercept[IllegalArgumentException](
+        CandidateGen.bipartitePairsFromBuckets(keyed.toDF("a", "key"),
+          keyed.toDF("b", "key"), neighborhood = w))
+    }
+  }
+
+  test("unsalted generators match the documented rule on a skewed keyspace") {
+    // half the rows on 8 zipf-ish hot keys (~12 to ~180 rows), half on 400
+    // cold keys; duplicate (id, key) rows; an a = b re-crawl row. The rule:
+    // all pairs under the cap, each row's rank-neighborhood over it
+    val rng = new scala.util.Random(2024)
+    def key(): Long =
+      if (rng.nextBoolean()) math.floor(math.sqrt(rng.nextInt(64).toDouble)).toLong
+      else 100L + rng.nextInt(400)
+    def rows(n: Int, off: Long) = {
+      val r = (0 until n).map(i => (off + i, key()))
+      r ++ r.take(30)
+    }
+    val (cap, w) = (12, 3)
+
+    val keyed = rows(1500, 0L)
+    val got = CandidateGen.pairsFromBuckets(keyed.toDF("id", "key"), cap, w)
+      .as[(Long, Long)].collect()
+    val want = keyed.groupBy(_._2).values.flatMap { g =>
+      val ids = g.map(_._1).sorted
+      if (ids.size <= cap) for (a <- ids; b <- ids if a < b) yield (a, b)
+      else ids.indices.flatMap(i => ids.slice(i + 1, i + 1 + w).map((ids(i), _)))
+    }.toSet
+    assert(got.toSet == want)
+    assert(got.length == want.size, "output must be distinct")
+
+    val l = rows(400, 0L) :+ ((5L, 999L))
+    val r = rows(600, 10000L) :+ ((5L, 999L))
+    val gotB = CandidateGen.bipartitePairsFromBuckets(l.toDF("a", "key"),
+      r.toDF("b", "key"), cap, w).as[(Long, Long)].collect()
+    val rByKey = r.groupBy(_._2)
+    val wantB = l.groupBy(_._2).toSeq.flatMap { case (k, la) =>
+      val bs = rByKey.getOrElse(k, Nil).map(_._1).sorted
+      val kept =
+        if (la.size.toLong * bs.size <= cap.toLong * (cap - 1) / 2) bs
+        else bs.take(w)
+      for ((a, _) <- la; b <- kept) yield (a, b)
+    }.toSet
+    assert(wantB((5L, 5L)))
+    assert(gotB.toSet == wantB)
+    assert(gotB.length == wantB.size, "output must be distinct")
+  }
+
   test("simhash subset buckets guarantee a candidate at hamming <= hammingMax") {
     val df = Seq((1L, 0x0123456789ABCDEFL),
       (2L, 0x0123456789ABCDEFL ^ (1L << 3) ^ (1L << 20) ^ (1L << 63)))

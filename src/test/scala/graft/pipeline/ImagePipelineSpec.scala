@@ -147,6 +147,17 @@ class ImagePipelineSpec extends SparkSpec {
     assert(loss.filter(_._1 != "degraded").forall(_._4 == 0L))
   }
 
+  test("resume: a verified_pairs stage without image ids is refused") {
+    // the layout older builds wrote: no image_a/image_b columns
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-old").toString
+    val store = new CheckpointStore(spark, dir, "old")
+    store.stage("verified_pairs")(Seq((1L, 2L, 1.0, 0, 0, true))
+      .toDF("a", "b", "jaccard", "hamming", "lcs", "is_dup"))
+    val e = intercept[IllegalArgumentException](DedupPipeline.run(spark,
+      ImageGen.generate(spark, 4L, seed = 5L).toDF(), cfg, Some(store)))
+    assert(e.getMessage.contains("verified_pairs"))
+  }
+
   test("phash: variants stay close, unrelated bases far (hamming histogram)") {
     val rows = images.select("image_id", "phash").as[(String, Long)].collect()
     val byBase = rows.groupBy(_._1.substring(4, 12))

@@ -3,6 +3,10 @@ package graft.pipeline
 import graft.SparkSpec
 import graft.config.DedupConfig
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** [[DedupPipeline.incrementalPairs]] contracts the image-level MainSpec
@@ -17,6 +21,19 @@ class IncrementalSpec extends SparkSpec {
     DedupPipeline.features(
       rows.toDF("image_id", "caption", "phash"), c)
       .persist()
+
+  /** Whether `p` is a file scan of the state table `name`. */
+  private def scanOf(name: String)(p: SparkPlan): Boolean = p match {
+    case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.exists(_.getName == s"$name.parquet")
+    case _ => false
+  }
+
+  /** Nodes of `plan` matching `f`, through AQE stages and subqueries. */
+  private def nodes(plan: SparkPlan)(f: SparkPlan => Boolean): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+      case p if f(p) => p
+    }
 
   test("overlapping image_id across frames does not alias the join identity") {
     // the re-crawl shape: the SAME image_id lives in both the corpus and the
@@ -96,27 +113,60 @@ class IncrementalSpec extends SparkSpec {
     assert(a.nonEmpty, "fixture must plant cross-side near-dups")
     assert(a == b, s"state path diverged:\n in-mem=${a.take(5)}\n state=${b.take(5)}")
 
-    // plan shape: force SMJ (no broadcast) so Exchange counting is
-    // deterministic, then the bucketed path must (a) scan the corpus state
-    // as Bucketed: true and (b) plan strictly fewer hash Exchanges — the
-    // corpus side's profile agg + candidate join shuffles are gone
+    // plan shape: force SMJ (no broadcast) so every join plans its
+    // exchanges, then the bucketed path must (a) scan the corpus state as
+    // Bucketed: true, once, and (b) plan no Exchange on `key` above that
+    // scan — the corpus side's sizing, ranking and candidate join are
+    // shuffle-free; only the emitted pairs move (on `a`, `b`)
     val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-        "Exchange hashpartitioning".r.findAllIn(
-          df.queryExecution.executedPlan.toString).length
       val statePlan = DedupPipeline.incrementalPairsFromState(spark, fresh,
         corpus, io.readBucketed("corpus_buckets", "key", 4), n, cfgL)
-      val planStr = statePlan.queryExecution.executedPlan.toString
+      val plan = statePlan.queryExecution.executedPlan
+      val planStr = plan.toString
       assert(planStr.contains("Bucketed: true"),
         s"corpus state scan not bucketed:\n${planStr.take(3000)}")
-      val memN = exchanges(
-        DedupPipeline.incrementalPairs(spark, fresh, corpus, cfgL))
-      val stN = exchanges(statePlan)
-      assert(stN < memN,
-        s"bucketed state must remove corpus-side shuffles: state=$stN in-mem=$memN")
+      assert(nodes(plan)(scanOf("corpus_buckets")).size == 1,
+        s"corpus state must be scanned once:\n${planStr.take(3000)}")
+      val shuffled = nodes(plan) {
+        case e @ ShuffleExchangeExec(HashPartitioning(exprs, _), _, _, _) =>
+          exprs.exists(_.references.exists(_.name == "key")) &&
+            e.exists(scanOf("corpus_buckets"))
+        case _ => false
+      }
+      assert(shuffled.isEmpty,
+        s"bucketed state must not shuffle the corpus side:\n${shuffled.mkString("\n")}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
     Seq(corpus, fresh).foreach(_.unpersist())
+  }
+
+  test("the pairs plan reads each corpus state table once") {
+    // corpus_buckets once (the one-pass bipartite ranking) and
+    // corpus_features once (the `b` side of verify, which carries the image
+    // ids so no join maps node ids back)
+    import graft.synth.ImageGen
+    val dir = java.nio.file.Files.createTempDirectory("graft-scan1").toString
+    val io = new graft.io.ParquetTableIO(spark, dir)
+    io.write(DedupPipeline.features(
+      ImageGen.generate(spark, bases = 20, seed = 11L).toDF(), cfg),
+      "corpus_features")
+    val corpus = io.read("corpus_features")
+    val n = corpus.count()
+    io.writeBucketed(DedupPipeline.corpusStateRows(corpus, n, cfg),
+      "corpus_buckets", "key", 4)
+    val fresh = DedupPipeline.features(
+      ImageGen.generate(spark, bases = 20, seed = 11L).toDF()
+        .where(col("image_id").endsWith("_000"))
+        .withColumn("image_id", concat(lit("new_"), col("image_id"))), cfg)
+      .persist()
+
+    val pairs = DedupPipeline.incrementalPairsFromState(spark, fresh, corpus,
+      io.readBucketed("corpus_buckets", "key", 4), n, cfg)
+    assert(pairs.collect().nonEmpty, "fixture must plant cross-side near-dups")
+    val plan = pairs.queryExecution.executedPlan
+    for (t <- Seq("corpus_buckets", "corpus_features"))
+      assert(nodes(plan)(scanOf(t)).size == 1, s"$t scanned more than once:\n$plan")
+    fresh.unpersist()
   }
 }
