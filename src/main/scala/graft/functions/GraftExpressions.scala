@@ -572,3 +572,186 @@ case class BloomCountContained(child: Expression, sketch: Array[Byte])
   override protected def withNewChildInternal(newChild: Expression): BloomCountContained =
     copy(child = newChild)
 }
+
+/** A trained product-quantization codebook held on the driver:
+  * `books(sub)(code)` centroid floats and their ||c||^2/2 terms. The PQ
+  * kernels ([[PqCodes]], [[PqLut]], [[PqAssign]]) reach it through
+  * `addReferenceObj`, so it ships once with the plan instead of as m*k
+  * literal nodes. One measure serves training, encoding and the lookup
+  * table: score = x.c - ||c||^2/2 (argmax == nearest centroid by squared
+  * L2), summed in double over the min length; the max score wins under
+  * Spark's double ordering (NaN largest, -0.0 == 0.0) and ties go to the
+  * max code. Equality is by value, so two plans over one codebook stay
+  * equal and can share an exchange. */
+final class PqBook(val books: Array[Array[Array[Float]]]) extends Serializable {
+  require(books.nonEmpty && books.forall(_.nonEmpty),
+    "PqBook: every subspace needs at least one centroid")
+  val m: Int = books.length
+  /** Slice width of [[codes]] and [[lut]]: the first centroid's length. */
+  val subDim: Int = books.head.head.length
+  private val half: Array[Array[Double]] = books.map(_.map { c =>
+    var s = 0.0; var i = 0
+    while (i < c.length) { s += c(i).toDouble * c(i); i += 1 }
+    s / 2
+  })
+  /** Start of each subspace's scores in the subspace-major [[lut]]. */
+  val offsets: Array[Int] = books.map(_.length).scanLeft(0)(_ + _).init
+  private val lutSize = offsets.last + books.last.length
+
+  private def score(v: Array[Float], from: Int, len: Int, sub: Int, code: Int): Double =
+    HashKernels.dotAt(v, from, len, books(sub)(code)) - half(sub)(code)
+
+  private def best(v: Array[Float], from: Int, len: Int, sub: Int): Int = {
+    var code = 0
+    var top = score(v, from, len, sub, 0)
+    var c = 1
+    while (c < books(sub).length) {
+      val s = score(v, from, len, sub, c)
+      if (org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s, top) >= 0) {
+        code = c; top = s
+      }
+      c += 1
+    }
+    code
+  }
+
+  /** Length of Spark's `slice(v, sub * subDim + 1, subDim)` over n floats. */
+  private def sliceLen(n: Int, sub: Int): Int =
+    math.max(0, math.min(subDim, n - sub * subDim))
+
+  /** m codes, one per subspace; a null vector scores null everywhere, which
+    * ties every centroid, so it gets each subspace's last code. */
+  def codes(vec: ArrayData): ArrayData = {
+    val out = new Array[Int](m)
+    if (vec == null) {
+      var sub = 0
+      while (sub < m) { out(sub) = books(sub).length - 1; sub += 1 }
+    } else {
+      val v = vec.toFloatArray()
+      var sub = 0
+      while (sub < m) {
+        out(sub) = best(v, sub * subDim, sliceLen(v.length, sub), sub)
+        sub += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** The m*k per-centroid scores, subspace-major; m*k nulls for a null
+    * vector. */
+  def lut(vec: ArrayData): ArrayData =
+    if (vec == null) {
+      val out = UnsafeArrayData.createFreshArray(lutSize, 8)
+      var i = 0
+      while (i < lutSize) { out.setNullAt(i); i += 1 }
+      out
+    } else {
+      val v = vec.toFloatArray()
+      val out = new Array[Double](lutSize)
+      var sub = 0
+      while (sub < m) {
+        val len = sliceLen(v.length, sub)
+        var c = 0
+        while (c < books(sub).length) {
+          out(offsets(sub) + c) = score(v, sub * subDim, len, sub, c)
+          c += 1
+        }
+        sub += 1
+      }
+      UnsafeArrayData.fromPrimitiveArray(out)
+    }
+
+  def hasSub(sub: Int): Boolean = sub >= 0 && sub < m
+
+  /** Nearest code of one already-sliced subvector (the training E-step);
+    * a null slice gets the last code. */
+  def assign(sub: Int, slice: ArrayData): Int =
+    if (slice == null) books(sub).length - 1
+    else {
+      val v = slice.toFloatArray()
+      best(v, 0, v.length, sub)
+    }
+
+  override def equals(o: Any): Boolean = o match {
+    case b: PqBook => (b eq this) || java.util.Arrays.deepEquals(
+      books.asInstanceOf[Array[AnyRef]], b.books.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override lazy val hashCode: Int =
+    java.util.Arrays.deepHashCode(books.asInstanceOf[Array[AnyRef]])
+  /** Plan strings name the shape, never the floats. */
+  override def toString: String =
+    s"PqBook(m=$m, k=${books.map(_.length).mkString("/")}, subDim=$subDim)"
+}
+
+/** array<float> -> array<int>: the m PQ codes of a vector ([[PqBook.codes]]).
+  * Never null: a null vector has codes too. */
+case class PqCodes(child: Expression, book: PqBook) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "pq_codes"
+  override def eval(input: InternalRow): Any =
+    book.codes(child.eval(input).asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    PqBook.genBookCall(ctx, ev, book, child, "codes")
+  override protected def withNewChildInternal(newChild: Expression): PqCodes =
+    copy(child = newChild)
+}
+
+/** array<float> -> array<double>: the vector's m*k ADC lookup table
+  * ([[PqBook.lut]]), read by [[AdcLookup]] at `book.offsets`. */
+case class PqLut(child: Expression, book: PqBook) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "pq_lut"
+  override def eval(input: InternalRow): Any =
+    book.lut(child.eval(input).asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    PqBook.genBookCall(ctx, ev, book, child, "lut")
+  override protected def withNewChildInternal(newChild: Expression): PqLut =
+    copy(child = newChild)
+}
+
+/** (int sub, array<float> slice) -> int nearest code in that subspace
+  * ([[PqBook.assign]]); null when `sub` is null or not a subspace. */
+case class PqAssign(left: Expression, right: Expression, book: PqBook)
+    extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "pq_assign"
+  override def eval(input: InternalRow): Any = {
+    val sub = left.eval(input)
+    if (sub == null || !book.hasSub(sub.asInstanceOf[Int])) null
+    else book.assign(sub.asInstanceOf[Int], right.eval(input).asInstanceOf[ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("pqBook", book, classOf[PqBook].getName)
+    val s = left.genCode(ctx)
+    val v = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${s.code}
+      boolean ${ev.isNull} = ${s.isNull} || !$ref.hasSub(${s.value});
+      int ${ev.value} = -1;
+      if (!${ev.isNull}) {
+        ${v.code}
+        ${ev.value} = $ref.assign(${s.value}, ${v.isNull} ? null : ${v.value});
+      }""")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): PqAssign =
+    copy(left = l, right = r)
+}
+
+object PqBook {
+  /** Generated code of a never-null `book.<method>(child)` kernel call
+    * that passes a null child through as null. */
+  private[functions] def genBookCall(ctx: CodegenContext, ev: ExprCode,
+      book: PqBook, child: Expression, method: String): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("pqBook", book, classOf[PqBook].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ArrayData ${ev.value} = $ref.$method(${c.isNull} ? null : ${c.value});""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+}

@@ -458,11 +458,16 @@ object HashKernels {
   /** Inner product — the PQ/ADC scoring measure (on L2-normalized inputs it
     * ranks identically to cosine; unlike cosine it is additive across
     * subvector slices, which is what asymmetric-distance lookup sums). */
-  def dot(a: Array[Float], b: Array[Float]): Double = {
-    val n = math.min(a.length, b.length)
+  def dot(a: Array[Float], b: Array[Float]): Double = dotAt(a, 0, a.length, b)
+
+  /** [[dot]] of the `len`-float slice of `a` starting at `from` with `b`,
+    * without copying the slice (the PQ kernels score every subspace of a
+    * vector in place). Same double sum over the min length. */
+  def dotAt(a: Array[Float], from: Int, len: Int, b: Array[Float]): Double = {
+    val n = math.min(len, b.length)
     var s = 0.0
     var i = 0
-    while (i < n) { s += a(i).toDouble * b(i); i += 1 }
+    while (i < n) { s += a(from + i).toDouble * b(i); i += 1 }
     s
   }
 

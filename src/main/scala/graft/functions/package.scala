@@ -76,6 +76,19 @@ package object functions {
   def adc_lookup(codes: Column, lut: Column, offsets: Seq[Int]): Column =
     column(AdcLookup(expression(codes), expression(lut), offsets))
 
+  /** The m PQ codes of a vector against a driver-held codebook. */
+  def pq_codes(book: PqBook, vec: Column): Column =
+    column(PqCodes(expression(vec), book))
+
+  /** A vector's m*k ADC lookup table, subspace-major (read it with
+    * [[adc_lookup]] at `book.offsets`). */
+  def pq_lut(book: PqBook, vec: Column): Column =
+    column(PqLut(expression(vec), book))
+
+  /** Nearest code of an already-sliced subvector in subspace `sub`. */
+  def pq_assign(book: PqBook, sub: Column, slice: Column): Column =
+    column(PqAssign(expression(sub), expression(slice), book))
+
   def srp_bucket(vec: Column, bits: Int, seed: Long = 42L): Column =
     column(SrpBucket(expression(vec), bits, seed))
 

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,7 +81,9 @@ object Ann {
    * cell's mean via posexplode + groupBy(cell, dim). Two shuffles per
    * iteration; centroids (k * dim floats — tiny by construction) round-trip
    * through the driver each iteration, which truncates lineage and is exactly
-   * how you'd persist the quantizer artifact between corpus snapshots.
+   * how you'd persist the quantizer artifact between corpus snapshots. The
+   * returned frame is a local relation over those driver rows, so collecting
+   * it runs no job.
    * Init and tie-breaks are deterministic; the M-step's floating-point avg()
    * merges partials in shuffle arrival order, so exact bit-reproducibility
    * across DIFFERENT cluster topologies is not guaranteed (last-ulp drift) —
@@ -99,12 +103,16 @@ object Ann {
         .select(col("cell").as("cent_id"),
           transform(array_sort(col("dims")), s => s("m").cast("float")).as("centv"))
       // driver round-trip: k rows, truncates the per-iteration lineage
-      val rows = means.collect()
-      cents = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), means.schema)
+      cents = localFrame(spark, means.collect(), means.schema)
     }
     cents
   }
+
+  /** A local relation over driver-held artifact rows: scans and collects of
+    * it run no Spark job. */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Deterministic hash-order sample of nlist corpus vectors as initial
     * centroids: TakeOrderedAndProject (per-partition top-nlist + driver
@@ -164,7 +172,7 @@ object Ann {
     * definition so the tie-break and the gating can never diverge between
     * [[ivfPqTopK]], [[coarsePairs]] and [[cellAssignments]]. */
   private def assignLocalized(c: DataFrame, localCents: DataFrame,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame =
+      rows: Array[Row]): DataFrame =
     if (rows.length <= literalCentroidMax)
       assignCells(c, rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)))
     else assignCellsBig(c, localCents)
@@ -215,9 +223,9 @@ object Ann {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int): DataFrame = {
-    val books = collectBooks(codebooks)
-    requireDim(corpus, vecCol, books, "corpus")
-    requireDim(queries, vecCol, books, "query")
+    val book = collectBooks(codebooks)
+    requireDim(corpus, vecCol, book, "corpus")
+    requireDim(queries, vecCol, book, "query")
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val (localCents, rows) = localizeCentroids(centroids)
@@ -225,13 +233,13 @@ object Ann {
     val assigned = assignLocalized(c, localCents, rows)
     // the single corpus pass: assignment + encode, fused
     val codes = assigned.select(col("item_id"), col("cell"),
-      codesCol(books, col("cv")).as("codes"))
+      pq_codes(book, col("cv")).as("codes"))
     val cand = probeCells(q, localCents, cents, nProbe)
       .select("query_id", "cell").join(codes, "cell")
       .where(col("query_id") =!= col("item_id"))
-    val qlut = withLut(q, books).select("query_id", "lut")
+    val qlut = q.select(col("query_id"), pq_lut(book, col("qv")).as("lut"))
     cand.join(qlut, "query_id")
-      .withColumn("adc", adcScore(books))
+      .withColumn("adc", adcScore(book))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("adc").desc, col("item_id"))))
@@ -331,20 +339,21 @@ object Ann {
    *
    * @return (sub INT, code INT, centv ARRAY<FLOAT>) — at most m*k rows, the
    *         compressed-index artifact (persist it alongside the IVF
-   *         centroids). Codes are DENSE 0..k'-1 per subspace (the ADC lookup
-   *         layout is positional — [[collectBooks]] enforces density) and
-   *         content-deterministic: books are value-sorted, so a retrained
-   *         book with identical centroids yields identical codes. Subspaces
-   *         whose cells die during Lloyd yield fewer than k codes. Like
-   *         [[kmeansCentroids]], the M-step's avg() merges partials in
+   *         centroids), as a local relation over the driver's rows, so
+   *         collecting it runs no job. Codes are DENSE 0..k'-1 per subspace
+   *         (the ADC lookup layout is positional — [[collectBooks]] enforces
+   *         density) and content-deterministic: books are value-sorted, so a
+   *         retrained book with identical centroids yields identical codes.
+   *         Subspaces whose cells die during Lloyd yield fewer than k codes.
+   *         Like [[kmeansCentroids]], the M-step's avg() merges partials in
    *         shuffle arrival order — persist the trained book when runs must
    *         agree to the last ulp.
    */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 16, iters: Int = 2): DataFrame = {
     require(m >= 1 && k >= 2 && k <= literalCentroidMax && m.toLong * k <= 1024,
-      s"m($m), k($k) must stay codegen-sized: k <= $literalCentroidMax, m*k <= 1024" +
-        " (larger books need a broadcast-join encode, same gating as IVF)")
+      s"m($m), k($k) must stay small: k <= $literalCentroidMax, m*k <= 1024" +
+        " (every query row carries an m*k-double lookup table)")
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     // deterministic hash-order init sample (one TakeOrdered job, same trick
@@ -366,7 +375,8 @@ object Ann {
           slice(col("cv"), sub * subDim + 1, subDim).as("sv"))): _*)).as("e"))
       .select(col("e.sub").as("sub"), col("e.sv").as("sv"))
     for (_ <- 0 until iters) {
-      val means = slices.withColumn("code", assignCode(col("sub"), col("sv"), books))
+      val means = slices
+        .withColumn("code", pq_assign(new PqBook(books), col("sub"), col("sv")))
         .select(col("sub"), col("code"), posexplode(col("sv")))
         .groupBy("sub", "code", "pos").agg(avg("col").as("mv"))
         .groupBy("sub", "code")
@@ -383,53 +393,24 @@ object Ann {
     import scala.math.Ordering.Implicits._
     val rows = books.zipWithIndex.flatMap { case (cents, sub) =>
       cents.sortBy(_.toIndexedSeq).zipWithIndex
-        .map { case (v, code) => (sub, code, v.toSeq) }
+        .map { case (v, code) => Row(sub, code, v.toSeq) }
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1))
-      .toDF("sub", "code", "centv")
+    localFrame(spark, rows, BookSchema)
   }
 
-  private def normHalf(v: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-    s / 2
-  }
+  /** [[pqCodebooks]]' artifact schema. */
+  private val BookSchema = new StructType()
+    .add("sub", "int", nullable = false)
+    .add("code", "int", nullable = false)
+    .add("centv", ArrayType(FloatType, containsNull = false))
 
-  /** Per-centroid (score, code) structs for one subspace: score is the
-    * L2-via-dot identity x.c - ||c||^2/2 (argmax == nearest centroid), the
-    * single measure shared by training, encoding and the ADC lookup table.
-    * Ties break to the max code everywhere. */
-  private def l2Structs(sv: org.apache.spark.sql.Column,
-      cents: Array[Array[Float]]): Seq[org.apache.spark.sql.Column] =
-    cents.toSeq.zipWithIndex.map { case (v, code) =>
-      struct((dot_product(sv, typedLit(v.toSeq)) - lit(normHalf(v))).as("score"),
-        lit(code).as("code"))
-    }
-
-  private def bestCode(sv: org.apache.spark.sql.Column,
-      cents: Array[Array[Float]]): org.apache.spark.sql.Column = {
-    val ss = l2Structs(sv, cents)
-    (if (ss.size == 1) ss.head else greatest(ss: _*)).getField("code")
-  }
-
-  /** Training E-step over the fused (sub, slice) frame: a sub-dispatched
-    * when-chain of per-subspace argmin expressions (m*k literal nodes,
-    * capped codegen-sized by the pqCodebooks require). */
-  private def assignCode(sub: org.apache.spark.sql.Column,
-      sv: org.apache.spark.sql.Column,
-      books: Array[Array[Array[Float]]]): org.apache.spark.sql.Column = {
-    val cases = books.zipWithIndex.map { case (cents, s) => (s, bestCode(sv, cents)) }
-    cases.tail.foldLeft(when(sub === lit(cases.head._1), cases.head._2)) {
-      case (acc, (s, cc)) => acc.when(sub === lit(s), cc)
-    }
-  }
-
-  /** Collected codebooks: books(sub)(code) = centroid floats. Bounded by
-    * construction (<= 1024 rows — the index artifact, not data). Rejects
-    * non-dense codes: the ADC lookup layout is positional, so a pruned/
-    * relabeled book would silently score against the wrong centroids. */
-  private def collectBooks(codebooks: DataFrame): Array[Array[Array[Float]]] =
-    codebooks.select("sub", "code", "centv").collect()
+  /** Collected codebook: books(sub)(code) = centroid floats. Bounded by
+    * construction (<= 1024 rows — the index artifact, not data; a
+    * [[pqCodebooks]] frame collects without a job). Rejects non-dense codes:
+    * the ADC lookup layout is positional, so a pruned/relabeled book would
+    * silently score against the wrong centroids. */
+  private def collectBooks(codebooks: DataFrame): PqBook =
+    new PqBook(codebooks.select("sub", "code", "centv").collect()
       .groupBy(_.getInt(0)).toArray.sortBy(_._1)
       .map { case (sub, rs) =>
         val sorted = rs.sortBy(_.getInt(1))
@@ -437,72 +418,53 @@ object Ann {
           s"codebook sub=$sub: codes must be dense 0..${sorted.length - 1} " +
             "(pqCodebooks output satisfies this)")
         sorted.map(_.getSeq[Float](2).toArray)
-      }
+      })
 
-  /** First-row dim check: a corpus/query whose vectors don't match the
-    * trained dim would otherwise be silently truncated by the dot kernel's
-    * min-length loop; per-row malformed data remains the caller's contract. */
-  private def requireDim(df: DataFrame, vecCol: String,
-      books: Array[Array[Array[Float]]], what: String): Unit = {
-    val dim = books.length * books.head.head.length
-    df.select(size(col(vecCol)).as("d")).limit(1).collect().headOption.foreach { r =>
-      require(r.getInt(0) == dim,
-        s"$what vector dim ${r.getInt(0)} != codebook dim $dim")
-    }
+  /** Dim check on the first non-null vector: a corpus/query whose vectors
+    * don't match the trained dim would otherwise be silently truncated by
+    * the kernels' min-length dot; per-row malformed data remains the
+    * caller's contract. The probe reads beneath the input's top-level
+    * repartitions ([[Bridge.withoutTopRepartitions]]), so it is one job
+    * and shuffles nothing, and it throws at plan time. */
+  private def requireDim(df: DataFrame, vecCol: String, book: PqBook,
+      what: String): Unit = {
+    val dim = book.m * book.subDim
+    Bridge.withoutTopRepartitions(df).where(col(vecCol).isNotNull)
+      .select(size(col(vecCol))).limit(1).collect().headOption.foreach { r =>
+        require(r.getInt(0) == dim,
+          s"$what vector dim ${r.getInt(0)} != codebook dim $dim")
+      }
   }
 
   /**
    * PQ-encode a corpus: (item_id, codes ARRAY<INT> length m) — nearest
    * centroid per slice by squared L2 via the dot identity (the measure
    * training and ADC lookup share; encode-argmin and lookup-table scoring
-   * must agree or ranking guarantees break). A narrow literal expression per
-   * subspace — zero shuffle, whole-stage codegen.
+   * must agree or ranking guarantees break). One [[pq_codes]] kernel per
+   * row — zero shuffle, whole-stage codegen.
    */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val books = collectBooks(codebooks)
-    requireDim(corpus, vecCol, books, "corpus")
-    pqEncodeWith(corpus, books, idCol, vecCol)
+    val book = collectBooks(codebooks)
+    requireDim(corpus, vecCol, book, "corpus")
+    pqEncodeWith(corpus, book, idCol, vecCol)
   }
 
-  private def pqEncodeWith(corpus: DataFrame, books: Array[Array[Array[Float]]],
+  private def pqEncodeWith(corpus: DataFrame, book: PqBook,
       idCol: String, vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("item_id"),
-      codesCol(books, col(vecCol)).as("codes"))
-
-  /** The m-code PQ encoding of one vector column — per-subspace argmin by
-    * the shared L2-via-dot measure, as a narrow literal expression. */
-  private def codesCol(books: Array[Array[Array[Float]]],
-      vecCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val subDim = books.head.head.length
-    array(books.toSeq.zipWithIndex.map { case (cents, sub) =>
-      bestCode(slice(vecCol, sub * subDim + 1, subDim), cents)
-    }: _*)
-  }
-
-  /** Per-query ADC lookup table: the m*k per-subspace scores
-    * (q_sub.c - ||c||^2/2 — descending total == ascending squared L2, which
-    * on L2-normalized corpus vectors ranks identically to cosine), flattened
-    * subspace-major — built ONCE per query as a narrow literal expression,
-    * then every candidate costs m array lookups + adds instead of a
-    * dim-length float dot (compute and memory traffic both drop by ~dim/m). */
-  private def withLut(q: DataFrame, books: Array[Array[Array[Float]]]): DataFrame = {
-    val subDim = books.head.head.length
-    val lutCols = books.toSeq.zipWithIndex.flatMap { case (cents, sub) =>
-      val sv = slice(col("qv"), sub * subDim + 1, subDim)
-      cents.toSeq.map(v => dot_product(sv, typedLit(v.toSeq)) - lit(normHalf(v)))
-    }
-    q.withColumn("lut", array(lutCols: _*))
-  }
+    corpus.select(col(idCol).as("item_id"), pq_codes(book, col(vecCol)).as("codes"))
 
   /** Sum of m LUT lookups per candidate — the codegen'd [[AdcLookup]]
-    * kernel with the per-subspace offsets baked in (the zip_with/aggregate
-    * HOF formulation evaluates its lambdas interpreted, outside whole-stage
-    * codegen — measured ~10x slower on the q50 cross-score). */
-  private def adcScore(books: Array[Array[Array[Float]]]): org.apache.spark.sql.Column = {
-    val offsets = books.map(_.length).scanLeft(0)(_ + _).init
-    adc_lookup(col("codes"), col("lut"), offsets.toSeq)
-  }
+    * kernel over the [[pq_lut]] table (the per-query m*k scores
+    * q_sub.c - ||c||^2/2, subspace-major: descending total == ascending
+    * squared L2, which on L2-normalized corpus vectors ranks identically to
+    * cosine), with the per-subspace offsets baked in. Each candidate costs
+    * m array lookups + adds instead of a dim-length float dot (the
+    * zip_with/aggregate HOF formulation evaluates its lambdas interpreted,
+    * outside whole-stage codegen — measured ~10x slower on the q50
+    * cross-score). */
+  private def adcScore(book: PqBook): org.apache.spark.sql.Column =
+    adc_lookup(col("codes"), col("lut"), book.offsets.toSeq)
 
   /**
    * ADC top-k over a PQ-compressed corpus. Pairs are generated id-only and
@@ -540,16 +502,15 @@ object Ann {
    */
   def pqScorePairs(pairs: DataFrame, corpus: DataFrame, queries: DataFrame,
       codebooks: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val books = collectBooks(codebooks)
-    requireDim(corpus, vecCol, books, "corpus")
-    requireDim(queries, vecCol, books, "query")
-    val q = withLut(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), books)
-      .select("query_id", "lut")
+    val book = collectBooks(codebooks)
+    requireDim(corpus, vecCol, book, "corpus")
+    requireDim(queries, vecCol, book, "query")
+    val q = queries.select(col(idCol).as("query_id"),
+      pq_lut(book, col(vecCol)).as("lut"))
     pairs.select("query_id", "item_id")
-      .join(pqEncodeWith(corpus, books, idCol, vecCol), "item_id")
+      .join(pqEncodeWith(corpus, book, idCol, vecCol), "item_id")
       .join(q, "query_id")
-      .withColumn("adc", adcScore(books))
+      .withColumn("adc", adcScore(book))
       .select("query_id", "item_id", "adc")
   }
 
@@ -568,21 +529,17 @@ object Ann {
         vec_sub(col("cv"), col("centv")).as("rv"))
 
   /** Re-root a centroid table on its collected rows (nlist rows — the index
-    * artifact, one job), so the several consumers below do not re-execute a
-    * possibly corpus-sized centroid PLAN each ([[sampleCentroids]] is a
-    * corpus-wide TakeOrdered). Re-localizing an already-local frame costs
-    * one trivial job over the parallelized rows, so composed searches can
+    * artifact), so the several consumers below do not re-execute a possibly
+    * corpus-sized centroid PLAN each ([[sampleCentroids]] is a corpus-wide
+    * TakeOrdered). The result is a local relation, so re-localizing it (or a
+    * [[kmeansCentroids]] frame) runs no job, and composed searches can
     * localize once up front and pass the result down. Returns the collected
     * rows too — [[coarsePairs]] derives its literal-path centroid array from
     * them without a second collect. */
-  private def localizeCentroids(centroids: DataFrame)
-      : (DataFrame, Array[org.apache.spark.sql.Row]) = {
+  private def localizeCentroids(centroids: DataFrame): (DataFrame, Array[Row]) = {
     val proj = centroids.select("cent_id", "centv")
     val rows = proj.collect()
-    val spark = centroids.sparkSession
-    (spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), proj.schema),
-      rows)
+    (localFrame(centroids.sparkSession, rows, proj.schema), rows)
   }
 
   /**
@@ -618,27 +575,26 @@ object Ann {
   def pqResidualScorePairs(pairs: DataFrame, corpus: DataFrame,
       queries: DataFrame, centroids: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val books = collectBooks(codebooks)
-    requireDim(corpus, vecCol, books, "corpus")
-    requireDim(queries, vecCol, books, "query")
+    val book = collectBooks(codebooks)
+    requireDim(corpus, vecCol, book, "corpus")
+    requireDim(queries, vecCol, book, "query")
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val (localCents, cRows) = localizeCentroids(centroids)
     val codes = residualFrame(c, localCents, cRows.length.toLong)
-      .select(col("item_id"), col("cell"), codesCol(books, col("rv")).as("codes"))
+      .select(col("item_id"), col("cell"), pq_codes(book, col("rv")).as("codes"))
     val withCells = pairs.select("query_id", "item_id").join(codes, "item_id")
-    // the query residual rides the "qv" column so withLut's contract applies
     val qres = withCells.select("query_id", "cell").distinct()
       .join(q, "query_id")
       .join(broadcast(localCents.select(col("cent_id").as("cell"), col("centv"))),
         "cell")
       .select(col("query_id"), col("cell"),
         vec_sub(col("qv"), col("centv")).as("qv"))
-    val luts = withLut(qres, books)
-      .withColumn("qn", dot_product(col("qv"), col("qv")) / 2)
-      .select("query_id", "cell", "lut", "qn")
+    val luts = qres.select(col("query_id"), col("cell"),
+      pq_lut(book, col("qv")).as("lut"),
+      (dot_product(col("qv"), col("qv")) / 2).as("qn"))
     withCells.join(luts, Seq("query_id", "cell"))
-      .withColumn("adc", adcScore(books) - col("qn"))
+      .withColumn("adc", adcScore(book) - col("qn"))
       .select("query_id", "item_id", "adc")
   }
 
@@ -658,9 +614,9 @@ object Ann {
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
-    val books = collectBooks(codebooks)
-    requireDim(corpus, vecCol, books, "corpus")
-    requireDim(queries, vecCol, books, "query")
+    val book = collectBooks(codebooks)
+    requireDim(corpus, vecCol, book, "corpus")
+    requireDim(queries, vecCol, book, "query")
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // localize once: a non-local centroid PLAN (a corpus-wide sample) must
@@ -669,7 +625,7 @@ object Ann {
     val cents = rows.map(r => (r.get(0), r.getSeq[Float](1).toArray))
     // the single corpus pass: cell assignment + residual encode, fused
     val codes = residualFrame(c, localCents, rows.length.toLong)
-      .select(col("item_id"), col("cell"), codesCol(books, col("rv")).as("codes"))
+      .select(col("item_id"), col("cell"), pq_codes(book, col("rv")).as("codes"))
     val probes = probeCells(q, localCents, cents, nProbe)
     val cand = probes.select("query_id", "cell").join(codes, "cell")
       .where(col("query_id") =!= col("item_id"))
@@ -681,11 +637,11 @@ object Ann {
         "cell")
       .select(col("query_id"), col("cell"),
         vec_sub(col("qv"), col("centv")).as("qv"))
-    val luts = withLut(qres, books)
-      .withColumn("qn", dot_product(col("qv"), col("qv")) / 2)
-      .select("query_id", "cell", "lut", "qn")
+    val luts = qres.select(col("query_id"), col("cell"),
+      pq_lut(book, col("qv")).as("lut"),
+      (dot_product(col("qv"), col("qv")) / 2).as("qn"))
     cand.join(luts, Seq("query_id", "cell"))
-      .withColumn("adc", adcScore(books) - col("qn"))
+      .withColumn("adc", adcScore(book) - col("qn"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("adc").desc, col("item_id"))))

@@ -63,11 +63,13 @@ object CandidateGen {
     val bigPairs =
       if (saltOversized) saltedAllPairs(big, maxBucketSize)
       else
-        // each row meets the rows ranked 1..neighborhood after it
+        // each row meets the rows ranked 1..neighborhood after it; a row
+        // listed twice in one bucket meets its own copy, which a < b drops
         big.select(col("key"), col("id").as("a"),
             explode(sequence(col("rn") + 1, col("rn") + neighborhood)).as("rn"))
           .join(big.select(col("key"), col("rn"), col("id").as("b")),
             Seq("key", "rn"))
+          .where(col("a") < col("b"))
           .select("a", "b")
 
     allPairs.union(bigPairs).distinct()

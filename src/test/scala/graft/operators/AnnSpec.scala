@@ -175,6 +175,49 @@ class AnnSpec extends SparkSpec {
     }
   }
 
+  test("pq: a null first vector passes the dim check and gets the last codes") {
+    // size(NULL) is NULL under ANSI: a dim probe that read the first row
+    // would fail on it. The null row encodes like a vector whose every
+    // centroid ties: the last code of each subspace
+    val books = Seq(
+      (0, 0, Seq(1f, 0f)), (0, 1, Seq(0f, 1f)),
+      (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f)))
+      .toDF("sub", "code", "centv")
+    val df = Seq((1L, null: Array[Float]), (2L, Array(1f, 0f, 0f, 1f)))
+      .toDF("vec_id", "embedding")
+    val codes = Ann.pqEncode(df, books, "vec_id", "embedding")
+      .as[(Long, Seq[Int])].collect().toMap
+    assert(codes == Map(1L -> Seq(1, 1), 2L -> Seq(0, 1)))
+    val top = Ann.pqTopK(df, df, books, "vec_id", "embedding", k = 1)
+      .select("query_id", "item_id").as[(Long, Long)].collect().toSet
+    assert(top == Set((1L, 2L), (2L, 1L)))
+  }
+
+  test("pq: artifacts collect without a job and the dim probes shuffle nothing") {
+    import graft.obs.StageMetrics
+    val df = vecs.toDF("vec_id", "embedding")
+    val books = Ann.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 16, iters = 1)
+    val cents = Ann.kmeansCentroids(df, "vec_id", "embedding", nlist = 8, iters = 1)
+    assert(StageMetrics.measure(spark)(books.collect())._2.jobs.isEmpty)
+    assert(StageMetrics.measure(spark)(cents.collect())._2.jobs.isEmpty)
+    // an RDD-backed input spread by a round-robin repartition, as
+    // SparkEntry's inputs are: the probes read beneath the repartition
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(vecs, 2))
+      .toDF("vec_id", "embedding")
+    val corpus = rdd.repartition(4).select("vec_id", "embedding")
+    val queries = rdd.repartition(3).where($"vec_id" < 10)
+      .select(($"vec_id" + 1000L).as("vec_id"), $"embedding")
+    val pairs = queries.select($"vec_id".as("query_id"),
+      ($"vec_id" - 1000L).as("item_id"))
+    val (scored, setup) = StageMetrics.measure(spark)(
+      Ann.pqScorePairs(pairs, corpus, queries, books, "vec_id", "embedding"))
+    assert(setup.jobs.size <= 2, setup.summary)
+    assert(setup.total.shuffleWriteBytes == 0L, setup.summary)
+    val want = Ann.pqScorePairs(pairs, df, queries, books, "vec_id", "embedding")
+      .as[(Long, Long, Double)].collect().toSet
+    assert(want.size == 10 && scored.as[(Long, Long, Double)].collect().toSet == want)
+  }
+
   test("pq: identical vectors encode identically, codes dense and bounded") {
     val df = vecs.toDF("vec_id", "embedding")
     val books = Ann.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 16, iters = 1)

@@ -161,6 +161,16 @@ class CandidateGenSpec extends SparkSpec {
     assert(pairs.count() == 100L * 4 - 4 * 5 / 2)
   }
 
+  test("a row listed twice in an oversized bucket yields no self-pair") {
+    val keyed = ((1L to 6L) :+ 3L).map(i => (i, 7L)).toDF("id", "key")
+    val got = CandidateGen.pairsFromBuckets(keyed, maxBucketSize = 4,
+      neighborhood = 2).as[(Long, Long)].collect()
+    assert(got.forall { case (a, b) => a < b }, got.toSeq)
+    // ranks 1..7 over ids 1,2,3,3,4,5,6: each row's two successors, minus (3, 3)
+    assert(got.toSet == Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L),
+      (4L, 5L), (4L, 6L), (5L, 6L)))
+  }
+
   test("both generators reject a non-positive neighborhood") {
     // neighborhood <= 0 would silently emit nothing for oversized keys
     val keyed = Seq((1L, 7L), (2L, 7L)).toDF("id", "key")
@@ -194,6 +204,7 @@ class CandidateGenSpec extends SparkSpec {
       val ids = g.map(_._1).sorted
       if (ids.size <= cap) for (a <- ids; b <- ids if a < b) yield (a, b)
       else ids.indices.flatMap(i => ids.slice(i + 1, i + 1 + w).map((ids(i), _)))
+        .filter { case (a, b) => a < b }
     }.toSet
     assert(got.toSet == want)
     assert(got.length == want.size, "output must be distinct")
