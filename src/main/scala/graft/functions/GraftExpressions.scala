@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext,
+  ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -607,7 +609,7 @@ final class PqBook(val books: Array[Array[Array[Float]]]) extends Serializable {
     var c = 1
     while (c < books(sub).length) {
       val s = score(v, from, len, sub, c)
-      if (org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s, top) >= 0) {
+      if (SQLOrderingUtil.compareDoubles(s, top) >= 0) {
         code = c; top = s
       }
       c += 1
@@ -693,7 +695,7 @@ case class PqCodes(child: Expression, book: PqBook) extends UnaryExpression {
   override def eval(input: InternalRow): Any =
     book.codes(child.eval(input).asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    PqBook.genBookCall(ctx, ev, book, child, "codes")
+    BookCall.gen(ctx, ev, this, book, "codes")
   override protected def withNewChildInternal(newChild: Expression): PqCodes =
     copy(child = newChild)
 }
@@ -707,7 +709,7 @@ case class PqLut(child: Expression, book: PqBook) extends UnaryExpression {
   override def eval(input: InternalRow): Any =
     book.lut(child.eval(input).asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    PqBook.genBookCall(ctx, ev, book, child, "lut")
+    BookCall.gen(ctx, ev, this, book, "lut")
   override protected def withNewChildInternal(newChild: Expression): PqLut =
     copy(child = newChild)
 }
@@ -741,17 +743,119 @@ case class PqAssign(left: Expression, right: Expression, book: PqBook)
     copy(left = l, right = r)
 }
 
-object PqBook {
-  /** Generated code of a never-null `book.<method>(child)` kernel call
-    * that passes a null child through as null. */
-  private[functions] def genBookCall(ctx: CodegenContext, ev: ExprCode,
-      book: PqBook, child: Expression, method: String): ExprCode = {
+/** IVF centroids held on the driver: non-null `ids` (Catalyst values of the
+  * `cent_id` type, ascending in Spark's order) beside their float vectors,
+  * read by [[IvfAssign]] and [[IvfProbe]] through `addReferenceObj`. A
+  * centroid's sim is [[HashKernels.cosine]](vec, centroid); centroids rank
+  * as `greatest`/`array_sort` order `struct(sim, cent_id)`: sims under
+  * Spark's double ordering (NaN largest, -0.0 == 0.0), ties to the larger
+  * id, and a null vector's sims are all null, so only the id ranks.
+  * Equality is by value, so plans over equal books can share an exchange. */
+final class CentroidBook private (val idType: DataType, val ids: Array[Any],
+    val vecs: Array[Array[Float]]) extends Serializable {
+  require(ids.nonEmpty, "centroids: the centroid table is empty")
+  val nlist: Int = ids.length
+
+  /** Index of the top centroid; ids ascend, so the later index wins a tie. */
+  private def best(vec: ArrayData): Int =
+    if (vec == null) nlist - 1
+    else {
+      val v = vec.toFloatArray()
+      var b = 0; var top = HashKernels.cosine(v, vecs(0)); var c = 1
+      while (c < nlist) {
+        val s = HashKernels.cosine(v, vecs(c))
+        if (SQLOrderingUtil.compareDoubles(s, top) >= 0) { b = c; top = s }
+        c += 1
+      }
+      b
+    }
+
+  /** The nearest centroid's id: the vector's cell. */
+  def assign(vec: ArrayData): Any = ids(best(vec))
+
+  /** The ids of the top min(nProbe, nlist) centroids, best first. */
+  def probe(vec: ArrayData, nProbe: Int): ArrayData = {
+    val ranked =
+      if (vec == null) Array.range(0, nlist).reverse
+      else {
+        val v = vec.toFloatArray()
+        val sims = vecs.map(HashKernels.cosine(v, _))
+        Array.range(0, nlist).sortWith { (a, b) =>
+          val c = SQLOrderingUtil.compareDoubles(sims(a), sims(b))
+          c > 0 || (c == 0 && a > b)
+        }
+      }
+    new GenericArrayData(ranked.take(nProbe).map(ids(_)))
+  }
+
+  private def parts: Array[AnyRef] = Array(idType, ids, vecs)
+  override def equals(o: Any): Boolean = o match {
+    case b: CentroidBook => java.util.Arrays.deepEquals(parts, b.parts)
+    case _ => false
+  }
+  override lazy val hashCode: Int = java.util.Arrays.deepHashCode(parts)
+  /** Plan strings name the shape, never the floats. */
+  override def toString: String =
+    s"CentroidBook(nlist=$nlist, dim=${vecs.head.length}, cent_id=${idType.simpleString})"
+}
+
+object CentroidBook {
+  /** A book over collected (cent_id, centv) rows whose cent_id has type
+    * `idType`. */
+  def apply(idType: DataType, rows: Seq[Row]): CentroidBook = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val byId = InterpretedOrdering.forSchema(Seq(idType))
+    val cents = rows.map { r =>
+      require(!r.isNullAt(0) && !r.isNullAt(1), s"centroids: null cent_id or centv in $r")
+      (toCatalyst(r.get(0)), r.getSeq[Float](1).toArray)
+    }.sortWith((a, b) => byId.compare(InternalRow(a._1), InternalRow(b._1)) < 0)
+    new CentroidBook(idType, cents.map(_._1).toArray, cents.map(_._2).toArray)
+  }
+}
+
+/** array<float> -> the nearest centroid's cent_id ([[CentroidBook.assign]]).
+  * Never null: a null vector's cell is the max cent_id. */
+case class IvfAssign(child: Expression, book: CentroidBook) extends UnaryExpression {
+  override def dataType: DataType = book.idType
+  override def nullable: Boolean = false
+  override def prettyName: String = "ivf_assign"
+  override def eval(input: InternalRow): Any =
+    book.assign(child.eval(input).asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    BookCall.gen(ctx, ev, this, book, "assign")
+  override protected def withNewChildInternal(newChild: Expression): IvfAssign =
+    copy(child = newChild)
+}
+
+/** array<float> -> the cent_ids of its top min(nProbe, nlist) cells in
+  * `reverse(array_sort(array(struct(sim, cent_id), ...)))` order. */
+case class IvfProbe(child: Expression, book: CentroidBook, nProbe: Int)
+    extends UnaryExpression {
+  require(nProbe >= 1, s"nProbe($nProbe) must be positive")
+  override def dataType: DataType = ArrayType(book.idType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "ivf_probe"
+  override def eval(input: InternalRow): Any =
+    book.probe(child.eval(input).asInstanceOf[ArrayData], nProbe)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    BookCall.gen(ctx, ev, this, book, "probe", s", $nProbe")
+  override protected def withNewChildInternal(newChild: Expression): IvfProbe =
+    copy(child = newChild)
+}
+
+private[functions] object BookCall {
+  /** Generated code of `e`'s never-null `book.<method>(child<args>)` call,
+    * which passes a null child through as null. */
+  def gen(ctx: CodegenContext, ev: ExprCode, e: UnaryExpression, book: AnyRef,
+      method: String, args: String = ""): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val ref = ctx.addReferenceObj("pqBook", book, classOf[PqBook].getName)
-    val c = child.genCode(ctx)
+    val ref = ctx.addReferenceObj("book", book, book.getClass.getName)
+    val c = e.child.genCode(ctx)
+    val t = e.dataType
     ev.copy(code = code"""
       ${c.code}
-      ArrayData ${ev.value} = $ref.$method(${c.isNull} ? null : ${c.value});""",
+      ${CodeGenerator.javaType(t)} ${ev.value} = (${CodeGenerator.boxedType(t)})
+        $ref.$method(${c.isNull} ? null : ${c.value}$args);""",
       isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 }

@@ -89,6 +89,14 @@ package object functions {
   def pq_assign(book: PqBook, sub: Column, slice: Column): Column =
     column(PqAssign(expression(sub), expression(slice), book))
 
+  /** A vector's IVF cell: the cent_id of its nearest centroid. */
+  def ivf_assign(book: CentroidBook, vec: Column): Column =
+    column(IvfAssign(expression(vec), book))
+
+  /** The cent_ids of a vector's top min(nProbe >= 1, nlist) IVF cells. */
+  def ivf_probe(book: CentroidBook, vec: Column, nProbe: Int): Column =
+    column(IvfProbe(expression(vec), book, nProbe))
+
   def srp_bucket(vec: Column, bits: Int, seed: Long = 42L): Column =
     column(SrpBucket(expression(vec), bits, seed))
 

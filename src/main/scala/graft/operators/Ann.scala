@@ -36,12 +36,6 @@ object Ann {
   }
 
   /**
-   * LSH-bucketed top-k: multi-table sign-random-projection buckets restrict
-   * the scored candidates to colliding (query, item) pairs — candidate count
-   * scales with bucket occupancy, not corpus size. Recall is tunable via
-   * (srpBits down, tables up).
-   */
-  /**
    * IVF (inverted-file) top-k — the FAISS `IndexIVFFlat` shape
    * (reference: ea/sim/main/methods/index/faiss.py:10-83) as a declarative
    * plan: the corpus is coarsely quantized into `nlist` cells around sampled
@@ -50,12 +44,11 @@ object Ann {
    * the full corpus.
    *
    * Centroids are a deterministic hash-order sample of the corpus
-   * (`TakeOrderedAndProject` — per-partition top-nlist then driver merge, no
-   * full sort shuffle; content-derived order, so re-runs pick identical
-   * centroids); [[kmeansCentroids]] refines them. The nlist-row centroid
-   * table is collected and inlined as literals, so cell assignment and probe
-   * selection are NARROW per-row expressions (whole-stage codegen, zero
-   * shuffle); the only shuffles are the cell equi-join and the final rank.
+   * ([[sampleCentroids]]); [[kmeansCentroids]] refines them. The nlist-row
+   * centroid table is collected into one driver-held [[CentroidBook]], so cell
+   * assignment ([[ivf_assign]]) and probe selection ([[ivf_probe]]) are
+   * NARROW per-row kernels (whole-stage codegen, zero shuffle) at any
+   * nlist; the only shuffles are the cell equi-join and the final rank.
    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
@@ -72,12 +65,11 @@ object Ann {
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame =
     ivfSearch(corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      centroids.select("cent_id", "centv"), k, nProbe)
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), centroids, k, nProbe)
 
   /**
    * Distributed Lloyd refinement of the IVF coarse quantizer: E-step is the
-   * same broadcast assignment plan the search uses; M-step recomputes each
+   * same [[ivf_assign]] kernel the search uses; M-step recomputes each
    * cell's mean via posexplode + groupBy(cell, dim). Two shuffles per
    * iteration; centroids (k * dim floats — tiny by construction) round-trip
    * through the driver each iteration, which truncates lineage and is exactly
@@ -91,21 +83,18 @@ object Ann {
    */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int = 3): DataFrame = {
-    val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    var cents = sampleCentroids(c, nlist)
-    for (_ <- 0 until iters) {
-      val means = assignCellsAuto(c, cents, nlist.toLong)
-        .select(col("cell"), posexplode(col("cv")))
-        .groupBy("cell", "pos").agg(avg("col").as("m"))
-        .groupBy("cell")
-        .agg(collect_list(struct(col("pos"), col("m"))).as("dims"))
-        .select(col("cell").as("cent_id"),
-          transform(array_sort(col("dims")), s => s("m").cast("float")).as("centv"))
+    val init = localizeCentroids(sampleCentroids(c, nlist))
+    (0 until iters).foldLeft(init) { case ((_, book), _) =>
       // driver round-trip: k rows, truncates the per-iteration lineage
-      cents = localFrame(spark, means.collect(), means.schema)
-    }
-    cents
+      localizeCentroids(
+        c.select(ivf_assign(book, col("cv")).as("cell"), posexplode(col("cv")))
+          .groupBy("cell", "pos").agg(avg("col").as("m"))
+          .groupBy("cell")
+          .agg(collect_list(struct(col("pos"), col("m"))).as("dims"))
+          .select(col("cell").as("cent_id"),
+            transform(array_sort(col("dims")), s => s("m").cast("float")).as("centv")))
+    }._1
   }
 
   /** A local relation over driver-held artifact rows: scans and collects of
@@ -122,72 +111,6 @@ object Ann {
     c.orderBy(xxhash64(col("item_id")), col("item_id")).limit(nlist)
       .select(col("item_id").as("cent_id"), col("cv").as("centv"))
 
-  /** Literal-path ceiling: centroid vectors are inlined as literals only up
-    * to this many cells. greatest() over nlist struct columns and an
-    * nlist-element array_sort are per-row expression TREES that grow with
-    * nlist — past a few hundred cells the generated method blows the JVM
-    * size limit and whole-stage codegen silently falls back to interpreted
-    * evaluation. Above the ceiling, centroids stay a DataFrame: assignment
-    * and probing run as a broadcast join + aggregate/window (see
-    * [[assignCellsAuto]]), keeping every expression codegen-sized at
-    * real-IVF nlist (~2^16 at 10^9 vectors). */
-  private[operators] val literalCentroidMax = 256
-
-  /** Per-centroid (sim, cent_id) struct columns against literal centroid
-    * vectors (small-nlist path only, see [[literalCentroidMax]]): both cell
-    * assignment and probe selection become NARROW per-row expressions inside
-    * whole-stage codegen — zero shuffle. */
-  private def centSimStructs(vecCol: org.apache.spark.sql.Column,
-      cents: Array[(Any, Array[Float])]): Seq[org.apache.spark.sql.Column] =
-    cents.toSeq.map { case (id, v) =>
-      struct(cosine_sim(vecCol, typedLit(v.toSeq)).as("sim"), lit(id).as("cent_id"))
-    }
-
-  /** E-step: nearest-centroid cell per item — narrow map, deterministic
-    * tie-break (max sim, then max cent_id — struct ordering). */
-  private def assignCells(c: DataFrame, cents: Array[(Any, Array[Float])]): DataFrame = {
-    val sims = centSimStructs(col("cv"), cents)
-    val best = if (sims.size == 1) sims.head else greatest(sims: _*)
-    c.withColumn("cell", best.getField("cent_id"))
-  }
-
-  private def collectCents(centroids: DataFrame): Array[(Any, Array[Float])] =
-    centroids.collect().map(r => (r.get(0), r.getSeq[Float](1).toArray))
-
-  /** Nearest-centroid cell per corpus row, path gated on centroid count:
-    * literal expressions under [[literalCentroidMax]], broadcast join +
-    * max_by aggregate above. Both paths break ties identically (max sim,
-    * then max cent_id) and return (item_id, cv, cell). The big path's
-    * aggregate collapses the nlist-way fan-out map-side (every replicated
-    * row of an item sits in the same partition the broadcast join emitted it
-    * in), so the single shuffle carries one row per item. */
-  private def assignCellsAuto(c: DataFrame, centroids: DataFrame,
-      nlist: Long): DataFrame =
-    if (nlist <= literalCentroidMax) assignCells(c, collectCents(centroids))
-    else assignCellsBig(c, centroids)
-
-  /** The one gate every search/encode/assign path goes through once the
-    * centroid table is localized: literal expressions under
-    * [[literalCentroidMax]], broadcast join + max_by above. Single
-    * definition so the tie-break and the gating can never diverge between
-    * [[ivfPqTopK]], [[coarsePairs]] and [[cellAssignments]]. */
-  private def assignLocalized(c: DataFrame, localCents: DataFrame,
-      rows: Array[Row]): DataFrame =
-    if (rows.length <= literalCentroidMax)
-      assignCells(c, rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)))
-    else assignCellsBig(c, localCents)
-
-  /** Large-nlist assignment: broadcast join + map-side max_by collapse. */
-  private def assignCellsBig(c: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = broadcast(centroids
-      .select(col("cent_id"), col("centv")))
-    c.crossJoin(cents)
-      .withColumn("sim", cosine_sim(col("cv"), col("centv")))
-      .groupBy("item_id")
-      .agg(first(col("cv")).as("cv"),
-        max_by(col("cent_id"), struct(col("sim"), col("cent_id"))).as("cell"))
-  }
-
   private def ivfSearch(c: DataFrame, q: DataFrame, centroids: DataFrame,
       k: Int, nProbe: Int): DataFrame =
     coarsePairs(c, q, centroids, nProbe)
@@ -203,8 +126,7 @@ object Ann {
   def ivfCandidates(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, nProbe: Int): DataFrame =
     coarsePairs(corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      centroids.select("cent_id", "centv"), nProbe)
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), centroids, nProbe)
       .select("query_id", "item_id")
 
   /**
@@ -228,13 +150,11 @@ object Ann {
     requireDim(queries, vecCol, book, "query")
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val (localCents, rows) = localizeCentroids(centroids)
-    val cents = rows.map(r => (r.get(0), r.getSeq[Float](1).toArray))
-    val assigned = assignLocalized(c, localCents, rows)
+    val (_, cents) = localizeCentroids(centroids)
     // the single corpus pass: assignment + encode, fused
-    val codes = assigned.select(col("item_id"), col("cell"),
+    val codes = c.select(col("item_id"), ivf_assign(cents, col("cv")).as("cell"),
       pq_codes(book, col("cv")).as("codes"))
-    val cand = probeCells(q, localCents, cents, nProbe)
+    val cand = probeCells(q, cents, nProbe)
       .select("query_id", "cell").join(codes, "cell")
       .where(col("query_id") =!= col("item_id"))
     val qlut = q.select(col("query_id"), pq_lut(book, col("qv")).as("lut"))
@@ -253,68 +173,33 @@ object Ann {
    * for cluster-restricted operators — e.g. SemDeDup-style semantic dedup
    * ([[Dedup.semanticDedupGroups]]) buckets the corpus by cell and only
    * scores within-cell pairs — and for maintaining a persisted assignment
-   * table alongside the centroid artifact between corpus snapshots.
-   * Same nlist-gated path and (max sim, max cent_id) tie-break as the IVF
-   * search itself, so an assignment table built here is exactly the one
-   * [[ivfTopKWith]] would recompute.
+   * table alongside the centroid artifact between corpus snapshots. Every
+   * row keeps its own cell from the search's own [[ivf_assign]] kernel, so
+   * this table is exactly the one [[ivfTopKWith]] would recompute.
    */
   def cellAssignments(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
-    val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    val (localCents, rows) = localizeCentroids(centroids.select("cent_id", "centv"))
-    assignLocalized(c, localCents, rows)
-      .select(col("item_id").as("id"), col("cell"))
+    val (_, cents) = localizeCentroids(centroids)
+    corpus.select(col(idCol).as("id"), ivf_assign(cents, col(vecCol)).as("cell"))
   }
 
   /** (query_id, qv, item_id, cv) pairs sharing a probed cell — the shared
     * candidate stage of [[ivfSearch]]/[[ivfCandidates]]. */
   private def coarsePairs(c: DataFrame, q: DataFrame, centroids: DataFrame,
       nProbe: Int): DataFrame = {
-    // The centroid table is nlist rows by construction (the index artifact —
-    // k * dim floats, tiny), but its PLAN can be a full corpus sample
-    // (sampleCentroids is a TakeOrdered over every vector). Collect it
-    // exactly ONCE and re-root both the assignment and probe sides on the
-    // collected rows — a count + two separate collects would execute that
-    // corpus-sample job three times per search.
-    val (localCents, rows) = localizeCentroids(centroids)
-    val cents = rows.map(r => (r.get(0), r.getSeq[Float](1).toArray))
-    val assigned = assignLocalized(c, localCents, rows)
-    probeCells(q, localCents, cents, nProbe).join(assigned, "cell")
+    val (_, cents) = localizeCentroids(centroids)
+    probeCells(q, cents, nProbe)
+      .join(c.withColumn("cell", ivf_assign(cents, col("cv"))), "cell")
       .where(col("query_id") =!= col("item_id"))
   }
 
-  /** Per-query probe cells (query_id, qv, cell): descending (sim, cent_id)
-    * order — the SAME tie-break as cell assignment, so an item's assigned
-    * cell is always reachable by a query with the same vector (sim-tied
-    * centroids would otherwise send assignment to the max cent_id and the
-    * probes to the min). Small nlist: narrow expression over inlined literal
-    * centroids — no window, no shuffle. Large nlist: the whole centroid
-    * table rides as ONE broadcast array<struct> row and each query computes
-    * sims + sort + slice map-side over that array — still zero shuffle.
-    * (The previous large-nlist shape — broadcast join + per-query window —
-    * pushed queries x nlist rows through the window's sort exchange: a
-    * 65536x fan-out per query at real-IVF nlist ~2^16. The transform
-    * lambda's sims evaluate interpreted rather than codegen'd, but that
-    * prices nlist multiplies per QUERY row — the small dimension — against
-    * shuffling the full fan-out.) */
-  private def probeCells(q: DataFrame, localCents: DataFrame,
-      cents: Array[(Any, Array[Float])], nProbe: Int): DataFrame =
-    if (cents.length <= literalCentroidMax) {
-      q.withColumn("probe", explode(
-          slice(reverse(array_sort(array(centSimStructs(col("qv"), cents): _*))),
-            1, math.min(nProbe, cents.length))))
-        .select(col("query_id"), col("qv"), col("probe.cent_id").as("cell"))
-    } else {
-      val centsRow = broadcast(localCents.agg(
-        collect_list(struct(col("centv"), col("cent_id"))).as("cents")))
-      q.crossJoin(centsRow)
-        .withColumn("probe", explode(slice(reverse(array_sort(
-            transform(col("cents"), c =>
-              struct(cosine_sim(col("qv"), c.getField("centv")).as("sim"),
-                c.getField("cent_id").as("cent_id"))))),
-          1, nProbe)))
-        .select(col("query_id"), col("qv"), col("probe.cent_id").as("cell"))
-    }
+  /** Per-query probe cells (query_id, qv, cell), exploded from one
+    * [[ivf_probe]] per query row (no window, no shuffle). Its tie-break is
+    * [[ivf_assign]]'s, so an item's cell is always reachable by a query with
+    * the same vector. */
+  private def probeCells(q: DataFrame, cents: CentroidBook, nProbe: Int): DataFrame =
+    q.select(col("query_id"), col("qv"),
+      explode(ivf_probe(cents, col("qv"), nProbe)).as("cell"))
 
   // --- product quantization (PQ / ADC) ---------------------------------
 
@@ -351,8 +236,8 @@ object Ann {
    */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 16, iters: Int = 2): DataFrame = {
-    require(m >= 1 && k >= 2 && k <= literalCentroidMax && m.toLong * k <= 1024,
-      s"m($m), k($k) must stay small: k <= $literalCentroidMax, m*k <= 1024" +
+    require(m >= 1 && k >= 2 && k <= 256 && m.toLong * k <= 1024,
+      s"m($m), k($k) must stay small: k <= 256, m*k <= 1024" +
         " (every query row carries an m*k-double lookup table)")
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
@@ -521,25 +406,22 @@ object Ann {
     * on the nlist-row centroid table; the subtraction is the codegen'd
     * [[graft.functions.VecSub]] kernel. */
   private def residualFrame(c: DataFrame, localCents: DataFrame,
-      nlist: Long): DataFrame =
-    assignCellsAuto(c, localCents, nlist)
+      cents: CentroidBook): DataFrame =
+    c.withColumn("cell", ivf_assign(cents, col("cv")))
       .join(broadcast(localCents.select(col("cent_id").as("cell"), col("centv"))),
         "cell")
       .select(col("item_id"), col("cell"),
         vec_sub(col("cv"), col("centv")).as("rv"))
 
-  /** Re-root a centroid table on its collected rows (nlist rows — the index
-    * artifact), so the several consumers below do not re-execute a possibly
-    * corpus-sized centroid PLAN each ([[sampleCentroids]] is a corpus-wide
-    * TakeOrdered). The result is a local relation, so re-localizing it (or a
-    * [[kmeansCentroids]] frame) runs no job, and composed searches can
-    * localize once up front and pass the result down. Returns the collected
-    * rows too — [[coarsePairs]] derives its literal-path centroid array from
-    * them without a second collect. */
-  private def localizeCentroids(centroids: DataFrame): (DataFrame, Array[Row]) = {
+  /** Collect a centroid table (nlist rows) ONCE: its PLAN may be a corpus-wide
+    * [[sampleCentroids]]. Returns the rows as a local relation, which the
+    * residual joins read and which re-localizes without a job, and as the
+    * [[CentroidBook]] the IVF kernels read. */
+  private def localizeCentroids(centroids: DataFrame): (DataFrame, CentroidBook) = {
     val proj = centroids.select("cent_id", "centv")
     val rows = proj.collect()
-    (localFrame(centroids.sparkSession, rows, proj.schema), rows)
+    (localFrame(centroids.sparkSession, rows, proj.schema),
+      CentroidBook(proj.schema("cent_id").dataType, rows.toSeq))
   }
 
   /**
@@ -556,9 +438,8 @@ object Ann {
       idCol: String, vecCol: String, m: Int, k: Int = 16,
       iters: Int = 2): DataFrame = {
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    val (localCents, rows) = localizeCentroids(centroids)
-    pqCodebooks(residualFrame(c, localCents, rows.length.toLong), "item_id", "rv",
-      m, k, iters)
+    val (localCents, cents) = localizeCentroids(centroids)
+    pqCodebooks(residualFrame(c, localCents, cents), "item_id", "rv", m, k, iters)
   }
 
   /**
@@ -580,22 +461,32 @@ object Ann {
     requireDim(queries, vecCol, book, "query")
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val (localCents, cRows) = localizeCentroids(centroids)
-    val codes = residualFrame(c, localCents, cRows.length.toLong)
+    val (localCents, cents) = localizeCentroids(centroids)
+    val codes = residualFrame(c, localCents, cents)
       .select(col("item_id"), col("cell"), pq_codes(book, col("rv")).as("codes"))
     val withCells = pairs.select("query_id", "item_id").join(codes, "item_id")
-    val qres = withCells.select("query_id", "cell").distinct()
-      .join(q, "query_id")
+    residualAdc(withCells,
+      withCells.select("query_id", "cell").distinct().join(q, "query_id"),
+      localCents, book)
+      .select("query_id", "item_id", "adc")
+  }
+
+  /** `cand` (query_id, cell, codes, ...) scored against the per-(query, cell)
+    * residual LUT built from `qCells` (query_id, cell, qv), minus the
+    * ||q - c||^2/2 bias that makes the score comparable across cells (the
+    * shift identity, see [[pqResidualScorePairs]]). */
+  private def residualAdc(cand: DataFrame, qCells: DataFrame,
+      localCents: DataFrame, book: PqBook): DataFrame = {
+    val luts = qCells
       .join(broadcast(localCents.select(col("cent_id").as("cell"), col("centv"))),
         "cell")
       .select(col("query_id"), col("cell"),
         vec_sub(col("qv"), col("centv")).as("qv"))
-    val luts = qres.select(col("query_id"), col("cell"),
-      pq_lut(book, col("qv")).as("lut"),
-      (dot_product(col("qv"), col("qv")) / 2).as("qn"))
-    withCells.join(luts, Seq("query_id", "cell"))
+      .select(col("query_id"), col("cell"),
+        pq_lut(book, col("qv")).as("lut"),
+        (dot_product(col("qv"), col("qv")) / 2).as("qn"))
+    cand.join(luts, Seq("query_id", "cell"))
       .withColumn("adc", adcScore(book) - col("qn"))
-      .select("query_id", "item_id", "adc")
   }
 
   /**
@@ -619,29 +510,15 @@ object Ann {
     requireDim(queries, vecCol, book, "query")
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    // localize once: a non-local centroid PLAN (a corpus-wide sample) must
-    // not execute once per downstream consumer
-    val (localCents, rows) = localizeCentroids(centroids)
-    val cents = rows.map(r => (r.get(0), r.getSeq[Float](1).toArray))
+    val (localCents, cents) = localizeCentroids(centroids)
     // the single corpus pass: cell assignment + residual encode, fused
-    val codes = residualFrame(c, localCents, rows.length.toLong)
+    val codes = residualFrame(c, localCents, cents)
       .select(col("item_id"), col("cell"), pq_codes(book, col("rv")).as("codes"))
-    val probes = probeCells(q, localCents, cents, nProbe)
+    val probes = probeCells(q, cents, nProbe)
     val cand = probes.select("query_id", "cell").join(codes, "cell")
       .where(col("query_id") =!= col("item_id"))
-    // per-(query, probed cell) residual LUT + the ||q - c||^2/2 bias that
-    // makes the emitted score comparable across cells (pqResidualScorePairs
-    // documents the shift identity)
-    val qres = probes
-      .join(broadcast(localCents.select(col("cent_id").as("cell"), col("centv"))),
-        "cell")
-      .select(col("query_id"), col("cell"),
-        vec_sub(col("qv"), col("centv")).as("qv"))
-    val luts = qres.select(col("query_id"), col("cell"),
-      pq_lut(book, col("qv")).as("lut"),
-      (dot_product(col("qv"), col("qv")) / 2).as("qn"))
-    cand.join(luts, Seq("query_id", "cell"))
-      .withColumn("adc", adcScore(book) - col("qn"))
+    // LUTs per (query, probed cell)
+    residualAdc(cand, probes, localCents, book)
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("adc").desc, col("item_id"))))
@@ -649,6 +526,12 @@ object Ann {
       .select("query_id", "item_id", "adc", "rank")
   }
 
+  /**
+   * LSH-bucketed top-k: multi-table sign-random-projection buckets restrict
+   * the scored candidates to colliding (query, item) pairs — candidate count
+   * scales with bucket occupancy, not corpus size. Recall is tunable via
+   * (srpBits down, tables up).
+   */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       srpBits: Int = 10, tables: Int = 8, seed: Long = 42L): DataFrame = {

@@ -316,9 +316,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q47: ivf assignment and probe selection are narrow (no cross join)") {
-    // centroids ride into the plan as literals: cell assignment and probe
-    // selection must be per-row expressions — no cartesian/nested-loop join,
-    // and the only window is the final per-query rank (partitioned)
+    // centroids ride into the plan as one driver-held book: cell assignment
+    // and probe selection must be per-row kernels — no cartesian/nested-loop
+    // join, and the only window is the final per-query rank (partitioned)
     val df = SparkEntry.queries("q47_ivf_ann_rank1")(spark, dir)
     val p = planOf(df)
     assert(!p.contains("CartesianProduct"), "cartesian product in ivf plan")

@@ -116,11 +116,10 @@ class AnnSpec extends SparkSpec {
     assert(trained >= 0.7, s"trained recall too low: $trained")
   }
 
-  test("large nlist (>= 1024) takes the broadcast-join path, full probe stays exact") {
-    // above literalCentroidMax the centroid vectors must NOT ride in as a
-    // per-row expression tree (greatest over 1024 structs would blow the
-    // generated-method size and fall back to interpreted eval) — they stay a
-    // broadcast relation and assignment/probing run as join + aggregate
+  test("nlist 1024: no nested-loop join, no floats in the plan, full probe exact") {
+    // at any nlist, cell assignment and probing are per-row kernels over one
+    // driver-held CentroidBook: no centroid cross join, and the plan names
+    // the book's shape instead of printing its floats
     val rng = new scala.util.Random(11)
     val big = (0L until 1200L).map(i => (i, Array.fill(16)(rng.nextFloat() - 0.5f)))
     val df = big.toDF("vec_id", "embedding")
@@ -130,8 +129,11 @@ class AnnSpec extends SparkSpec {
     val ivf = Ann.ivfTopK(df, queries, "vec_id", "embedding", 10,
       nlist = 1024, nProbe = 1024)
     val plan = ivf.queryExecution.executedPlan.toString
-    assert(!plan.contains("greatest("),
-      "literal-centroid expression path used at nlist=1024")
+    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+      "centroid cross join in the nlist=1024 plan")
+    assert(plan.contains("CentroidBook(nlist=1024, dim=16"), "book shape not in the plan")
+    assert(big.forall { case (_, v) => !plan.contains(v.head.toString) },
+      "centroid floats printed in the plan")
     val got = ivf.select("query_id", "item_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(got == exact,
@@ -391,14 +393,14 @@ class AnnSpec extends SparkSpec {
     assert(recall >= 0.8, s"recall=$recall")
   }
 
-  test("cellAssignments matches driver-side nearest centroid on BOTH nlist paths") {
+  test("cellAssignments matches driver-side nearest centroid at nlist 8 and 300") {
     def cosine(a: Array[Float], b: Array[Float]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0
       for (i <- a.indices) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i) }
       d / (math.sqrt(na) * math.sqrt(nb))
     }
-    // small path (literal centroids) and big path (broadcast + max_by) must
-    // produce the SAME (max sim, then max cent_id) assignment the search uses
+    // a small and a large book must both produce the SAME (max sim, then
+    // max cent_id) assignment the search uses
     for (n <- Seq(8, 300)) {
       val rng = new scala.util.Random(n)
       val data = (0L until 400L).map(i => (i, Array.fill(8)(rng.nextFloat() - 0.5f)))
@@ -413,5 +415,42 @@ class AnnSpec extends SparkSpec {
         assert(got(id) == best._2, s"nlist=$n id=$id got=${got(id)} want=${best._2}")
       }
     }
+  }
+
+  test("cellAssignments keeps every row of a repeated id at nlist 300") {
+    // two corpus rows share id 7 on different vectors: each keeps its own
+    // nearest centroid, none is merged into the other
+    val rng = new scala.util.Random(17)
+    val cents = (0L until 300L).map(i => (i, Array.fill(8)(rng.nextFloat() - 0.5f)))
+    val data = (0L until 40L).map(i => (i, Array.fill(8)(rng.nextFloat() - 0.5f))) :+
+      ((7L, Array.fill(8)(rng.nextFloat() - 0.5f)))
+    val got = Ann.cellAssignments(data.toDF("vec_id", "embedding"),
+        cents.toDF("cent_id", "centv"), "vec_id", "embedding")
+      .as[(Long, Long)].collect().sorted.toSeq
+    val want = data.map { case (id, v) =>
+      (id, cents.map { case (cid, c) => (HashKernels.cosine(v, c), cid) }.max._2)
+    }.sorted
+    assert(got == want)
+  }
+
+  test("ivf: nProbe < 1 and an empty centroid table are rejected at plan time") {
+    val df = vecs.toDF("vec_id", "embedding")
+    val cents = Ann.kmeansCentroids(df, "vec_id", "embedding", nlist = 8, iters = 1)
+    val books = Ann.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 16, iters = 1)
+    def rejects(arg: String)(plan: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](plan)
+      assert(e.getMessage.contains(arg), e.getMessage)
+    }
+    for (np <- Seq(0, -1)) {
+      rejects("nProbe")(Ann.ivfTopK(df, df, "vec_id", "embedding", 5, nlist = 8, nProbe = np))
+      rejects("nProbe")(Ann.ivfTopKWith(df, df, cents, "vec_id", "embedding", 5, np))
+      rejects("nProbe")(Ann.ivfCandidates(df, df, cents, "vec_id", "embedding", np))
+      rejects("nProbe")(Ann.ivfPqTopK(df, df, cents, books, "vec_id", "embedding", 5, np))
+      rejects("nProbe")(Ann.ivfPqResidualTopK(df, df, cents, books,
+        "vec_id", "embedding", 5, np))
+    }
+    val empty = Seq.empty[(Long, Array[Float])].toDF("cent_id", "centv")
+    rejects("centroids")(Ann.ivfTopKWith(df, df, empty, "vec_id", "embedding", 5, 1))
+    rejects("centroids")(Ann.cellAssignments(df, empty, "vec_id", "embedding"))
   }
 }
