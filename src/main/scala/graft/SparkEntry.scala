@@ -85,8 +85,8 @@ object SparkEntry {
 
   /** Cache lifecycle across a long drive — investigated in round 6 and
     * deliberately left UNCHANGED. The operator family persists feature
-    * frames (`persistFeatures`) and one-shot queries never unpersist, so
-    * entries accumulate across a 125-query drive; an inter-query
+    * frames and one-shot queries never unpersist, so entries accumulate
+    * across a 125-query drive; an inter-query
     * `catalog.clearCache()` (+ RDD-level unpersist for localCheckpoint
     * blocks) was prototyped and benched. Verdict from three full-suite
     * runs inside the same hypervisor-steal window: totals statistically

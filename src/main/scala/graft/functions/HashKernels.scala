@@ -185,22 +185,9 @@ object HashKernels {
     * straight from shingles without materializing the signature column.
     * Bit-identical to bandKeys(ophArray(...)). */
   def ophBandKeys(shingles: ArrayData, numHashes: Int, bands: Int,
-      rowsPerBand: Int, seed: Long): ArrayData = {
-    val sig = ophArray(shingles.toLongArray(), numHashes, seed)
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = mix64(seed ^ (b.toLong * GOLDEN))
-      var r = 0
-      while (r < rowsPerBand) {
-        h = mix64(h * 0x100000001B3L ^ sig(b * rowsPerBand + r))
-        r += 1
-      }
-      out(b) = h
-      b += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+      rowsPerBand: Int, seed: Long): ArrayData =
+    bandKeysOf(ophArray(shingles.toLongArray(), numHashes, seed),
+      bands, rowsPerBand, seed)
 
   // ---------------------------------------------------------------------
   // SimHash (replaces the S3M neural scorer over phash-derived image tokens)
@@ -333,26 +320,14 @@ object HashKernels {
     math.min(phashCanonical(p), phashCanonical(phashTranspose(p)))
 
   /** Fused MinHash+banding: band keys straight from shingles without
-    * materializing the numHashes-long signature (one output array instead of
-    * three intermediates — the signature projection is allocation-bound at
-    * high thread counts). Bit-identical to bandKeys(minhashArray(...)). */
+    * materializing the numHashes-long signature column (one output array
+    * instead of three intermediates — the signature projection is
+    * allocation-bound at high thread counts). Bit-identical to
+    * bandKeys(minhashArray(...)). */
   def minhashBandKeys(shingles: ArrayData, numHashes: Int, bands: Int,
-      rowsPerBand: Int, seed: Long): ArrayData = {
-    val sig = minhashArray(shingles.toLongArray(), numHashes, seed)
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = mix64(seed ^ (b.toLong * GOLDEN))
-      var r = 0
-      while (r < rowsPerBand) {
-        h = mix64(h * 0x100000001B3L ^ sig(b * rowsPerBand + r))
-        r += 1
-      }
-      out(b) = h
-      b += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+      rowsPerBand: Int, seed: Long): ArrayData =
+    bandKeysOf(minhashArray(shingles.toLongArray(), numHashes, seed),
+      bands, rowsPerBand, seed)
 
   // ---------------------------------------------------------------------
   // LSH banding
@@ -361,15 +336,20 @@ object HashKernels {
   /** One 64-bit key per band: mix of band index and the band's r minhashes.
     * Signatures of empty shingle sets produce no usable bands downstream
     * (they collide only with other empties — filtered by the caller). */
-  def bandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int, seed: Long): ArrayData = {
-    val s = sig.toLongArray()
+  def bandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int, seed: Long): ArrayData =
+    bandKeysOf(sig.toLongArray(), bands, rowsPerBand, seed)
+
+  /** The banding loop every band-key kernel shares: band b's key mixes the
+    * band index with its r signature values. */
+  private def bandKeysOf(sig: Array[Long], bands: Int, rowsPerBand: Int,
+      seed: Long): ArrayData = {
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var h = mix64(seed ^ (b.toLong * GOLDEN))
       var r = 0
       while (r < rowsPerBand) {
-        h = mix64(h * 0x100000001B3L ^ s(b * rowsPerBand + r))
+        h = mix64(h * 0x100000001B3L ^ sig(b * rowsPerBand + r))
         r += 1
       }
       out(b) = h

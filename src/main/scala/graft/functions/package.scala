@@ -1,5 +1,6 @@
 package graft
 
+import graft.config.DedupConfig
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import org.apache.spark.sql.{functions => F}
@@ -30,14 +31,23 @@ package object functions {
       rowsPerBand: Int, seed: Long = 42L): Column =
     column(OphBandKeys(expression(shingles), numHashes, bands, rowsPerBand, seed))
 
-  /** Kernel-dispatching fused banding: every band-key producer (batch
-    * pipeline, streaming, incremental) routes through this so the
-    * `DedupConfig.oph` choice cannot silently diverge between them —
-    * cross-run compatibility is guarded by `featureConfigId`. */
-  def signature_band_keys(shingles: Column, numHashes: Int, bands: Int,
-      rowsPerBand: Int, seed: Long, oph: Boolean): Column =
-    if (oph) oph_band_keys(shingles, numHashes, bands, rowsPerBand, seed)
-    else minhash_band_keys(shingles, numHashes, bands, rowsPerBand, seed)
+  /** The one text-signature shingle set: `cfg.shingleK`-shingle hashes of
+    * `text`'s normalized tokens. The text dedup operators (batch,
+    * incremental, streaming), the novelty scores and the image caption
+    * features all shingle through this, so their sets stay comparable. */
+  def text_shingles(text: Column, cfg: DedupConfig): Column =
+    shingle_hashes(tokens(text), cfg.shingleK, cfg.seed)
+
+  /** The one way a text shingle set becomes LSH band keys: the fused
+    * banding kernel `cfg.oph` selects, under `cfg`'s banding. Every band-key
+    * producer (batch operators, pipeline, streaming, incremental) routes
+    * through this so the kernel choice cannot silently diverge between
+    * them — cross-run compatibility is guarded by `featureConfigId`. */
+  def text_band_keys(shingles: Column, cfg: DedupConfig): Column =
+    if (cfg.oph)
+      oph_band_keys(shingles, cfg.numHashes, cfg.bands, cfg.rowsPerBand, cfg.seed)
+    else
+      minhash_band_keys(shingles, cfg.numHashes, cfg.bands, cfg.rowsPerBand, cfg.seed)
 
   def simhash64(tokenHashes: Column, seed: Long = 42L): Column =
     column(SimHash64(expression(tokenHashes), seed))

@@ -479,8 +479,8 @@ object Curation {
    * narrow projection `concat_ws(" ", tk)`, identical output (clean_text
    * is token-rebuilt either way) without the two corpus-token-sized
    * shuffles the all-docs rebuild paid. No windows. The token frame feeds
-   * several plan branches — `persistFeatures` caches it (same knob and
-   * cache-outlives-plan caveat as the [[graft.operators.Dedup]] family).
+   * several plan branches, so it is cached (same cache-outlives-plan caveat
+   * as the [[graft.operators.Dedup]] family).
    *
    * Tokenization is the RAW whitespace split: surviving text keeps its
    * original casing/punctuation, but documents are REASSEMBLED from their
@@ -494,14 +494,13 @@ object Curation {
    *         when everything was shared, n_removed counts tokens dropped
    */
   def removeRepeatedSpans(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minDocs: Int, persistFeatures: Boolean = true): DataFrame = {
+      n: Int, minDocs: Int): DataFrame = {
     require(n >= 1, s"n($n) must be >= 1")
     require(minDocs >= 2, s"minDocs($minDocs) must be >= 2 — a span is " +
       "'repeated' only across documents")
     import graft.functions.{rawTokens, shingle_hashes}
-    val toks0 = docs.select(col(idCol).as("id"),
-      rawTokens(col(textCol)).as("tk"))
-    val withToks = if (persistFeatures) toks0.persist() else toks0
+    val withToks = docs.select(col(idCol).as("id"),
+      rawTokens(col(textCol)).as("tk")).persist()
     // guard short docs: shingle_hashes degrades k to the doc length below
     // k, which would let >= minDocs identical SHORT docs mask each other
     // without containing any n-gram

@@ -11,16 +11,44 @@ import org.apache.spark.sql.functions._
  * an id column + a text column) — the training-data-pipeline ops the engine
  * provides beyond the reference's own surface, each reusing the same signature
  * kernels as the image pipeline.
+ *
+ * Every pair operator has one shape: bucket rows, a pair generator
+ * ([[CandidateGen.pairsFromBuckets]], or [[CandidateGen
+ * .bipartitePairsFromBuckets]] for the new-vs-corpus siblings), then one
+ * verify join back to the features. Each operator caches (MEMORY_AND_DISK)
+ * the per-row frame its branches re-read — the feature frame of each input
+ * side, the (id, text) or (id, vec) projection for the long-match and
+ * embedding families, and the tier inputs of [[cascade]] — and the entry
+ * outlives the returned plan, so a long-lived session releases it with
+ * `spark.catalog.clearCache()`.
  */
 object Dedup {
 
-  /** The pair operators' shared persist gate: cache the multiply-consumed
-    * feature frame on bounded corpora, skip at web scale (see the
-    * `persistFeatures` doc on [[minhashLshPairs]]). One definition so the
-    * StorageLevel cannot silently diverge across the family. */
-  private def maybePersist(df: DataFrame, on: Boolean): DataFrame =
-    if (on) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
+  private def cached(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The family's verify join: `left`'s `value` column attaches to each
+    * pair's `a` as `va`, `right`'s to its `b` as `vb` — each side read once,
+    * the [[VerifyStage.verify]] shape. A self-join passes one frame twice. */
+  private def verifyJoin(pairs: DataFrame, left: DataFrame, right: DataFrame,
+      value: String): DataFrame =
+    pairs.join(left.select(col("id").as("a"), col(value).as("va")), "a")
+      .join(right.select(col("id").as("b"), col(value).as("vb")), "b")
+
+  /** Connected components over (a, b) pairs, attached to `ids` as `__comp`.
+    * CC runs on long labels: ids of any type ride as xxhash64 nids (the
+    * DedupPipeline identity scheme — content-derived, deterministic), and a
+    * row no pair touches is its own component. */
+  private def componentOf(ids: DataFrame, idCol: String,
+      pairs: DataFrame): DataFrame = {
+    val base = ids.withColumn("__nid", xxhash64(col(idCol).cast("string")))
+    val edges = pairs.select(xxhash64(col("a").cast("string")).as("src"),
+      xxhash64(col("b").cast("string")).as("dst"))
+    val cc = ConnectedComponents.run(edges)
+      .select(col("id").as("__nid"), col("component"))
+    base.join(cc, Seq("__nid"), "left")
+      .withColumn("__comp", coalesce(col("component"), col("__nid")))
+  }
 
   /**
    * Exact dedup by full-text hash: one shuffle (hash groupBy via window min),
@@ -44,46 +72,52 @@ object Dedup {
         min(col(idCol)).over(Window.partitionBy("__h")))
       .drop("__h")
 
-  /** Per-row MinHash/LSH feature projection for text. `cfg.oph` swaps the
-    * signature kernel for one-permutation hashing (same banding downstream). */
+  /** Per-row MinHash/LSH feature projection for text: (id, norm_text,
+    * shingles, band_keys, simhash). `cfg.oph` swaps the signature kernel for
+    * one-permutation hashing inside the fused banding kernel. */
   def textFeatures(docs: DataFrame, idCol: String, textCol: String,
       cfg: DedupConfig): DataFrame =
     docs.select(
       col(idCol).as("id"),
       normalize_text(col(textCol)).as("norm_text"),
-      shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed).as("shingles"))
-      .withColumn("sig",
-        if (cfg.oph) oph_signature(col("shingles"), cfg.numHashes, cfg.seed)
-        else minhash_signature(col("shingles"), cfg.numHashes, cfg.seed))
-      .withColumn("band_keys",
-        lsh_band_keys(col("sig"), cfg.bands, cfg.rowsPerBand, cfg.seed))
+      text_shingles(col(textCol), cfg).as("shingles"))
+      .withColumn("band_keys", text_band_keys(col("shingles"), cfg))
       .withColumn("simhash",
         simhash64(col("shingles"), cfg.seed))
 
-  /** MinHash+LSH near-dup pairs verified by exact shingle Jaccard.
-    *
-    * @param persistFeatures cache the per-doc feature table consumed by the
-    *        bucket and both verify branches (default true: measurably faster
-    *        on bounded corpora). The cache entry outlives the returned plan —
-    *        pass false in long-lived sessions / at web scale (the recompute
-    *        is a narrow codegen projection), or `spark.catalog.clearCache()`
-    *        after materializing. Same knob on [[simhashPairs]],
-    *        [[embeddingNearDupPairs]], [[ngramJaccardPairs]]. */
-  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-      cfg: DedupConfig, persistFeatures: Boolean = true): DataFrame = {
-    val feat = maybePersist(textFeatures(docs, idCol, textCol, cfg),
-      persistFeatures)
-    val buckets = CandidateGen.explodeBands(
+  /** (id, key) band rows of a [[textFeatures]] frame; shingle-less rows
+    * carry no usable band and are left out. */
+  private def textBands(feat: DataFrame): DataFrame =
+    CandidateGen.explodeBands(
       feat.where(size(col("shingles")) > 0), "id", "band_keys")
-    val pairs = CandidateGen.pairsFromBuckets(buckets, cfg.maxBucketSize,
-      saltOversized = cfg.saltOversized)
-    val fa = feat.select(col("id").as("a"), col("shingles").as("sh_a"))
-    val fb = feat.select(col("id").as("b"), col("shingles").as("sh_b"))
-    pairs.join(fa, "a").join(fb, "b")
-      .withColumn("jaccard", jaccard_sim(col("sh_a"), col("sh_b")))
+
+  /** MinHash+LSH near-dup pairs verified by exact shingle Jaccard. */
+  def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
+      cfg: DedupConfig): DataFrame = {
+    val feat = cached(textFeatures(docs, idCol, textCol, cfg))
+    val pairs = CandidateGen.pairsFromBuckets(textBands(feat),
+      cfg.maxBucketSize, saltOversized = cfg.saltOversized)
+    verifyJoin(pairs, feat, feat, "shingles")
+      .withColumn("jaccard", jaccard_sim(col("va"), col("vb")))
       .where(col("jaccard") >= cfg.jaccardMin)
       .select("a", "b", "jaccard")
   }
+
+  /** The ICWS family's per-doc features — ONE builder for the batch and
+    * incremental paths so weighted featurization cannot drift between them
+    * (the same no-divergence rationale as `text_band_keys` for the
+    * classic kernels). Empty-shingle rows are dropped: they can never be
+    * candidates. */
+  private def weightedFeatures(docs: DataFrame, idCol: String,
+      textCol: String, cfg: DedupConfig): DataFrame =
+    docs.select(
+        col(idCol).as("id"),
+        text_shingles(col(textCol), cfg).as("shingles"))
+      .where(size(col("shingles")) > 0)
+      .withColumn("band_keys",
+        lsh_band_keys(
+          icws_signature(col("shingles"), cfg.numHashes, cfg.seed),
+          cfg.bands, cfg.rowsPerBand, cfg.seed))
 
   /**
    * WEIGHTED MinHash near-dup pairs — token multiplicity matters: candidate
@@ -99,58 +133,32 @@ object Dedup {
    * two equi-joins back for verify. `cfg.jaccardMin` thresholds the
    * WEIGHTED score here.
    */
-  /** The ICWS family's per-doc features — ONE builder for the batch and
-    * incremental paths so weighted featurization cannot drift between them
-    * (the same no-divergence rationale as `signature_band_keys` for the
-    * classic kernels). Empty-shingle rows are dropped: they can never be
-    * candidates. */
-  private def weightedFeatures(docs: DataFrame, idCol: String,
-      textCol: String, cfg: DedupConfig): DataFrame =
-    docs.select(
-        col(idCol).as("id"),
-        shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed)
-          .as("shingles"))
-      .where(size(col("shingles")) > 0)
-      .withColumn("band_keys",
-        lsh_band_keys(
-          icws_signature(col("shingles"), cfg.numHashes, cfg.seed),
-          cfg.bands, cfg.rowsPerBand, cfg.seed))
-
   def weightedMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      cfg: DedupConfig, persistFeatures: Boolean = true): DataFrame = {
-    val feat = maybePersist(weightedFeatures(docs, idCol, textCol, cfg),
-      persistFeatures)
+      cfg: DedupConfig): DataFrame = {
+    val feat = cached(weightedFeatures(docs, idCol, textCol, cfg))
     val buckets = CandidateGen.explodeBands(feat, "id", "band_keys")
     val pairs = CandidateGen.pairsFromBuckets(buckets, cfg.maxBucketSize,
       saltOversized = cfg.saltOversized)
-    val fa = feat.select(col("id").as("a"), col("shingles").as("sh_a"))
-    val fb = feat.select(col("id").as("b"), col("shingles").as("sh_b"))
-    pairs.join(fa, "a").join(fb, "b")
-      .withColumn("wjaccard", weighted_jaccard(col("sh_a"), col("sh_b")))
+    verifyJoin(pairs, feat, feat, "shingles")
+      .withColumn("wjaccard", weighted_jaccard(col("va"), col("vb")))
       .where(col("wjaccard") >= cfg.jaccardMin)
       .select("a", "b", "wjaccard")
   }
 
-  /** SimHash near-dup pairs: Hamming-subset buckets + bit_count verify.
-    * `persistFeatures`: see [[minhashLshPairs]]. In persisted (bounded-
-    * corpus) mode the corpus is counted — one cheap pass over the cache —
-    * and the count sizes the bucket-key scheme, keeping small corpora on the
-    * classic few-keys-per-row layout; un-persisted (web-scale) mode skips
-    * the count and takes the conservative scale-safe scheme. */
+  /** SimHash near-dup pairs: Hamming-subset buckets + bit_count verify. The
+    * cached corpus is counted — one cheap pass — and the count sizes the
+    * bucket-key scheme, keeping small corpora on the classic
+    * few-keys-per-row layout. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-      cfg: DedupConfig, persistFeatures: Boolean = true): DataFrame = {
-    val feat = maybePersist(
-      textFeatures(docs, idCol, textCol, cfg).select("id", "simhash"),
-      persistFeatures)
-    val nRows = if (persistFeatures) feat.count() else 0L
+      cfg: DedupConfig): DataFrame = {
+    val feat = cached(
+      textFeatures(docs, idCol, textCol, cfg).select("id", "simhash"))
     val buckets = CandidateGen.simhashChunkBuckets(
-      feat, "id", "simhash", cfg.hammingMax, nRows)
+      feat, "id", "simhash", cfg.hammingMax, feat.count())
     val pairs = CandidateGen.pairsFromBuckets(buckets, cfg.maxBucketSize,
       saltOversized = cfg.saltOversized)
-    val fa = feat.select(col("id").as("a"), col("simhash").as("sim_a"))
-    val fb = feat.select(col("id").as("b"), col("simhash").as("sim_b"))
-    pairs.join(fa, "a").join(fb, "b")
-      .withColumn("hamming", hamming64(col("sim_a"), col("sim_b")).cast("int"))
+    verifyJoin(pairs, feat, feat, "simhash")
+      .withColumn("hamming", hamming64(col("va"), col("vb")).cast("int"))
       .where(col("hamming") <= cfg.hammingMax)
       .select("a", "b", "hamming")
   }
@@ -179,34 +187,40 @@ object Dedup {
    * similarity listing (ea/sim/main/data/duplicates.py:21-41) but as one
    * declarative plan.
    */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      cfg: DedupConfig, persistFeatures: Boolean = true): DataFrame = {
-    val t = cfg.jaccardMin
-    // feat is consumed by three branches (prefix explode + both verify
-    // sides). persistFeatures = true (default, matching the operator family)
-    // caches it — measurably faster on bounded corpora (-25% on the bench
-    // query), at the cost of a cache entry the caller cannot unpersist from
-    // the returned plan. Pass false at web scale, where the corpus-sized
-    // shingle table would not fit in cache and the recompute is a narrow
-    // codegen projection.
-    val featBase = docs.select(col(idCol).as("id"),
-        array_sort(array_distinct(
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed))).as("sh"))
-      .where(size(col("sh")) > 0)
-    val feat = maybePersist(featBase, persistFeatures)
-    // EPS guards the exact-in-real-arithmetic thresholds against double
-    // rounding: e.g. 100 * 0.07 = 7.000000000000001, whose un-guarded ceil
-    // (8, not 7) would shorten the prefix / tighten the filters and drop a
-    // genuinely qualifying pair. Erring low only loosens the filters —
-    // exactness is preserved by the verify stage.
-    val EPS = 1e-9
-    // prefix explode: first n - ceil(t*n) + 1 value-ordered shingles; any
-    // pair with Jaccard >= t must collide on a prefix element of both sides
+  /** EPS guards the prefix joins' exact-in-real-arithmetic thresholds
+    * against double rounding: e.g. 100 * 0.07 = 7.000000000000001, whose
+    * un-guarded ceil (8, not 7) would shorten the prefix / tighten the
+    * filters and drop a genuinely qualifying pair. Erring low only loosens
+    * the filters — exactness is preserved by the verify stage. */
+  private val EPS = 1e-9
+
+  /** (id, sh): each doc's DISTINCT shingles in ascending hash-value order
+    * (the global total order of the prefix joins), shingle-less docs
+    * dropped. The frame feeds the prefix explode and both verify sides, so
+    * it is cached. */
+  private def sortedShingles(docs: DataFrame, idCol: String, textCol: String,
+      cfg: DedupConfig): DataFrame =
+    cached(docs.select(col(idCol).as("id"),
+        array_sort(array_distinct(text_shingles(col(textCol), cfg))).as("sh"))
+      .where(size(col("sh")) > 0))
+
+  /** (id, n, pos, g): the first `n - ceil(t*n) + 1` shingles of each
+    * [[sortedShingles]] row — any pair at overlap fraction >= t on that
+    * row's side must collide on one of them. */
+  private def shinglePrefix(feat: DataFrame, t: Double): DataFrame = {
     val n = size(col("sh"))
     val plen = (n - ceil(n * t - EPS) + 1).cast("int")
-    val prefix = feat.select(col("id"), n.as("n"),
+    feat.select(col("id"), n.as("n"),
         posexplode(slice(col("sh"), lit(1), plen)))
       .select(col("id"), col("n"), col("pos"), col("col").as("g"))
+  }
+
+  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
+      cfg: DedupConfig): DataFrame = {
+    val t = cfg.jaccardMin
+    val feat = sortedShingles(docs, idCol, textCol, cfg)
+    // any pair with Jaccard >= t collides on a prefix element of both sides
+    val prefix = shinglePrefix(feat, t)
     val minOverlap = ceil((col("pa.n") + col("pb.n")) * lit(t / (1.0 + t)) - EPS)
     val cand = prefix.as("pa").join(prefix.as("pb"),
         col("pa.g") === col("pb.g") && col("pa.id") < col("pb.id") &&
@@ -219,10 +233,8 @@ object Dedup {
           col("pb.n") - col("pb.pos") - 1) >= minOverlap)
       .select(col("pa.id").as("a"), col("pb.id").as("b"))
       .distinct()
-    val fa = feat.select(col("id").as("a"), col("sh").as("sh_a"))
-    val fb = feat.select(col("id").as("b"), col("sh").as("sh_b"))
-    cand.join(fa, "a").join(fb, "b")
-      .withColumn("jaccard", jaccard_sim(col("sh_a"), col("sh_b")))
+    verifyJoin(cand, feat, feat, "sh")
+      .withColumn("jaccard", jaccard_sim(col("va"), col("vb")))
       .where(col("jaccard") >= t)
       .select("a", "b", "jaccard")
   }
@@ -267,25 +279,13 @@ object Dedup {
    *         containment >= containMin, rounded to 4 places
    */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      cfg: DedupConfig, containMin: Double,
-      persistFeatures: Boolean = true): DataFrame = {
+      cfg: DedupConfig, containMin: Double): DataFrame = {
     require(containMin > 0 && containMin <= 1,
       s"containMin($containMin) outside (0, 1]")
-    val featBase = docs.select(col(idCol).as("id"),
-        array_sort(array_distinct(
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed))).as("sh"))
-      .where(size(col("sh")) > 0)
-    val feat = maybePersist(featBase, persistFeatures)
-    // EPS: see ngramJaccardPairs — guards the real-arithmetic thresholds
-    // against double rounding; erring low only loosens the (exact-safe)
-    // filters
-    val EPS = 1e-9
-    val n = size(col("sh"))
-    val plen = (n - ceil(n * containMin - EPS) + 1).cast("int")
-    val prefix = feat.select(col("id"), n.as("n"),
-        posexplode(slice(col("sh"), lit(1), plen)))
-      .select(col("id"), col("n"), col("pos"), col("col").as("g"))
-    val posting = feat.select(col("id"), n.as("n"), posexplode(col("sh")))
+    val feat = sortedShingles(docs, idCol, textCol, cfg)
+    val prefix = shinglePrefix(feat, containMin)
+    val posting = feat.select(col("id"), size(col("sh")).as("n"),
+        posexplode(col("sh")))
       .select(col("id"), col("n"), col("pos"), col("col").as("g"))
     // required overlap is a function of the CONTAINED side's size only
     val needed = ceil(col("pa.n") * containMin - EPS)
@@ -296,15 +296,13 @@ object Dedup {
           col("pb.n") - col("pb.pos") - 1) >= needed)
       .select(col("pa.id").as("a"), col("pb.id").as("b"))
       .distinct()
-    val fa = feat.select(col("id").as("a"), col("sh").as("sh_a"))
-    val fb = feat.select(col("id").as("b"), col("sh").as("sh_b"))
-    cand.join(fa, "a").join(fb, "b")
-      .withColumn("overlap", size(array_intersect(col("sh_a"), col("sh_b"))))
+    verifyJoin(cand, feat, feat, "sh")
+      .withColumn("overlap", size(array_intersect(col("va"), col("vb"))))
       // integer-form gate: overlap >= ceil(t * na) — no float compare at
       // the boundary (7/10 >= 0.7 is safe in doubles, 0.7*na is not)
-      .where(col("overlap") >= ceil(size(col("sh_a")) * containMin - EPS))
+      .where(col("overlap") >= ceil(size(col("va")) * containMin - EPS))
       .withColumn("containment",
-        round(col("overlap").cast("double") / size(col("sh_a")), 4))
+        round(col("overlap").cast("double") / size(col("va")), 4))
       .select("a", "b", "containment")
   }
 
@@ -315,23 +313,13 @@ object Dedup {
    * ([[graft.pipeline.DedupPipeline]]); singleton docs keep their own id.
    */
   def minhashLshGroups(docs: DataFrame, idCol: String, textCol: String,
-      cfg: DedupConfig): DataFrame = {
-    // CC runs on long labels; ids of any type ride as xxhash64 nids (the
-    // DedupPipeline identity scheme — content-derived, deterministic) and the
-    // group label is re-derived as min ORIGINAL id per component
-    val nid = xxhash64(col(idCol).cast("string"))
-    val base = docs.select(col(idCol)).withColumn("__nid", nid)
-    val edges = minhashLshPairs(docs, idCol, textCol, cfg)
-      .select(xxhash64(col("a").cast("string")).as("src"),
-        xxhash64(col("b").cast("string")).as("dst"))
-    val cc = ConnectedComponents.run(edges)
-      .select(col("id").as("__nid"), col("component"))
-    base.join(cc, Seq("__nid"), "left")
-      .withColumn("__comp", coalesce(col("component"), col("__nid")))
+      cfg: DedupConfig): DataFrame =
+    // the group label is re-derived as min ORIGINAL id per component
+    componentOf(docs.select(col(idCol)), idCol,
+        minhashLshPairs(docs, idCol, textCol, cfg))
       .withColumn("dup_group_id",
         min(col(idCol)).over(Window.partitionBy("__comp")))
       .select(col(idCol), col("dup_group_id"))
-  }
 
   /**
    * [[minhashLshGroups]] with canonical selection by QUALITY instead of min
@@ -353,22 +341,14 @@ object Dedup {
    *         max-quality member (ties: min id); singletons keep themselves
    */
   def minhashLshGroupsBy(docs: DataFrame, idCol: String, textCol: String,
-      qualityCol: String, cfg: DedupConfig): DataFrame = {
-    val nid = xxhash64(col(idCol).cast("string"))
-    val base = docs.select(col(idCol), col(qualityCol)).withColumn("__nid", nid)
-    val edges = minhashLshPairs(docs, idCol, textCol, cfg)
-      .select(xxhash64(col("a").cast("string")).as("src"),
-        xxhash64(col("b").cast("string")).as("dst"))
-    val cc = ConnectedComponents.run(edges)
-      .select(col("id").as("__nid"), col("component"))
-    base.join(cc, Seq("__nid"), "left")
-      .withColumn("__comp", coalesce(col("component"), col("__nid")))
+      qualityCol: String, cfg: DedupConfig): DataFrame =
+    componentOf(docs.select(col(idCol), col(qualityCol)), idCol,
+        minhashLshPairs(docs, idCol, textCol, cfg))
       .withColumn("canonical", first(col(idCol)).over(
         Window.partitionBy("__comp")
           .orderBy(col(qualityCol).desc, col(idCol).asc)))
       .select(col(idCol), col("canonical"),
         (col(idCol) === col("canonical")).as("keep"))
-  }
 
   /**
    * LSH banding planner — the analytic table an operator reads BEFORE
@@ -586,39 +566,33 @@ object Dedup {
   def longMatchPairs(docs: DataFrame, idCol: String, textCol: String,
       minLen: Int, k: Int = 16, seed: Long = 42L,
       maxBucketSize: Int = 4096, lcsCap: Int = 2000,
-      persistFeatures: Boolean = true, saltOversized: Boolean = false): DataFrame = {
+      saltOversized: Boolean = false): DataFrame = {
     require(k >= 2 && minLen >= k + 1,
       s"minLen($minLen) must exceed k($k): the winnowing window w = minLen - k + 1 needs w >= 2")
     require(lcsCap >= minLen, s"lcsCap($lcsCap) below minLen($minLen) can never verify a pair")
     val w = minLen - k + 1
-    val baseDf = docs.select(col(idCol).as("id"), col(textCol).as("text"))
-    val base = maybePersist(baseDf, persistFeatures)
+    val base = cached(docs.select(col(idCol).as("id"), col(textCol).as("text")))
     val buckets = base.select(col("id"),
       explode(winnow_anchors(col("text"), k, w, seed)).as("key"))
     val pairs = CandidateGen.pairsFromBuckets(buckets, maxBucketSize,
       saltOversized = saltOversized)
-    val fa = base.select(col("id").as("a"), col("text").as("ta"))
-    val fb = base.select(col("id").as("b"), col("text").as("tb"))
-    pairs.join(fa, "a").join(fb, "b")
-      .withColumn("lcs", lcs_length(col("ta"), col("tb"), lcsCap))
+    verifyJoin(pairs, base, base, "text")
+      .withColumn("lcs", lcs_length(col("va"), col("vb"), lcsCap))
       .where(col("lcs") >= minLen)
       .select("a", "b", "lcs")
   }
 
-  /** Embedding-cosine near-dup pairs via sign-random-projection buckets.
-    * `persistFeatures`: see [[minhashLshPairs]]. */
+  /** Embedding-cosine near-dup pairs via sign-random-projection buckets. */
   def embeddingNearDupPairs(embeddings: DataFrame, idCol: String, vecCol: String,
       cosineMin: Double, srpBits: Int = 12, tables: Int = 4,
       seed: Long = 42L, maxBucketSize: Int = 4096,
-      persistFeatures: Boolean = true, saltOversized: Boolean = false): DataFrame = {
-    val baseDf = embeddings.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val base = maybePersist(baseDf, persistFeatures)
+      saltOversized: Boolean = false): DataFrame = {
+    val base = cached(
+      embeddings.select(col(idCol).as("id"), col(vecCol).as("vec")))
     val buckets = CandidateGen.srpBuckets(base, "id", "vec", srpBits, tables, seed)
     val pairs = CandidateGen.pairsFromBuckets(buckets, maxBucketSize,
       saltOversized = saltOversized)
-    val fa = base.select(col("id").as("a"), col("vec").as("va"))
-    val fb = base.select(col("id").as("b"), col("vec").as("vb"))
-    pairs.join(fa, "a").join(fb, "b")
+    verifyJoin(pairs, base, base, "vec")
       .withColumn("cosine", cosine_sim(col("va"), col("vb")))
       .where(col("cosine") >= cosineMin)
       .select("a", "b", "cosine")
@@ -801,24 +775,15 @@ object Dedup {
    * @return (a = new id, b = corpus id, jaccard) with jaccard >= cfg.jaccardMin
    */
   def incrementalNearDupPairs(newDocs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, cfg: DedupConfig,
-      persistFeatures: Boolean = true): DataFrame = {
-    val nf = maybePersist(textFeatures(newDocs, idCol, textCol, cfg),
-      persistFeatures)
-    val cf = maybePersist(textFeatures(corpus, idCol, textCol, cfg),
-      persistFeatures)
-    val nb = CandidateGen.explodeBands(
-      nf.where(size(col("shingles")) > 0), "id", "band_keys")
-      .select(col("id").as("a"), col("key"))
-    val cb = CandidateGen.explodeBands(
-      cf.where(size(col("shingles")) > 0), "id", "band_keys")
-      .select(col("id").as("b"), col("key"))
-    val pairs = CandidateGen.bipartitePairsFromBuckets(nb, cb,
+      idCol: String, textCol: String, cfg: DedupConfig): DataFrame = {
+    val nf = cached(textFeatures(newDocs, idCol, textCol, cfg))
+    val cf = cached(textFeatures(corpus, idCol, textCol, cfg))
+    val pairs = CandidateGen.bipartitePairsFromBuckets(
+      textBands(nf).select(col("id").as("a"), col("key")),
+      textBands(cf).select(col("id").as("b"), col("key")),
       cfg.maxBucketSize, saltOversized = cfg.saltOversized)
-    val fa = nf.select(col("id").as("a"), col("shingles").as("sh_a"))
-    val fb = cf.select(col("id").as("b"), col("shingles").as("sh_b"))
-    pairs.join(fa, "a").join(fb, "b")
-      .withColumn("jaccard", jaccard_sim(col("sh_a"), col("sh_b")))
+    verifyJoin(pairs, nf, cf, "shingles")
+      .withColumn("jaccard", jaccard_sim(col("va"), col("vb")))
       .where(col("jaccard") >= cfg.jaccardMin)
       .select("a", "b", "jaccard")
   }
@@ -836,22 +801,17 @@ object Dedup {
    * @return (a = new id, b = corpus id, wjaccard) at `cfg.jaccardMin`+
    */
   def incrementalWeightedPairs(newDocs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, cfg: DedupConfig,
-      persistFeatures: Boolean = true): DataFrame = {
-    val nf = maybePersist(weightedFeatures(newDocs, idCol, textCol, cfg),
-      persistFeatures)
-    val cf = maybePersist(weightedFeatures(corpus, idCol, textCol, cfg),
-      persistFeatures)
-    val nb = CandidateGen.explodeBands(nf, "id", "band_keys")
-      .select(col("id").as("a"), col("key"))
-    val cb = CandidateGen.explodeBands(cf, "id", "band_keys")
-      .select(col("id").as("b"), col("key"))
-    val pairs = CandidateGen.bipartitePairsFromBuckets(nb, cb,
+      idCol: String, textCol: String, cfg: DedupConfig): DataFrame = {
+    val nf = cached(weightedFeatures(newDocs, idCol, textCol, cfg))
+    val cf = cached(weightedFeatures(corpus, idCol, textCol, cfg))
+    val pairs = CandidateGen.bipartitePairsFromBuckets(
+      CandidateGen.explodeBands(nf, "id", "band_keys")
+        .select(col("id").as("a"), col("key")),
+      CandidateGen.explodeBands(cf, "id", "band_keys")
+        .select(col("id").as("b"), col("key")),
       cfg.maxBucketSize, saltOversized = cfg.saltOversized)
-    val fa = nf.select(col("id").as("a"), col("shingles").as("sh_a"))
-    val fb = cf.select(col("id").as("b"), col("shingles").as("sh_b"))
-    pairs.join(fa, "a").join(fb, "b")
-      .withColumn("wjaccard", weighted_jaccard(col("sh_a"), col("sh_b")))
+    verifyJoin(pairs, nf, cf, "shingles")
+      .withColumn("wjaccard", weighted_jaccard(col("va"), col("vb")))
       .where(col("wjaccard") >= cfg.jaccardMin)
       .select("a", "b", "wjaccard")
   }
@@ -938,6 +898,24 @@ object Dedup {
         round(col("n_contaminated") / col("n_bench"), 6))
   }
 
+  /** (group, shingles) of every doc with a non-empty shingle set. */
+  private def groupShingles(docs: DataFrame, textCol: String, groupCol: String,
+      cfg: DedupConfig): DataFrame =
+    docs.select(col(groupCol).as("group"),
+        text_shingles(col(textCol), cfg).as("shingles"))
+      .where(size(col("shingles")) > 0)
+
+  /** (group, merged_sig): the elementwise min of a (group, sig) frame's
+    * member signatures, via posexplode + a (group, pos) aggregate — one
+    * shuffle whose width is numHashes rows per group, never the member
+    * shingles. */
+  private def minMerged(sigs: DataFrame): DataFrame =
+    sigs.select(col("group"), posexplode(col("sig")))
+      .groupBy("group", "pos").agg(min("col").as("mh"))
+      .groupBy("group")
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mh")))),
+        s => s("mh")).as("merged_sig"))
+
   /**
    * Mergeable per-group MinHash signatures: the group signature is the
    * ELEMENTWISE MIN of member signatures, which by the min-merge property of
@@ -965,24 +943,13 @@ object Dedup {
    */
   def groupSignatures(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, cfg: DedupConfig,
-      persistFeatures: Boolean = true, verifyUnion: Boolean = false): DataFrame = {
+      verifyUnion: Boolean = false): DataFrame = {
     require(!cfg.oph, "groupSignatures requires the classic MinHash kernel:" +
       " densified OPH bins copy values across bins, so the elementwise min of" +
       " member signatures is NOT the signature of the union (HashKernels.ophArray)")
-    val feat = maybePersist(
-      docs.select(col(groupCol).as("group"),
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed).as("shingles"))
-        .where(size(col("shingles")) > 0)
-        .withColumn("sig", minhash_signature(col("shingles"), cfg.numHashes, cfg.seed)),
-      persistFeatures)
-    // elementwise min via posexplode + (group, pos) aggregate: one shuffle
-    // whose width is numHashes rows per group — never the member shingles
-    val merged = feat
-      .select(col("group"), posexplode(col("sig")))
-      .groupBy("group", "pos").agg(min("col").as("mh"))
-      .groupBy("group")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mh")))),
-        s => s("mh")).as("merged_sig"))
+    val feat = cached(groupShingles(docs, textCol, groupCol, cfg)
+      .withColumn("sig", minhash_signature(col("shingles"), cfg.numHashes, cfg.seed)))
+    val merged = minMerged(feat)
     val counts = feat.groupBy("group").agg(count(lit(1)).as("n_members"))
     val out = merged.join(counts, "group")
       .select(col("group"), col("n_members"),
@@ -1020,26 +987,14 @@ object Dedup {
    *         union Jaccard rounded to 6, thresholded at `cfg.jaccardMin`
    */
   def groupNearDupPairs(docs: DataFrame, textCol: String,
-      groupCol: String, cfg: DedupConfig,
-      persistFeatures: Boolean = true): DataFrame = {
+      groupCol: String, cfg: DedupConfig): DataFrame = {
     require(!cfg.oph, "groupNearDupPairs merges member signatures " +
       "elementwise — the classic MinHash kernel only (see groupSignatures)")
     // featurize ONCE: both the signature path and the exact-union verify
     // read this frame (tokenize+hash is the dominant per-row cost)
-    val feat = maybePersist(
-      docs.select(col(groupCol).as("group"),
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed)
-            .as("shingles"))
-        .where(size(col("shingles")) > 0),
-      persistFeatures)
-    val merged = feat
-      .withColumn("sig",
-        minhash_signature(col("shingles"), cfg.numHashes, cfg.seed))
-      .select(col("group"), posexplode(col("sig")))
-      .groupBy("group", "pos").agg(min("col").as("mh"))
-      .groupBy("group")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mh")))),
-        s => s("mh")).as("merged_sig"))
+    val feat = cached(groupShingles(docs, textCol, groupCol, cfg))
+    val merged = minMerged(feat.withColumn("sig",
+      minhash_signature(col("shingles"), cfg.numHashes, cfg.seed)))
     val withNid = merged.select(
       xxhash64(col("group").cast("string")).as("id"),
       lsh_band_keys(col("merged_sig"), cfg.bands, cfg.rowsPerBand, cfg.seed)
@@ -1091,12 +1046,10 @@ object Dedup {
    */
   def semanticDedupGroups(embeddings: DataFrame, idCol: String, vecCol: String,
       cosineMin: Double, nlist: Int, iters: Int = 2,
-      maxBucketSize: Int = 4096, saltOversized: Boolean = true,
-      persistFeatures: Boolean = true): DataFrame =
+      maxBucketSize: Int = 4096, saltOversized: Boolean = true): DataFrame =
     semanticDedupGroupsWith(embeddings, idCol, vecCol, cosineMin,
       centroids = null, nlist = nlist, iters = iters,
-      maxBucketSize = maxBucketSize, saltOversized = saltOversized,
-      persistFeatures = persistFeatures)
+      maxBucketSize = maxBucketSize, saltOversized = saltOversized)
 
   /**
    * [[semanticDedupGroups]] against CALLER-SUPPLIED centroids — the
@@ -1110,33 +1063,21 @@ object Dedup {
   def semanticDedupGroupsWith(embeddings: DataFrame, idCol: String,
       vecCol: String, cosineMin: Double, centroids: DataFrame,
       nlist: Int = 0, iters: Int = 2,
-      maxBucketSize: Int = 4096, saltOversized: Boolean = true,
-      persistFeatures: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 4096, saltOversized: Boolean = true): DataFrame = {
     require(centroids != null || nlist > 0,
       "pass centroids, or nlist > 0 to train the quantizer in-call")
-    val base = maybePersist(
-      embeddings.select(col(idCol).as("id"), col(vecCol).as("vec")),
-      persistFeatures)
+    val base = cached(
+      embeddings.select(col(idCol).as("id"), col(vecCol).as("vec")))
     val cents = Option(centroids)
       .getOrElse(Ann.kmeansCentroids(base, "id", "vec", nlist, iters))
     val buckets = Ann.cellAssignments(base, cents, "id", "vec")
       .select(col("id"), col("cell").as("key"))
     val pairs = CandidateGen.pairsFromBuckets(buckets, maxBucketSize,
       saltOversized = saltOversized)
-    val fa = base.select(col("id").as("a"), col("vec").as("va"))
-    val fb = base.select(col("id").as("b"), col("vec").as("vb"))
-    val dup = pairs.join(fa, "a").join(fb, "b")
+    val dup = verifyJoin(pairs, base, base, "vec")
       .where(cosine_sim(col("va"), col("vb")) >= cosineMin)
       .select("a", "b")
-    // id-type-generic CC labels (the minhashLshGroups nid scheme)
-    val baseIds = base.select(col("id"))
-      .withColumn("__nid", xxhash64(col("id").cast("string")))
-    val edges = dup.select(xxhash64(col("a").cast("string")).as("src"),
-      xxhash64(col("b").cast("string")).as("dst"))
-    val cc = ConnectedComponents.run(edges)
-      .select(col("id").as("__nid"), col("component"))
-    baseIds.join(cc, Seq("__nid"), "left")
-      .withColumn("__comp", coalesce(col("component"), col("__nid")))
+    componentOf(base.select(col("id")), "id", dup)
       .withColumn("sem_group_id", min(col("id")).over(Window.partitionBy("__comp")))
       .select(col("id"), col("sem_group_id"),
         (col("id") === col("sem_group_id")).as("keep"))
@@ -1172,27 +1113,25 @@ object Dedup {
    * @param nlist     IVF cell count for the semantic tier's coarse quantizer
    */
   def cascade(docs: DataFrame, idCol: String, textCol: String, embCol: String,
-      cfg: DedupConfig, cosineMin: Double, nlist: Int,
-      persistFeatures: Boolean = true): DataFrame = {
-    val base = maybePersist(docs.select(col(idCol).as("id"),
-      col(textCol).as("text"), col(embCol).as("emb")), persistFeatures)
+      cfg: DedupConfig, cosineMin: Double, nlist: Int): DataFrame = {
+    val base = cached(docs.select(col(idCol).as("id"),
+      col(textCol).as("text"), col(embCol).as("emb")))
 
     val g1 = exactGroups(base, "id", "text")
     val removedExact = g1.where(col("id") =!= col("dup_group_id"))
       .select(col("id"), col("dup_group_id").as("c1"))
-    val surv1 = maybePersist(
+    val surv1 = cached(
       base.join(g1.where(col("id") === col("dup_group_id")).select("id"),
-        Seq("id")), persistFeatures)
+        Seq("id")))
 
     val g2 = minhashLshGroups(surv1, "id", "text", cfg)
     val removedNear = g2.where(col("id") =!= col("dup_group_id"))
       .select(col("id"), col("dup_group_id").as("c2"))
-    val surv2 = maybePersist(
+    val surv2 = cached(
       surv1.join(g2.where(col("id") === col("dup_group_id")).select("id"),
-        Seq("id")), persistFeatures)
+        Seq("id")))
 
-    val g3 = semanticDedupGroups(surv2, "id", "emb", cosineMin, nlist,
-      persistFeatures = persistFeatures)
+    val g3 = semanticDedupGroups(surv2, "id", "emb", cosineMin, nlist)
     val removedSem = g3.where(!col("keep"))
       .select(col("id"), col("sem_group_id").as("c3"))
     val kept = g3.where(col("keep"))
@@ -1251,14 +1190,11 @@ object Dedup {
   def incrementalSemanticPairs(newEmb: DataFrame, corpusEmb: DataFrame,
       idCol: String, vecCol: String, cosineMin: Double,
       centroids: DataFrame = null, nlist: Int = 0,
-      maxBucketSize: Int = 4096, saltOversized: Boolean = true,
-      persistFeatures: Boolean = true): DataFrame = {
+      maxBucketSize: Int = 4096, saltOversized: Boolean = true): DataFrame = {
     require(centroids != null || nlist > 0,
       "pass centroids, or nlist > 0 to train the quantizer on the corpus")
-    val nf = maybePersist(
-      newEmb.select(col(idCol).as("id"), col(vecCol).as("vec")), persistFeatures)
-    val cf = maybePersist(
-      corpusEmb.select(col(idCol).as("id"), col(vecCol).as("vec")), persistFeatures)
+    val nf = cached(newEmb.select(col(idCol).as("id"), col(vecCol).as("vec")))
+    val cf = cached(corpusEmb.select(col(idCol).as("id"), col(vecCol).as("vec")))
     val cents = Option(centroids)
       .getOrElse(Ann.kmeansCentroids(cf, "id", "vec", nlist))
     val nb = Ann.cellAssignments(nf, cents, "id", "vec")
@@ -1267,10 +1203,8 @@ object Dedup {
       .select(col("id").as("b"), col("cell").as("key"))
     val pairs = CandidateGen.bipartitePairsFromBuckets(nb, cb, maxBucketSize,
       saltOversized = saltOversized)
-    pairs
-      .join(nf.select(col("id").as("a"), col("vec").as("__va")), "a")
-      .join(cf.select(col("id").as("b"), col("vec").as("__vb")), "b")
-      .withColumn("cosine", cosine_sim(col("__va"), col("__vb")))
+    verifyJoin(pairs, nf, cf, "vec")
+      .withColumn("cosine", cosine_sim(col("va"), col("vb")))
       .where(col("cosine") >= cosineMin)
       .select("a", "b", "cosine")
   }

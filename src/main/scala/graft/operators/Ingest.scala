@@ -51,28 +51,22 @@ object Ingest {
   }
 
   /**
-   * One payload pass -> persisted compact features frame: validation columns
-   * + the DedupPipeline feature columns. Feed to
-   * [[DedupPipeline.runFromFeatures]].
+   * One payload pass -> persisted (MEMORY_AND_DISK) compact features frame:
+   * validation columns + the DedupPipeline feature columns. Feed to
+   * [[DedupPipeline.runFromFeatures]]. Several downstream stages read the
+   * frame; the CALLER owns the cache entry and `unpersist()`s it when the
+   * run completes (as [[graft.Main]] does).
    *
    * @param partitions repartition the (small) carried rows before feature
    *                   computation — sized to the FEATURE data, decoupled from
    *                   the payload scan's file splits; 0 keeps scan partitioning
-   * @param persistFeatures cache the returned frame (MEMORY_AND_DISK) — the
-   *                   same knob as the [[Dedup]] pair family. The frame is
-   *                   consumed by several downstream stages, so the default
-   *                   is on; the CALLER owns the lifecycle and must
-   *                   `unpersist()` when the run completes (as [[graft.Main]]
-   *                   does). Pass false to keep recompute semantics — e.g.
-   *                   when the features flow into exactly one checkpointed
-   *                   stage, or at a scale where caching would only spill.
    */
   def run(spark: SparkSession, images: DataFrame, cfg: DedupConfig,
-      partitions: Int = 0, persistFeatures: Boolean = true): DataFrame = {
+      partitions: Int = 0): DataFrame = {
     val carried = validatedCarry(spark, images)
     val sized = if (partitions > 0) carried.repartition(partitions) else carried
-    val feat = DedupPipeline.features(sized, cfg,
-      carry = Seq("decode_ok", "phash_match", "dims_match", "valid"))
-    if (persistFeatures) feat.persist(StorageLevel.MEMORY_AND_DISK) else feat
+    DedupPipeline.features(sized, cfg,
+        carry = Seq("decode_ok", "phash_match", "dims_match", "valid"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 }

@@ -309,8 +309,7 @@ object TextScores {
   private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       cfg: graft.config.DedupConfig): DataFrame =
     docs.select(col(idCol).as("id"),
-      array_distinct(shingle_hashes(tokens(col(textCol)),
-        cfg.shingleK, cfg.seed)).as("sh"))
+      array_distinct(text_shingles(col(textCol), cfg)).as("sh"))
 
   /**
    * EXACT n-gram novelty of a NEW batch against an EXISTING corpus: per new
@@ -353,7 +352,7 @@ object TextScores {
       cfg: graft.config.DedupConfig, expectedItems: Long = 4000000L,
       fpp: Double = 0.01): Array[Byte] = {
     val bf = corpus.select(explode(array_distinct(
-        shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed))).as("__g"))
+        text_shingles(col(textCol), cfg))).as("__g"))
       .stat.bloomFilter("__g", expectedItems, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)

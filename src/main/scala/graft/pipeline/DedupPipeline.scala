@@ -47,10 +47,9 @@ object DedupPipeline {
     images.select(
       Seq(col("image_id").as("id"),
         normalize_text(col("caption")).as("norm_text"),
-        shingle_hashes(tokens(col("caption")), cfg.shingleK, cfg.seed).as("shingles"),
+        text_shingles(col("caption"), cfg).as("shingles"),
         col("phash")) ++ carry.map(col): _*)
-      .withColumn("band_keys", signature_band_keys(col("shingles"),
-        cfg.numHashes, cfg.bands, cfg.rowsPerBand, cfg.seed, cfg.oph))
+      .withColumn("band_keys", text_band_keys(col("shingles"), cfg))
       .withColumn("simhash", simhash64(phash_tokens(col("phash")), cfg.seed))
       .withColumn("content_hash", xxhash64(col("norm_text")))
       // dense join identity: CONTENT-derived (image_id is unique by input

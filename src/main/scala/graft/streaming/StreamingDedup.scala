@@ -36,9 +36,7 @@ object StreamingDedup {
     * this is the signatures table [[graft.io.TableIO.upsert]] maintains). */
   def corpusBands(corpus: DataFrame, textCol: String, cfg: DedupConfig): DataFrame =
     corpus.select(explode(
-        signature_band_keys(
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed),
-          cfg.numHashes, cfg.bands, cfg.rowsPerBand, cfg.seed, cfg.oph)).as("band_key"))
+        text_band_keys(text_shingles(col(textCol), cfg), cfg)).as("band_key"))
       .distinct()
 
   /**
@@ -53,9 +51,7 @@ object StreamingDedup {
       idCol: String, textCol: String, tsCol: String,
       cfg: DedupConfig, horizon: String): DataFrame =
     stream.withColumn("band_key", explode(
-        signature_band_keys(
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed),
-          cfg.numHashes, cfg.bands, cfg.rowsPerBand, cfg.seed, cfg.oph)))
+        text_band_keys(text_shingles(col(textCol), cfg), cfg)))
       .join(staticBands, Seq("band_key"), "left_semi")
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark(idCol)

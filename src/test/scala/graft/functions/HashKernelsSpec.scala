@@ -91,20 +91,27 @@ class HashKernelsSpec extends AnyFunSuite {
   }
 
   test("oph fused band keys equal bandKeys over the materialized signature") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     val rng = new scala.util.Random(19)
-    val sh = Array.fill(60)(rng.nextLong())
-    val viaSig = {
-      val sig = HashKernels.ophArray(sh, 128, 42L)
-      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      HashKernels.bandKeys(UnsafeArrayData.fromPrimitiveArray(sig), 64, 2, 42L)
-        .toLongArray()
+    val inputs = Seq(Array.fill(60)(rng.nextLong()), Array.emptyLongArray)
+    for (sh <- inputs) {
+      // (kernel name, signature kernel, fused signature+banding kernel)
+      val kernels = Seq[(String, Array[Long] => Array[Long],
+          UnsafeArrayData => org.apache.spark.sql.catalyst.util.ArrayData)](
+        ("oph", HashKernels.ophArray(_, 128, 42L),
+          HashKernels.ophBandKeys(_, 128, 64, 2, 42L)),
+        ("classic", HashKernels.minhashArray(_, 128, 42L),
+          HashKernels.minhashBandKeys(_, 128, 64, 2, 42L)))
+      for ((name, signature, fusedKernel) <- kernels) {
+        val viaSig = HashKernels.bandKeys(
+          UnsafeArrayData.fromPrimitiveArray(signature(sh)), 64, 2, 42L)
+          .toLongArray()
+        val fused = fusedKernel(UnsafeArrayData.fromPrimitiveArray(sh))
+          .toLongArray()
+        assert(fused.length == 64, s"$name, ${sh.length} shingles")
+        assert(fused.sameElements(viaSig), s"$name, ${sh.length} shingles")
+      }
     }
-    val fused = {
-      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      HashKernels.ophBandKeys(UnsafeArrayData.fromPrimitiveArray(sh), 128, 64, 2, 42L)
-        .toLongArray()
-    }
-    assert(fused.sameElements(viaSig))
   }
 
   test("simhash: deterministic, equal inputs equal outputs, disjoint inputs far") {

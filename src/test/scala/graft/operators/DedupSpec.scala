@@ -261,29 +261,48 @@ class DedupSpec extends SparkSpec {
     assert((0L until 10L).forall(i => got.contains((i, i + 1000))), s"got=$got")
   }
 
-  test("persistFeatures=false leaves no lingering cached RDDs") {
+  test("pair operators cache one frame per input side; clearCache releases all") {
     val docs = corpus.take(40).toDF("doc_id", "text")
     val rng = new scala.util.Random(7)
     val embs = (0L until 20L)
       .map(i => (i, Array.fill(16)(rng.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Dedup.minhashLshPairs(docs, "doc_id", "text", cfg,
-      persistFeatures = false).count()
-    Dedup.simhashPairs(docs, "doc_id", "text", cfg,
-      persistFeatures = false).count()
-    Dedup.ngramJaccardPairs(docs, "doc_id", "text", cfg,
-      persistFeatures = false).count()
-    Dedup.embeddingNearDupPairs(embs, "vec_id", "embedding", cosineMin = 0.99,
-      persistFeatures = false).count()
-    Dedup.longMatchPairs(docs, "doc_id", "text", minLen = 24, k = 8,
-      persistFeatures = false).count()
-    Dedup.incrementalNearDupPairs(docs, docs.select(col("doc_id") + 500 as "doc_id",
-      $"text"), "doc_id", "text", cfg, persistFeatures = false).count()
-    Dedup.groupSignatures(docs, "doc_id", "text", "doc_id", cfg,
-      persistFeatures = false).count()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"cache entries leaked: $leaked")
+    // earlier tests leave operator caches behind: start from an empty
+    // catalog cache so the final state is comparable
+    spark.catalog.clearCache()
+    val start = spark.sparkContext.getPersistentRDDs.keySet
+    // (operator, input sides, run)
+    val ops = Seq[(String, Int, () => Long)](
+      ("minhashLshPairs", 1,
+        () => Dedup.minhashLshPairs(docs, "doc_id", "text", cfg).count()),
+      ("simhashPairs", 1,
+        () => Dedup.simhashPairs(docs, "doc_id", "text", cfg).count()),
+      ("ngramJaccardPairs", 1,
+        () => Dedup.ngramJaccardPairs(docs, "doc_id", "text", cfg).count()),
+      ("embeddingNearDupPairs", 1,
+        () => Dedup.embeddingNearDupPairs(embs, "vec_id", "embedding",
+          cosineMin = 0.99).count()),
+      ("longMatchPairs", 1,
+        () => Dedup.longMatchPairs(docs, "doc_id", "text", minLen = 24, k = 8)
+          .count()),
+      ("incrementalNearDupPairs", 2,
+        () => Dedup.incrementalNearDupPairs(docs,
+          docs.select(col("doc_id") + 500 as "doc_id", $"text"),
+          "doc_id", "text", cfg).count()),
+      ("groupSignatures", 1,
+        () => Dedup.groupSignatures(docs, "doc_id", "text", "doc_id", cfg)
+          .count()))
+    for ((name, sides, run) <- ops) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run()
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size <= sides, s"$name cached ${added.size} RDDs for $sides side(s)")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet != start,
+      "the operators cached nothing, so the release check below proves nothing")
+    spark.catalog.clearCache()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == start,
+      "clearCache must release every entry the operators cached")
   }
 
   test("incremental near-dup: bipartite only, matches brute force new-vs-corpus") {

@@ -43,15 +43,10 @@ class IngestSpec extends SparkSpec {
     fused.unpersist()
   }
 
-  test("persistFeatures=false caches nothing; a completed Main-style run leaves no cached RDD") {
+  test("a completed Main-style run leaves no cached RDD") {
     images.count() // materialize the fixture cache before the baseline snapshot
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val off = Ingest.run(spark, images, cfg, partitions = 4,
-      persistFeatures = false)
-    off.count()
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "persistFeatures=false must not register any cached RDD")
-    // the default path: caller unpersists after consuming (the Main contract)
+    // the caller unpersists after consuming (the Main contract)
     val on = Ingest.run(spark, images, cfg, partitions = 4)
     on.count()
     assert(spark.sparkContext.getPersistentRDDs.keySet != before)

@@ -3,6 +3,8 @@
 # (skips sbt JVM startup). Usage: tools/run.sh <mainClass> [args...]
 # Heap: SPARK_DRIVER_MEM, else half of RAM clamped to 2-8g.
 MAIN=$1; shift
+# classes come from the checkout that holds this script
+ROOT=$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)
 MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
   END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}
 exec java \
@@ -21,5 +23,5 @@ exec java \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx$MEM \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
