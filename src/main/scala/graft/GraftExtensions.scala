@@ -15,9 +15,13 @@ import org.apache.spark.sql.types.Decimal
  * spark.sql.extensions=graft.GraftExtensions`) — the idiomatic Spark way to
  * ship third-party Catalyst expressions to a cluster.
  *
- * The builders produce the same codegen'd expressions the Column API uses
- * ([[graft.functions.GraftExpressions]]); static parameters (k, bands, seed…)
+ * The kernel functions are built from the same table the Column API calls
+ * ([[graft.functions.Kernel.all]]), so both surfaces produce one
+ * [[graft.functions.KernelCall]]; static parameters (k, bands, seed…)
  * arrive as foldable SQL literals and are evaluated at resolution time.
+ * Column-only are the kernels that take a driver-built object, which no SQL
+ * literal can spell: `adc_lookup` (PQ subspace offsets), the PQ and IVF
+ * codebook kernels and `bloom_count_contained` (a serialized sketch).
  *
  * Reference analogue: the coder/method registry the reference wires by hand in
  * ea/sim/dev/scripts/training/training/common.py:47-74 — here it is one
@@ -76,119 +80,31 @@ object GraftExtensions {
     require(args.size >= min && args.size <= max,
       s"$fn expects $min..$max arguments, got ${args.size}")
 
-  private def seedArg(fn: String, args: Seq[Expression], at: Int): Long =
-    if (args.size > at) longOf(args(at), fn, "seed") else 42L
-
   private def desc(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
-  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
-    reg("graft_shingles", "graft_shingles(tokens, k[, seed]) - k-shingle hashes") { args =>
-      arity("graft_shingles", args, 2, 3)
-      ShingleHashes(args.head, intOf(args(1), "graft_shingles", "k"),
-        seedArg("graft_shingles", args, 2))
-    },
-    reg("graft_minhash", "graft_minhash(shingles, numHashes[, seed]) - MinHash signature") { args =>
-      arity("graft_minhash", args, 2, 3)
-      MinHashSignature(args.head, intOf(args(1), "graft_minhash", "numHashes"),
-        seedArg("graft_minhash", args, 2))
-    },
-    reg("graft_oph", "graft_oph(shingles, numHashes[, seed]) - one-permutation MinHash signature (optimal densification)") { args =>
-      arity("graft_oph", args, 2, 3)
-      OphSignature(args.head, intOf(args(1), "graft_oph", "numHashes"),
-        seedArg("graft_oph", args, 2))
-    },
-    reg("graft_oph_band_keys",
-        "graft_oph_band_keys(shingles, numHashes, bands, rowsPerBand[, seed]) - fused OPH+LSH") { args =>
-      arity("graft_oph_band_keys", args, 4, 5)
-      OphBandKeys(args.head, intOf(args(1), "graft_oph_band_keys", "numHashes"),
-        intOf(args(2), "graft_oph_band_keys", "bands"),
-        intOf(args(3), "graft_oph_band_keys", "rowsPerBand"),
-        seedArg("graft_oph_band_keys", args, 4))
-    },
-    reg("graft_simhash64", "graft_simhash64(tokenHashes[, seed]) - 64-bit SimHash") { args =>
-      arity("graft_simhash64", args, 1, 2)
-      SimHash64(args.head, seedArg("graft_simhash64", args, 1))
-    },
-    reg("graft_band_keys", "graft_band_keys(sig, bands, rowsPerBand[, seed]) - LSH band keys") { args =>
-      arity("graft_band_keys", args, 3, 4)
-      LshBandKeys(args.head, intOf(args(1), "graft_band_keys", "bands"),
-        intOf(args(2), "graft_band_keys", "rowsPerBand"),
-        seedArg("graft_band_keys", args, 3))
-    },
-    reg("graft_minhash_band_keys",
-        "graft_minhash_band_keys(shingles, numHashes, bands, rowsPerBand[, seed]) - fused MinHash+LSH") { args =>
-      arity("graft_minhash_band_keys", args, 4, 5)
-      MinHashBandKeys(args.head, intOf(args(1), "graft_minhash_band_keys", "numHashes"),
-        intOf(args(2), "graft_minhash_band_keys", "bands"),
-        intOf(args(3), "graft_minhash_band_keys", "rowsPerBand"),
-        seedArg("graft_minhash_band_keys", args, 4))
-    },
-    reg("graft_jaccard", "graft_jaccard(a, b) - exact Jaccard of two hash arrays") { args =>
-      arity("graft_jaccard", args, 2, 2)
-      JaccardSim(args.head, args(1))
-    },
-    reg("graft_lcs_length", "graft_lcs_length(a, b[, maxLen]) - longest-common-substring length") { args =>
-      arity("graft_lcs_length", args, 2, 3)
-      LcsLength(args.head, args(1),
-        if (args.size > 2) intOf(args(2), "graft_lcs_length", "maxLen") else 2000)
-    },
-    reg("graft_cosine", "graft_cosine(a, b) - cosine similarity of two float vectors") { args =>
-      arity("graft_cosine", args, 2, 2)
-      CosineSim(args.head, args(1))
-    },
-    reg("graft_dot", "graft_dot(a, b) - inner product of two float vectors") { args =>
-      arity("graft_dot", args, 2, 2)
-      DotProduct(args.head, args(1))
-    },
-    reg("graft_vec_sub", "graft_vec_sub(a, b) - elementwise float-vector difference") { args =>
-      arity("graft_vec_sub", args, 2, 2)
-      VecSub(args.head, args(1))
-    },
-    reg("graft_srp_bucket", "graft_srp_bucket(vec, bits[, seed]) - sign-random-projection bucket") { args =>
-      arity("graft_srp_bucket", args, 2, 3)
-      SrpBucket(args.head, intOf(args(1), "graft_srp_bucket", "bits"),
-        seedArg("graft_srp_bucket", args, 2))
-    },
-    reg("graft_phash_tokens", "graft_phash_tokens(phash) - positional byte-gram tokens") { args =>
-      arity("graft_phash_tokens", args, 1, 1)
-      PhashTokens(args.head)
-    },
-    reg("graft_phash_canonical", "graft_phash_canonical(phash) - min over the mirror/rotation orbit") { args =>
-      arity("graft_phash_canonical", args, 1, 1)
-      PhashCanonical(args.head)
-    },
-    reg("graft_phash_transpose", "graft_phash_transpose(phash) - 8x8 bit-grid transpose") { args =>
-      arity("graft_phash_transpose", args, 1, 1)
-      PhashTranspose(args.head)
-    },
-    reg("graft_phash_rot90", "graft_phash_rot90(phash) - 90-degree-clockwise grid rotation") { args =>
-      arity("graft_phash_rot90", args, 1, 1)
-      PhashRot90(args.head)
-    },
-    reg("graft_phash_canonical_d4",
-        "graft_phash_canonical_d4(phash) - min over all eight dihedral grid symmetries") { args =>
-      arity("graft_phash_canonical_d4", args, 1, 1)
-      PhashCanonicalD4(args.head)
-    },
-    reg("graft_fingerprint", "graft_fingerprint(s[, seed]) - rolling polynomial fingerprint") { args =>
-      arity("graft_fingerprint", args, 1, 2)
-      RollingFingerprint(args.head, seedArg("graft_fingerprint", args, 1))
-    },
-    reg("graft_winnow_anchors",
-        "graft_winnow_anchors(s, k, w[, seed]) - winnowed k-gram anchor hashes") { args =>
-      arity("graft_winnow_anchors", args, 3, 4)
-      WinnowAnchors(args.head, intOf(args(1), "graft_winnow_anchors", "k"),
-        intOf(args(2), "graft_winnow_anchors", "w"),
-        seedArg("graft_winnow_anchors", args, 3))
-    },
-    reg("graft_fast_align",
-        "graft_fast_align(tokensA, tokensB[, gamma[, alpha]]) - FaST positional alignment score") { args =>
-      arity("graft_fast_align", args, 2, 4)
-      FastAlign(args.head, args(1),
-        if (args.size > 2) dblOf(args(2), "graft_fast_align", "gamma") else 1.0,
-        if (args.size > 3) dblOf(args(3), "graft_fast_align", "alpha") else 0.0)
-    },
+  /** SQL function `fn` of table kernel `k`: its column arguments, then its
+    * literal parameters, the trailing ones optional where the table gives a
+    * default. */
+  private def kernelCall(k: Kernel, fn: String)(args: Seq[Expression]): Expression = {
+    val n = k.args.length
+    arity(fn, args, n + k.params.count(_.default.isEmpty), n + k.params.length)
+    KernelCall(k.name, args.take(n), k.params.zipWithIndex.map { case (p, i) =>
+      if (args.size <= n + i) p.default.get
+      else p.lit match {
+        case Lit.IntLit => intOf(args(n + i), fn, p.name)
+        case Lit.LongLit => longOf(args(n + i), fn, p.name)
+        case Lit.DoubleLit => dblOf(args(n + i), fn, p.name)
+        case Lit.IntsLit => throw new IllegalArgumentException(
+          s"$fn: ${p.name} has no SQL literal form")
+      }
+    })
+  }
+
+  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    Kernel.all.flatMap(k => k.sql.map { case (fn, doc) =>
+      reg(fn, s"$fn(${k.signature}) - $doc")(kernelCall(k, fn))
+    }) ++ Seq(
     // --- text-analysis surface: the Column compositions from
     // graft.functions, re-rooted on the SQL argument expressions (same
     // built-in codegen'd trees the Column API produces) ------------------
@@ -212,10 +128,6 @@ object GraftExtensions {
       arity("graft_subword_count", args, 1, 1)
       resolvedExpression(subword_count(column(args.head)))
     },
-    reg("graft_stopword_ratio", "graft_stopword_ratio(s) - fraction of stopword tokens") { args =>
-      arity("graft_stopword_ratio", args, 1, 1)
-      resolvedExpression(stopword_ratio(column(args.head)))
-    },
     reg("graft_lang_id", "graft_lang_id(s[, threshold]) - stopword-density language ID") { args =>
       arity("graft_lang_id", args, 1, 2)
       resolvedExpression(lang_id(column(args.head),
@@ -238,22 +150,6 @@ object GraftExtensions {
     reg("graft_hamming64", "graft_hamming64(a, b) - Hamming distance of two 64-bit hashes") { args =>
       arity("graft_hamming64", args, 2, 2)
       resolvedExpression(hamming64(column(args.head), column(args(1))))
-    },
-    reg("graft_char_entropy",
-        "graft_char_entropy(s) - Shannon entropy (bits/char) of the code-point distribution") { args =>
-      arity("graft_char_entropy", args, 1, 1)
-      CharEntropy(args.head)
-    },
-    reg("graft_icws",
-        "graft_icws(hashes, numHashes[, seed]) - ICWS weighted-MinHash signature (repeats = weights)") { args =>
-      arity("graft_icws", args, 2, 3)
-      IcwsSignature(args.head, intOf(args(1), "graft_icws", "numHashes"),
-        seedArg("graft_icws", args, 2))
-    },
-    reg("graft_weighted_jaccard",
-        "graft_weighted_jaccard(a, b) - exact weighted Jaccard of two hash multisets") { args =>
-      arity("graft_weighted_jaccard", args, 2, 2)
-      WeightedJaccard(args.head, args(1))
     })
 
   private def reg(name: String, usage: String)(builder: Seq[Expression] => Expression)

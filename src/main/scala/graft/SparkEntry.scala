@@ -434,8 +434,8 @@ object SparkEntry {
       val n = (lit(3) + col("doc_id") % 7).cast("int")
       val toks = transform(sequence(lit(0), n - 1), i => concat(lit("w"), i))
       docs.select(col("doc_id"),
-          round(TextScores.fast_align(toks, toks), 4).as("score_self"),
-          round(TextScores.fast_align(toks,
+          round(fast_align(toks, toks), 4).as("score_self"),
+          round(fast_align(toks,
             concat(toks, array(lit("zz")))), 4).as("score_pad"))
         .orderBy("doc_id")
     }),

@@ -1,543 +1,303 @@
 package graft.functions
 
+import java.lang.invoke.{MethodHandle, MethodHandles, MethodType}
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext,
-  ExprCode}
+  ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Custom Catalyst expressions for the signature methods (SURVEY.md section 2.10).
  *
- * Each expression generates a single static call into [[HashKernels]] via
- * `defineCodeGen`, so the surrounding whole-stage-codegen span stays intact
- * (no black-box ScalaUDF serialization, no Row boxing).
+ * The static kernels are one expression, [[KernelCall]], over one table,
+ * [[Kernel.all]]. Each row names a [[HashKernels]] method, its argument and
+ * result types, and its literal parameters with their defaults and valid
+ * ranges. The generated code is that method's single static call, so the
+ * surrounding whole-stage-codegen span stays intact (no black-box ScalaUDF
+ * serialization, no Row boxing); the interpreted path invokes the same
+ * method. Adding a kernel means one `HashKernels` method plus one table
+ * row: its Column helper in `graft.functions` and its SQL function in
+ * [[graft.GraftExtensions]] are one call into the row.
+ *
+ * The kernels that read a driver-built object keep their own classes:
+ * [[BloomCountContained]] and the [[PqBook]]/[[CentroidBook]] kernels.
  */
 
-/** array<string> tokens -> array<long> k-shingle hashes.
-  * Reference n-gram semantics: ea/sim/main/preprocess/seq_coder.py:69-81. */
-case class ShingleHashes(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "shingle_hashes"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.shingleHashes(input.asInstanceOf[ArrayData], k, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.shingleHashes($c, $k, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
+/** The Java type of a kernel's literal parameter. */
+sealed abstract class Lit(val cls: Class[_], val what: String) {
+  def is(v: Any): Boolean
+  /** `v` as an argument of the generated call. */
+  def gen(ctx: CodegenContext, v: Any): String
+  /** `v` as an argument of the interpreted call. */
+  def arg(v: Any): AnyRef = v.asInstanceOf[AnyRef]
 }
 
-/** array<long> shingles -> array<long> MinHash signature. */
-case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_signature"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.minhash(input.asInstanceOf[ArrayData], numHashes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.minhash($c, $numHashes, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
+object Lit {
+  case object IntLit extends Lit(java.lang.Integer.TYPE, "an int") {
+    def is(v: Any): Boolean = v.isInstanceOf[Int]
+    def gen(ctx: CodegenContext, v: Any): String = v.toString
+  }
+  case object LongLit extends Lit(java.lang.Long.TYPE, "a long") {
+    def is(v: Any): Boolean = v.isInstanceOf[Long]
+    def gen(ctx: CodegenContext, v: Any): String = s"${v}L"
+  }
+  /** Finite values only: `NaND` is no Java literal. */
+  case object DoubleLit extends Lit(java.lang.Double.TYPE, "a finite double") {
+    def is(v: Any): Boolean = v match {
+      case d: Double => java.lang.Double.isFinite(d)
+      case _ => false
+    }
+    def gen(ctx: CodegenContext, v: Any): String = s"${v}D"
+  }
+  /** A `Seq[Int]`; the kernel reads it as an `int[]` that rides with the plan. */
+  case object IntsLit extends Lit(classOf[Array[Int]], "a Seq[Int]") {
+    def is(v: Any): Boolean = v match {
+      case s: Seq[_] => s.forall(_.isInstanceOf[Int])
+      case _ => false
+    }
+    def gen(ctx: CodegenContext, v: Any): String = ctx.addReferenceObj("ints", arg(v), "int[]")
+    override def arg(v: Any): AnyRef = v.asInstanceOf[Seq[Int]].toArray
+  }
 }
 
-/** array<long> shingles -> array<long> one-permutation MinHash signature
-  * with optimal densification (see HashKernels.ophArray — one hash per
-  * element instead of numHashes; same per-bin Jaccard collision law). */
-case class OphSignature(child: Expression, numHashes: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "oph_signature"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.oph(input.asInstanceOf[ArrayData], numHashes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.oph($c, $numHashes, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): OphSignature =
-    copy(child = newChild)
+/** A literal parameter of a [[Kernel]]: its name (in the Scala helper, the
+  * SQL usage and the error messages), its Java type, its valid range (`ok`,
+  * spelled `rule`) and the value the SQL surface fills in when it is left
+  * out. */
+final case class KernelParam(name: String, lit: Lit, rule: String, ok: Any => Boolean,
+    default: Option[Any] = None)
+
+/** One static kernel. `name` is the expression's pretty name; `method` the
+  * [[HashKernels]] method called with the column arguments, then the
+  * literal parameters; `sql` the SQL function name and its usage text, for
+  * the kernels that have a SQL twin; `rule` checks the parameters together. */
+final case class Kernel(name: String, method: String, args: Seq[(String, DataType)],
+    result: DataType, params: Seq[KernelParam] = Nil,
+    sql: Option[(String, String)] = None, rule: Seq[Any] => Option[String] = _ => None) {
+
+  /** The argument list of the SQL usage line, optional parameters bracketed. */
+  def signature: String = {
+    val (required, optional) = params.partition(_.default.isEmpty)
+    (args.map(_._1) ++ required.map(_.name)).mkString(", ") +
+      optional.foldRight("")((p, rest) => s"[, ${p.name}$rest]")
+  }
+
+  /** Fails, naming this kernel and the parameter, unless `values` are valid. */
+  def validate(values: Seq[Any]): Unit = {
+    require(values.length == params.length,
+      s"$name takes ${params.length} literal parameters, got ${values.length}")
+    params.zip(values).foreach { case (p, v) =>
+      require(p.lit.is(v), s"$name: ${p.name} must be ${p.lit.what}, got $v")
+      require(p.ok(v), s"$name: ${p.name}($v) must be ${p.rule}")
+    }
+    rule(values).foreach(m => throw new IllegalArgumentException(s"$name: $m"))
+  }
+
+  /** The analysis-time check of the argument types (array nullability
+    * aside): a wrong type fails resolution instead of every task. */
+  def checkTypes(got: Seq[DataType]): TypeCheckResult = {
+    def fits(want: DataType, have: DataType): Boolean = (want, have) match {
+      case (ArrayType(w, _), ArrayType(h, _)) => fits(w, h)
+      case (_: StringType, _: StringType) => true
+      case _ => want == have
+    }
+    if (args.zip(got).forall { case ((_, w), h) => fits(w, h) })
+      TypeCheckResult.TypeCheckSuccess
+    else {
+      val want = args.map(_._2.simpleString)
+      val wanted =
+        if (want.length == 1) s"${if ("aeiou".contains(want.head.head)) "an" else "a"} " +
+          s"${want.head} argument"
+        else want.mkString("", " and ", " arguments")
+      TypeCheckResult.TypeCheckFailure(
+        s"$name requires $wanted, got ${got.map(_.sql).mkString(" and ")}")
+    }
+  }
 }
 
-/** array<long> shingles -> array<long> LSH band keys over the OPH signature,
-  * fused (the MinHashBandKeys counterpart for the one-permutation kernel). */
-case class OphBandKeys(child: Expression, numHashes: Int, bands: Int,
-    rowsPerBand: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "oph_band_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.ophBandKeys(input.asInstanceOf[ArrayData],
-      numHashes, bands, rowsPerBand, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.ophBandKeys($c, $numHashes, $bands, $rowsPerBand, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): OphBandKeys =
-    copy(child = newChild)
+object Kernel {
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Floats = ArrayType(FloatType, containsNull = false)
+  private val Strings = ArrayType(StringType)
+
+  private def atLeast(name: String, min: Int, default: Option[Int] = None) =
+    KernelParam(name, Lit.IntLit, s">= $min", _.asInstanceOf[Int] >= min, default)
+  private val seed = KernelParam("seed", Lit.LongLit, "a long", _ => true, Some(42L))
+  /** `1L << 64` wraps around, so 65 bits would equal 64 silently. */
+  private val bits = KernelParam("bits", Lit.IntLit, "in 1..64",
+    v => v.asInstanceOf[Int] >= 1 && v.asInstanceOf[Int] <= 64)
+  private def real(name: String, default: Double) =
+    KernelParam(name, Lit.DoubleLit, "finite", _ => true, Some(default))
+  private val bandParams = Seq(atLeast("numHashes", 1), atLeast("bands", 1),
+    atLeast("rowsPerBand", 1), seed)
+  /** The fused band keys read bands * rowsPerBand signature slots. */
+  private val bandsFit: Seq[Any] => Option[String] = {
+    case Seq(n: Int, b: Int, r: Int, _) if b.toLong * r > n =>
+      Some(s"bands($b) * rowsPerBand($r) must be <= numHashes($n)")
+    case _ => None
+  }
+  private def sql(fn: String, doc: String) = Some((fn, doc))
+
+  val all: Seq[Kernel] = Seq(
+    // reference n-gram semantics: ea/sim/main/preprocess/seq_coder.py:69-81
+    Kernel("shingle_hashes", "shingleHashes", Seq("tokens" -> Strings), Longs,
+      Seq(atLeast("k", 1), seed), sql("graft_shingles", "k-shingle hashes")),
+    Kernel("minhash_signature", "minhash", Seq("shingles" -> Longs), Longs,
+      Seq(atLeast("numHashes", 1), seed), sql("graft_minhash", "MinHash signature")),
+    Kernel("oph_signature", "oph", Seq("shingles" -> Longs), Longs,
+      Seq(atLeast("numHashes", 1), seed),
+      sql("graft_oph", "one-permutation MinHash signature (optimal densification)")),
+    Kernel("oph_band_keys", "ophBandKeys", Seq("shingles" -> Longs), Longs, bandParams,
+      sql("graft_oph_band_keys", "fused OPH+LSH"), bandsFit),
+    Kernel("simhash64", "simhash64", Seq("tokenHashes" -> Longs), LongType, Seq(seed),
+      sql("graft_simhash64", "64-bit SimHash")),
+    Kernel("lsh_band_keys", "bandKeys", Seq("sig" -> Longs), Longs,
+      Seq(atLeast("bands", 1), atLeast("rowsPerBand", 1), seed),
+      sql("graft_band_keys", "LSH band keys")),
+    Kernel("minhash_band_keys", "minhashBandKeys", Seq("shingles" -> Longs), Longs,
+      bandParams, sql("graft_minhash_band_keys", "fused MinHash+LSH"), bandsFit),
+    Kernel("jaccard_sim", "jaccardData", Seq("a" -> Longs, "b" -> Longs), DoubleType,
+      sql = sql("graft_jaccard", "exact Jaccard of two hash arrays")),
+    Kernel("lcs_length", "lcsLengthData", Seq("a" -> StringType, "b" -> StringType),
+      IntegerType, Seq(atLeast("maxLen", 0, Some(2000))),
+      sql("graft_lcs_length", "longest-common-substring length")),
+    Kernel("cosine_sim", "cosineData", Seq("a" -> Floats, "b" -> Floats), DoubleType,
+      sql = sql("graft_cosine", "cosine similarity of two float vectors")),
+    Kernel("dot_product", "dotData", Seq("a" -> Floats, "b" -> Floats), DoubleType,
+      sql = sql("graft_dot", "inner product of two float vectors")),
+    // IVFADC residuals; the zip_with equivalent runs its lambda interpreted
+    Kernel("vec_sub", "subData", Seq("a" -> Floats, "b" -> Floats), Floats,
+      sql = sql("graft_vec_sub", "elementwise float-vector difference")),
+    // PQ/ADC score; the driver-built subspace offsets ride with the plan
+    Kernel("adc_lookup", "adcData",
+      Seq("codes" -> ArrayType(IntegerType), "lut" -> ArrayType(DoubleType)), DoubleType,
+      Seq(KernelParam("offsets", Lit.IntsLit, ">= 0 each",
+        _.asInstanceOf[Seq[Int]].forall(_ >= 0)))),
+    Kernel("srp_bucket", "srpBucketData", Seq("vec" -> Floats), LongType, Seq(bits, seed),
+      sql("graft_srp_bucket", "sign-random-projection bucket")),
+    // Schleimer et al. SIGMOD'03, see HashKernels.winnowAnchorsFromChars
+    Kernel("winnow_anchors", "winnowAnchors", Seq("s" -> StringType), Longs,
+      Seq(atLeast("k", 1), atLeast("w", 1), seed),
+      sql("graft_winnow_anchors", "winnowed k-gram anchor hashes")),
+    Kernel("phash_tokens", "phashTokensData", Seq("phash" -> LongType), Longs,
+      sql = sql("graft_phash_tokens", "positional byte-gram tokens")),
+    Kernel("phash_canonical", "phashCanonical", Seq("phash" -> LongType), LongType,
+      sql = sql("graft_phash_canonical", "min over the mirror/rotation orbit")),
+    Kernel("phash_transpose", "phashTranspose", Seq("phash" -> LongType), LongType,
+      sql = sql("graft_phash_transpose", "8x8 bit-grid transpose")),
+    Kernel("phash_rot90", "phashRot90", Seq("phash" -> LongType), LongType,
+      sql = sql("graft_phash_rot90", "90-degree-clockwise grid rotation")),
+    Kernel("phash_canonical_d4", "phashCanonicalD4", Seq("phash" -> LongType), LongType,
+      sql = sql("graft_phash_canonical_d4", "min over all eight dihedral grid symmetries")),
+    Kernel("fast_align", "fastAlignData", Seq("tokensA" -> Strings, "tokensB" -> Strings),
+      DoubleType, Seq(real("gamma", 1.0), real("alpha", 0.0)),
+      sql("graft_fast_align", "FaST positional alignment score")),
+    Kernel("rolling_fingerprint", "rollingFingerprintData", Seq("s" -> StringType),
+      LongType, Seq(seed), sql("graft_fingerprint", "rolling polynomial fingerprint")),
+    Kernel("icws_signature", "icws", Seq("hashes" -> Longs), Longs,
+      Seq(atLeast("numHashes", 1), seed),
+      sql("graft_icws", "ICWS weighted-MinHash signature (repeats = weights)")),
+    Kernel("weighted_jaccard", "weightedJaccardData", Seq("a" -> Longs, "b" -> Longs),
+      DoubleType,
+      sql = sql("graft_weighted_jaccard", "exact weighted Jaccard of two hash multisets")),
+    Kernel("char_entropy", "charEntropy", Seq("s" -> StringType), DoubleType,
+      sql = sql("graft_char_entropy",
+        "Shannon entropy (bits/char) of the code-point distribution")),
+    Kernel("stopword_ratio", "stopwordRatio", Seq("s" -> StringType), DoubleType,
+      sql = sql("graft_stopword_ratio", "fraction of stopword tokens")),
+    // SQL reaches these two through the coalescing Column helpers
+    // (graft_quality, graft_distinct_token_ratio)
+    Kernel("quality_score", "qualityScore", Seq("s" -> StringType), DoubleType),
+    Kernel("distinct_token_ratio", "distinctTokenRatio", Seq("s" -> StringType), DoubleType))
+
+  private val byName: Map[String, Kernel] = all.map(k => k.name -> k).toMap
+
+  def named(name: String): Kernel =
+    byName.getOrElse(name, throw new IllegalArgumentException(s"no kernel named $name"))
 }
 
-/** array<long> token hashes -> long SimHash64. */
-case class SimHash64(child: Expression, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhash64(input.asInstanceOf[ArrayData], seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhash64($c, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
+/** One call of the kernel `name` ([[Kernel.named]]): `children` are its
+  * column arguments and `params` its literal parameters, in table order.
+  * Null in, null out. The parameters are checked when the expression is
+  * built, the argument types at analysis. Equality is by value, so equal
+  * calls can share an exchange. */
+case class KernelCall(name: String, children: Seq[Expression], params: Seq[Any])
+    extends Expression {
+  @transient private lazy val kernel: Kernel = Kernel.named(name)
+  require(children.length == kernel.args.length,
+    s"$name takes ${kernel.args.length} arguments, got ${children.length}")
+  kernel.validate(params)
 
-/** array<long> signature -> array<long> LSH band keys (one per band). */
-case class LshBandKeys(child: Expression, bands: Int, rowsPerBand: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = kernel.result
+  override def nullable: Boolean = children.exists(_.nullable)
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "lsh_band_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.bandKeys(input.asInstanceOf[ArrayData], bands, rowsPerBand, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.bandKeys($c, $bands, $rowsPerBand, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): LshBandKeys =
-    copy(child = newChild)
-}
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def prettyName: String = name
+  /** Plans print `name(children..., params...)`. */
+  override protected def stringArgs: Iterator[Any] = children.iterator ++ params.iterator
+  override def checkInputDataTypes(): TypeCheckResult =
+    kernel.checkTypes(children.map(_.dataType))
 
-/** array<long> shingles -> array<long> LSH band keys, fused (no materialized
-  * signature column — see HashKernels.minhashBandKeys). */
-case class MinHashBandKeys(child: Expression, numHashes: Int, bands: Int,
-    rowsPerBand: Int, seed: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_band_keys"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.minhashBandKeys(input.asInstanceOf[ArrayData],
-      numHashes, bands, rowsPerBand, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.minhashBandKeys($c, $numHashes, $bands, $rowsPerBand, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashBandKeys =
-    copy(child = newChild)
-}
+  /** The kernel method, resolved once per instance: eval invokes the very
+    * method the generated code calls. */
+  @transient private lazy val method: MethodHandle =
+    MethodHandles.publicLookup().findStatic(Class.forName(KernelCall.Host), kernel.method,
+      MethodType.methodType(CodeGenerator.javaClass(dataType),
+        (kernel.args.map(a => CodeGenerator.javaClass(a._2)) ++
+          kernel.params.map(_.lit.cls)).toArray))
+  @transient private lazy val paramArgs: Array[AnyRef] =
+    kernel.params.zip(params).map { case (p, v) => p.lit.arg(v) }.toArray
 
-/** (array<long>, array<long>) -> double exact Jaccard (verify stage). */
-case class JaccardSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "jaccard_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.jaccardData(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.jaccardData($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSim =
-    copy(left = l, right = r)
-}
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length + paramArgs.length)
+    var i = 0
+    while (i < children.length) {
+      val v = children(i).eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    System.arraycopy(paramArgs, 0, args, children.length, paramArgs.length)
+    method.invokeWithArguments(args: _*)
+  }
 
-/** (string, string) -> int longest-common-substring length (clamped). */
-case class LcsLength(left: Expression, right: Expression, maxLen: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "lcs_length"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.lcsLength(a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString, maxLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.HashKernels.lcsLength($a.toString(), $b.toString(), $maxLen)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): LcsLength =
-    copy(left = l, right = r)
-}
-
-/** (array<float>, array<float>) -> double cosine similarity. */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cosine_sim"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.cosineData(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.cosineData($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-}
-
-/** (array<float>, array<float>) -> array<float> elementwise difference
-  * (IVFADC residuals; the zip_with HOF equivalent evaluates its lambda
-  * interpreted, outside whole-stage codegen). */
-case class VecSub(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "vec_sub"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.subData(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.subData($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecSub =
-    copy(left = l, right = r)
-}
-
-/** (array<float>, array<float>) -> double inner product (PQ/ADC measure). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dot_product"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.dotData(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashKernels.dotData($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-/** (array<int> codes, array<double> lut) -> double PQ/ADC score: sum of
-  * lut[offsets(i) + codes(i)] over subspaces — the per-subspace lookup-table
-  * offsets ride as a baked constant (FastAlign-style scalar params), keeping
-  * the per-candidate cost a tight codegen'd loop. */
-case class AdcLookup(left: Expression, right: Expression, offsets: Seq[Int])
-    extends BinaryExpression {
-  @transient private lazy val offsetArr: Array[Int] = offsets.toArray
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "adc_lookup"
-  override protected def nullSafeEval(c: Any, l: Any): Any =
-    HashKernels.adcData(c.asInstanceOf[ArrayData], l.asInstanceOf[ArrayData],
-      offsetArr)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("adcOffsets", offsetArr, "int[]")
-    defineCodeGen(ctx, ev, (c, l) =>
-      s"graft.functions.HashKernels.adcData($c, $l, $ref)")
+    val evals = children.map(_.genCode(ctx))
+    val lits = kernel.params.zip(params).map { case (p, v) => p.lit.gen(ctx, v) }
+    val call = s"${ev.value} = ${KernelCall.Host}.${kernel.method}(" +
+      (evals.map(_.value.toString) ++ lits).mkString(", ") + ");"
+    val init = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (nullable) {
+      // each child is evaluated only when the ones before it are not null
+      val body = children.zip(evals).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, e), inner) => s"${e.code}\n${ctx.nullSafeExec(c.nullable, e.isNull)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $init
+        $body""")
+    } else
+      ev.copy(code = code"""
+        ${evals.map(_.code.toString).mkString("\n")}
+        $init
+        $call""", isNull = FalseLiteral)
   }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcLookup =
-    copy(left = l, right = r)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): KernelCall =
+    copy(children = newChildren)
 }
 
-/** array<float> -> long sign-random-projection LSH bucket. */
-case class SrpBucket(child: Expression, bits: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "srp_bucket"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.srpBucketData(input.asInstanceOf[ArrayData], bits, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.srpBucketData($c, $bits, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): SrpBucket =
-    copy(child = newChild)
-}
-
-/** string -> array<long> winnowed k-gram anchors (Schleimer et al.
-  * SIGMOD'03): any two strings sharing an exact substring of length
-  * >= w + k - 1 share at least one anchor — see
-  * [[HashKernels.winnowAnchorsFromChars]]. */
-case class WinnowAnchors(child: Expression, k: Int, w: Int, seed: Long)
-    extends UnaryExpression {
-  // construction-time (= SQL resolution-time) validation: the kernel's scan
-  // indexes g(end - w + 1 .. end) and would AIOOBE per row on w < 1
-  require(k >= 1 && w >= 1,
-    s"winnow_anchors: k($k) and w($w) must be >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "winnow_anchors"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.winnowAnchors(input.asInstanceOf[UTF8String], k, w, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.winnowAnchors($c, $k, $w, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowAnchors =
-    copy(child = newChild)
-}
-
-/** long phash -> array<long> positional byte-gram tokens (SimHash input). */
-case class PhashTokens(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "phash_tokens"
-  override protected def nullSafeEval(input: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(HashKernels.phashTokens(input.asInstanceOf[Long]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(" +
-      s"graft.functions.HashKernels.phashTokens($c))")
-  override protected def withNewChildInternal(newChild: Expression): PhashTokens =
-    copy(child = newChild)
-}
-
-/** long phash -> orbit-canonical phash (min over {id, flipH, flipV, rot180}
-  * — [[graft.functions.HashKernels.phashCanonical]]): mirrored/rotated
-  * re-uploads share the canonical, making phash-derived bucketing and
-  * verification mirror-invariant. */
-case class PhashCanonical(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "phash_canonical"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.phashCanonical(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.phashCanonical($c)")
-  override protected def withNewChildInternal(newChild: Expression): PhashCanonical =
-    copy(child = newChild)
-}
-
-/** long phash -> transpose of the 8x8 bit grid (flip about the main
-  * diagonal — [[graft.functions.HashKernels.phashTranspose]]); generates
-  * the D4 rotations together with the byte-level mirrors. */
-case class PhashTranspose(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "phash_transpose"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.phashTranspose(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.phashTranspose($c)")
-  override protected def withNewChildInternal(newChild: Expression): PhashTranspose =
-    copy(child = newChild)
-}
-
-/** long phash -> 90-degree-clockwise-rotation transform
-  * ([[graft.functions.HashKernels.phashRot90]]). */
-case class PhashRot90(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "phash_rot90"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.phashRot90(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.phashRot90($c)")
-  override protected def withNewChildInternal(newChild: Expression): PhashRot90 =
-    copy(child = newChild)
-}
-
-/** long phash -> full-dihedral orbit-canonical phash (min over all eight
-  * grid symmetries — [[graft.functions.HashKernels.phashCanonicalD4]]):
-  * extends the mirror-invariant canonical to 90/270-degree rotations. */
-case class PhashCanonicalD4(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "phash_canonical_d4"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.phashCanonicalD4(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.phashCanonicalD4($c)")
-  override protected def withNewChildInternal(newChild: Expression): PhashCanonicalD4 =
-    copy(child = newChild)
-}
-
-/** (array<string>, array<string>) -> double FaST positional alignment score
-  * (was the surface's one Scala UDF; now codegen'd like every other kernel). */
-case class FastAlign(left: Expression, right: Expression,
-    gamma: Double, alpha: Double) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "fast_align"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.fastAlignData(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      gamma, alpha)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.HashKernels.fastAlignData($a, $b, ${gamma}D, ${alpha}D)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FastAlign =
-    copy(left = l, right = r)
-}
-
-/** string -> long rolling polynomial fingerprint. */
-case class RollingFingerprint(child: Expression, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "rolling_fingerprint"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.rollingFingerprint(input.asInstanceOf[UTF8String].toString, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.rollingFingerprint($c.toString(), ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): RollingFingerprint =
-    copy(child = newChild)
-}
-
-/** array<long> hash multiset (repeats = weights) -> array<long> ICWS
-  * weighted-MinHash signature: per-slot collision probability equals the
-  * WEIGHTED Jaccard (sum-min/sum-max of counts). Band with LshBandKeys
-  * exactly like the classic signature. Ioffe ICDM 2010. */
-case class IcwsSignature(child: Expression, numHashes: Int, seed: Long)
-    extends UnaryExpression {
-  require(numHashes >= 1, s"icws_signature: numHashes($numHashes) must be >= 1")
-  // analysis-time type check (the CharEntropy rationale): a non-array
-  // argument from the SQL surface must fail resolution, not per-row
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == ArrayType(LongType, containsNull = false) ||
-        child.dataType == ArrayType(LongType, containsNull = true))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"icws_signature requires array<bigint>, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "icws_signature"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.icws(input.asInstanceOf[ArrayData], numHashes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.icws($c, $numHashes, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): IcwsSignature =
-    copy(child = newChild)
-}
-
-/** (array<long>, array<long>) hash multisets -> double exact weighted
-  * Jaccard (sum-min/sum-max of per-element counts) — the verify metric of
-  * the ICWS candidate family. */
-case class WeightedJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
-  // analysis-time type check on BOTH sides (the CharEntropy rationale)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType): Boolean =
-      t == ArrayType(LongType, containsNull = false) ||
-        t == ArrayType(LongType, containsNull = true)
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "weighted_jaccard requires two array<bigint> arguments, got " +
-          s"${left.dataType.sql} and ${right.dataType.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "weighted_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.weightedJaccardData(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.HashKernels.weightedJaccardData($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): WeightedJaccard =
-    copy(left = l, right = r)
-}
-
-/** string -> double Shannon entropy (bits/char) of its code-point
-  * distribution — the cheap junk gate (spam runs ≈ 0, prose ≈ 4,
-  * base64/binary noise ≥ 6). Order-independent by construction
-  * (HashKernels sums in ascending code-point order). */
-case class CharEntropy(child: Expression)
-    extends UnaryExpression {
-  // analysis-time type check: a non-string argument from the SQL surface
-  // must fail resolution, not janino/ClassCastException per row
-  // (ExpectsInputTypes is closed to third parties in Spark 4 —
-  // AbstractDataType is private[sql] — so the check is spelled out)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"char_entropy requires a string argument, got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "char_entropy"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.charEntropy(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.charEntropy($c)")
-  override protected def withNewChildInternal(newChild: Expression): CharEntropy =
-    copy(child = newChild)
-}
-
-/** Single-pass stopword-density ratio (see [[HashKernels.stopwordRatio]]) —
-  * value-identical to the normalize/regexp_count chain it replaced in
-  * `graft.functions.stopword_ratio`, without the two document rewrites and
-  * two Pattern scans (ExpressionsSpec pins the equivalence on the edge
-  * cases: empty, null, punctuation-only, stopword substrings, unicode). */
-case class StopwordRatio(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"stopword_ratio requires a string argument, got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "stopword_ratio"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.stopwordRatio(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.stopwordRatio($c)")
-  override protected def withNewChildInternal(newChild: Expression): StopwordRatio =
-    copy(child = newChild)
-}
-
-/** Single-pass quality score (see [[HashKernels.qualityScore]]) —
-  * value-identical to the length/punct/stopword expression chain
-  * (ExpressionsSpec pins the equivalence). */
-case class QualityScore(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"quality_score requires a string argument, got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "quality_score"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.qualityScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.qualityScore($c)")
-  override protected def withNewChildInternal(newChild: Expression): QualityScore =
-    copy(child = newChild)
-}
-
-/** Single-pass distinct-token ratio (see
-  * [[HashKernels.distinctTokenRatio]]); callers coalesce NULL to "" so the
-  * NULL-text contract (ratio 1.0) is preserved at the column level. */
-case class DistinctTokenRatio(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"distinct_token_ratio requires a string argument, got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "distinct_token_ratio"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.distinctTokenRatio(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashKernels.distinctTokenRatio($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): DistinctTokenRatio =
-    copy(child = newChild)
+object KernelCall {
+  /** The class whose static methods the kernels are. */
+  private val Host = "graft.functions.HashKernels"
 }
 
 /** array<long> hashes -> int count of elements the inlined Bloom sketch
@@ -701,7 +461,7 @@ case class PqCodes(child: Expression, book: PqBook) extends UnaryExpression {
 }
 
 /** array<float> -> array<double>: the vector's m*k ADC lookup table
-  * ([[PqBook.lut]]), read by [[AdcLookup]] at `book.offsets`. */
+  * ([[PqBook.lut]]), read by [[adc_lookup]] at `book.offsets`. */
 case class PqLut(child: Expression, book: PqBook) extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = false
@@ -726,7 +486,6 @@ case class PqAssign(left: Expression, right: Expression, book: PqBook)
     else book.assign(sub.asInstanceOf[Int], right.eval(input).asInstanceOf[ArrayData])
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val ref = ctx.addReferenceObj("pqBook", book, classOf[PqBook].getName)
     val s = left.genCode(ctx)
     val v = right.genCode(ctx)
@@ -848,7 +607,6 @@ private[functions] object BookCall {
     * which passes a null child through as null. */
   def gen(ctx: CodegenContext, ev: ExprCode, e: UnaryExpression, book: AnyRef,
       method: String, args: String = ""): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val ref = ctx.addReferenceObj("book", book, book.getClass.getName)
     val c = e.child.genCode(ctx)
     val t = e.dataType
@@ -856,6 +614,6 @@ private[functions] object BookCall {
       ${c.code}
       ${CodeGenerator.javaType(t)} ${ev.value} = (${CodeGenerator.boxedType(t)})
         $ref.$method(${c.isNull} ? null : ${c.value}$args);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+      isNull = FalseLiteral)
   }
 }

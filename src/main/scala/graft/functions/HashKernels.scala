@@ -6,7 +6,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Deterministic, dependency-free hash kernels shared by
- *  - the codegen'd Catalyst expressions in [[GraftExpressions]],
+ *  - the codegen'd [[KernelCall]] expression, whose table ([[Kernel.all]])
+ *    names one Catalyst-typed method here per kernel,
  *  - the brute-force oracle in the golden tests (same-bits guarantee — the
  *    recall gate measures LSH loss only, SURVEY.md section 7 hard part d).
  *
@@ -69,7 +70,7 @@ object HashKernels {
     out
   }
 
-  /** Entry point used by the ShingleHashes expression: array<string> tokens. */
+  /** Catalyst entry point of [[shingleHashesFromTokenHashes]]: array<string> tokens. */
   def shingleHashes(tokens: ArrayData, k: Int, seed: Long): ArrayData = {
     val n = tokens.numElements()
     val th = new Array[Long](n)
@@ -233,6 +234,10 @@ object HashKernels {
     }
     out
   }
+
+  /** Catalyst entry point of [[phashTokens]]. */
+  def phashTokensData(phash: Long): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(phashTokens(phash))
 
   /**
    * Mirror transforms of the 8x8 average-hash, as pure bit permutations:
@@ -415,6 +420,10 @@ object HashKernels {
     best
   }
 
+  /** Catalyst entry point of [[lcsLength]]. */
+  def lcsLengthData(a: UTF8String, b: UTF8String, maxLen: Int): Int =
+    lcsLength(a.toString, b.toString, maxLen)
+
   // ---------------------------------------------------------------------
   // Vector kernels (ANN / embedding near-dup)
   // ---------------------------------------------------------------------
@@ -562,6 +571,10 @@ object HashKernels {
     }
     mix64(h)
   }
+
+  /** Catalyst entry point of [[rollingFingerprint]]. */
+  def rollingFingerprintData(s: UTF8String, seed: Long): Long =
+    rollingFingerprint(s.toString, seed)
 
   /**
    * Winnowed k-gram anchor set of a string (Schleimer/Wilkerson/Aiken,

@@ -6,30 +6,35 @@ import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
 import org.apache.spark.sql.{functions => F}
 
 /**
- * Column-level API of the engine: signature functions (custom codegen'd
- * Catalyst expressions from [[graft.functions.GraftExpressions]]) plus text
+ * Column-level API of the engine: signature functions (calls of the
+ * codegen'd kernels in [[graft.functions.Kernel.all]]) plus text
  * analysis / normalization helpers built from `org.apache.spark.sql.functions`.
  */
 package object functions {
 
   // --- signature expressions -------------------------------------------
 
+  /** One call of the table kernel `name`: its column arguments, then its
+    * literal parameters in table order. */
+  private def call(name: String, args: Column*)(params: Any*): Column =
+    column(KernelCall(name, args.map(expression), params))
+
   def shingle_hashes(tokens: Column, k: Int, seed: Long = 42L): Column =
-    column(ShingleHashes(expression(tokens), k, seed))
+    call("shingle_hashes", tokens)(k, seed)
 
   def minhash_signature(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    column(MinHashSignature(expression(shingles), numHashes, seed))
+    call("minhash_signature", shingles)(numHashes, seed)
 
   /** One-permutation MinHash with optimal densification — same LSH collision
     * law as [[minhash_signature]] at one hash per element instead of
     * numHashes (the web-scale featurization kernel; see HashKernels.ophArray). */
   def oph_signature(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    column(OphSignature(expression(shingles), numHashes, seed))
+    call("oph_signature", shingles)(numHashes, seed)
 
   /** Fused OPH + LSH banding (the [[minhash_band_keys]] counterpart). */
   def oph_band_keys(shingles: Column, numHashes: Int, bands: Int,
       rowsPerBand: Int, seed: Long = 42L): Column =
-    column(OphBandKeys(expression(shingles), numHashes, bands, rowsPerBand, seed))
+    call("oph_band_keys", shingles)(numHashes, bands, rowsPerBand, seed)
 
   /** The one text-signature shingle set: `cfg.shingleK`-shingle hashes of
     * `text`'s normalized tokens. The text dedup operators (batch,
@@ -50,41 +55,41 @@ package object functions {
       minhash_band_keys(shingles, cfg.numHashes, cfg.bands, cfg.rowsPerBand, cfg.seed)
 
   def simhash64(tokenHashes: Column, seed: Long = 42L): Column =
-    column(SimHash64(expression(tokenHashes), seed))
+    call("simhash64", tokenHashes)(seed)
 
   def lsh_band_keys(sig: Column, bands: Int, rowsPerBand: Int, seed: Long = 42L): Column =
-    column(LshBandKeys(expression(sig), bands, rowsPerBand, seed))
+    call("lsh_band_keys", sig)(bands, rowsPerBand, seed)
 
   def minhash_band_keys(shingles: Column, numHashes: Int, bands: Int,
       rowsPerBand: Int, seed: Long = 42L): Column =
-    column(MinHashBandKeys(expression(shingles), numHashes, bands, rowsPerBand, seed))
+    call("minhash_band_keys", shingles)(numHashes, bands, rowsPerBand, seed)
 
   def jaccard_sim(a: Column, b: Column): Column =
-    column(JaccardSim(expression(a), expression(b)))
+    call("jaccard_sim", a, b)()
 
   /** ICWS weighted-MinHash signature — repeats in the hash array are the
     * weights; per-slot collision probability = weighted Jaccard. */
   def icws_signature(hashes: Column, numHashes: Int, seed: Long = 42L): Column =
-    column(IcwsSignature(expression(hashes), numHashes, seed))
+    call("icws_signature", hashes)(numHashes, seed)
 
   /** Exact weighted Jaccard (sum-min/sum-max of multiset counts). */
   def weighted_jaccard(a: Column, b: Column): Column =
-    column(WeightedJaccard(expression(a), expression(b)))
+    call("weighted_jaccard", a, b)()
 
   def lcs_length(a: Column, b: Column, maxLen: Int = 2000): Column =
-    column(LcsLength(expression(a), expression(b), maxLen))
+    call("lcs_length", a, b)(maxLen)
 
   def cosine_sim(a: Column, b: Column): Column =
-    column(CosineSim(expression(a), expression(b)))
+    call("cosine_sim", a, b)()
 
   def dot_product(a: Column, b: Column): Column =
-    column(DotProduct(expression(a), expression(b)))
+    call("dot_product", a, b)()
 
   def vec_sub(a: Column, b: Column): Column =
-    column(VecSub(expression(a), expression(b)))
+    call("vec_sub", a, b)()
 
   def adc_lookup(codes: Column, lut: Column, offsets: Seq[Int]): Column =
-    column(AdcLookup(expression(codes), expression(lut), offsets))
+    call("adc_lookup", codes, lut)(offsets)
 
   /** The m PQ codes of a vector against a driver-held codebook. */
   def pq_codes(book: PqBook, vec: Column): Column =
@@ -107,43 +112,53 @@ package object functions {
   def ivf_probe(book: CentroidBook, vec: Column, nProbe: Int): Column =
     column(IvfProbe(expression(vec), book, nProbe))
 
+  /** FaST positional alignment score of two token arrays (see
+    * [[HashKernels.fastAlignData]]), numerically equivalent to
+    * [[graft.operators.TextScores.fastAlignScore]] with empty df (the df
+    * damping joins in upstream when wanted). The two kernels sum match
+    * contributions in different hash-iteration orders (Scala Map vs
+    * java.util.HashMap of UTF8String), so last-ulp summation-order drift is
+    * possible; the parity spec asserts 1e-12 tolerance, not bit equality. */
+  def fast_align(a: Column, b: Column, gamma: Double = 1.0, alpha: Double = 0.0): Column =
+    call("fast_align", a, b)(gamma, alpha)
+
   def srp_bucket(vec: Column, bits: Int, seed: Long = 42L): Column =
-    column(SrpBucket(expression(vec), bits, seed))
+    call("srp_bucket", vec)(bits, seed)
 
   /** Shannon entropy (bits/char) of the string's code-point distribution —
     * the cheap junk gate next to the ratio signals: spam runs ≈ 0, English
     * prose ≈ 4, base64/binary noise ≥ 6. */
   def char_entropy(s: Column): Column =
-    column(CharEntropy(expression(s)))
+    call("char_entropy", s)()
 
   def phash_tokens(phash: Column): Column =
-    column(PhashTokens(expression(phash)))
+    call("phash_tokens", phash)()
 
   /** Orbit-canonical phash (min over {id, flipH, flipV, rot180}) — mirrored
     * or 180-rotated re-uploads share the canonical. */
   def phash_canonical(phash: Column): Column =
-    column(PhashCanonical(expression(phash)))
+    call("phash_canonical", phash)()
 
   /** Transpose of the phash's 8x8 bit grid (main-diagonal flip). */
   def phash_transpose(phash: Column): Column =
-    column(PhashTranspose(expression(phash)))
+    call("phash_transpose", phash)()
 
   /** 90-degree-clockwise-rotation transform of the phash. */
   def phash_rot90(phash: Column): Column =
-    column(PhashRot90(expression(phash)))
+    call("phash_rot90", phash)()
 
   /** Full-dihedral orbit-canonical phash (min over all eight D4 grid
     * symmetries) — mirrored AND 90/270-rotated re-uploads share it. */
   def phash_canonical_d4(phash: Column): Column =
-    column(PhashCanonicalD4(expression(phash)))
+    call("phash_canonical_d4", phash)()
 
   def rolling_fingerprint(s: Column, seed: Long = 42L): Column =
-    column(RollingFingerprint(expression(s), seed))
+    call("rolling_fingerprint", s)(seed)
 
   /** Winnowed k-gram anchors: strings sharing an exact run of length
     * >= w + k - 1 chars are guaranteed >= 1 common anchor. */
   def winnow_anchors(s: Column, k: Int, w: Int, seed: Long = 42L): Column =
-    column(WinnowAnchors(expression(s), k, w, seed))
+    call("winnow_anchors", s)(k, w, seed)
 
   /** Hamming distance between two 64-bit hashes — pure built-ins (codegen'd). */
   def hamming64(a: Column, b: Column): Column = F.bit_count(a.bitwiseXOR(b))
@@ -223,7 +238,7 @@ package object functions {
     * computes both signals off one shared token array — use it for whole-
     * corpus scans; these exist so the SQL surface stays total). */
   def distinct_token_ratio(c: Column): Column =
-    column(DistinctTokenRatio(expression(F.coalesce(c, F.lit("")))))
+    call("distinct_token_ratio", F.coalesce(c, F.lit("")))()
 
   /** Regex/array spelling of [[distinct_token_ratio]] — the equivalence
     * oracle for the single-pass kernel (ExpressionsSpec). */
@@ -255,7 +270,7 @@ package object functions {
     * \b-bounded alternation on [a-z0-9 ] text matches exactly the tokens
     * that equal a stopword (no interpreted filter() lambda in the hot path). */
   def stopword_ratio(c: Column): Column =
-    column(StopwordRatio(expression(c)))
+    call("stopword_ratio", c)()
 
   /** The regex spelling of [[stopword_ratio]] — kept as the equivalence
     * oracle for the single-pass kernel (ExpressionsSpec pins kernel ==
@@ -287,7 +302,7 @@ package object functions {
     * at every branch (and the SQL oracles' CASE ELSE arms do the same), so
     * the null-intolerant kernel is coalesced to match. */
   def quality_score(c: Column): Column =
-    F.coalesce(column(QualityScore(expression(c))), F.lit(0.0))
+    F.coalesce(call("quality_score", c)(), F.lit(0.0))
 
   /** Expression-chain spelling of [[quality_score]] — the equivalence
     * oracle for the single-pass kernel (ExpressionsSpec). */

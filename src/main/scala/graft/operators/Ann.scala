@@ -339,7 +339,7 @@ object Ann {
       idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol).as("item_id"), pq_codes(book, col(vecCol)).as("codes"))
 
-  /** Sum of m LUT lookups per candidate — the codegen'd [[AdcLookup]]
+  /** Sum of m LUT lookups per candidate — the codegen'd [[adc_lookup]]
     * kernel over the [[pq_lut]] table (the per-query m*k scores
     * q_sub.c - ||c||^2/2, subspace-major: descending total == ascending
     * squared L2, which on L2-normalized corpus vectors ranks identically to
@@ -404,7 +404,7 @@ object Ann {
   /** (item_id, cell, rv = cv - centroid(cell)) for every corpus row — the
     * residual domain FAISS's `IndexIVFPQ` quantizes. One broadcast equi-join
     * on the nlist-row centroid table; the subtraction is the codegen'd
-    * [[graft.functions.VecSub]] kernel. */
+    * [[graft.functions.vec_sub]] kernel. */
   private def residualFrame(c: DataFrame, localCents: DataFrame,
       cents: CentroidBook): DataFrame =
     c.withColumn("cell", ivf_assign(cents, col("cv")))

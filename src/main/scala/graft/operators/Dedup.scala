@@ -85,6 +85,12 @@ object Dedup {
       .withColumn("simhash",
         simhash64(col("shingles"), cfg.seed))
 
+  /** The cached [[textFeatures]] columns the MinHash pair operators read:
+    * (id, shingles, band_keys). */
+  private def cachedSignatures(docs: DataFrame, idCol: String, textCol: String,
+      cfg: DedupConfig): DataFrame =
+    cached(textFeatures(docs, idCol, textCol, cfg).select("id", "shingles", "band_keys"))
+
   /** (id, key) band rows of a [[textFeatures]] frame; shingle-less rows
     * carry no usable band and are left out. */
   private def textBands(feat: DataFrame): DataFrame =
@@ -94,7 +100,7 @@ object Dedup {
   /** MinHash+LSH near-dup pairs verified by exact shingle Jaccard. */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       cfg: DedupConfig): DataFrame = {
-    val feat = cached(textFeatures(docs, idCol, textCol, cfg))
+    val feat = cachedSignatures(docs, idCol, textCol, cfg)
     val pairs = CandidateGen.pairsFromBuckets(textBands(feat),
       cfg.maxBucketSize, saltOversized = cfg.saltOversized)
     verifyJoin(pairs, feat, feat, "shingles")
@@ -776,8 +782,8 @@ object Dedup {
    */
   def incrementalNearDupPairs(newDocs: DataFrame, corpus: DataFrame,
       idCol: String, textCol: String, cfg: DedupConfig): DataFrame = {
-    val nf = cached(textFeatures(newDocs, idCol, textCol, cfg))
-    val cf = cached(textFeatures(corpus, idCol, textCol, cfg))
+    val nf = cachedSignatures(newDocs, idCol, textCol, cfg)
+    val cf = cachedSignatures(corpus, idCol, textCol, cfg)
     val pairs = CandidateGen.bipartitePairsFromBuckets(
       textBands(nf).select(col("id").as("a"), col("key")),
       textBands(cf).select(col("id").as("b"), col("key")),

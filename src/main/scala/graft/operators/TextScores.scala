@@ -679,19 +679,4 @@ object TextScores {
     val norm = wa.sum + wb.sum
     if (norm == 0.0) 0.0 else score / norm
   }
-
-  /** fastAlignScore as a column — a codegen'd Catalyst expression
-    * ([[graft.functions.FastAlign]]), numerically equivalent to
-    * [[fastAlignScore]] with empty df (the df damping joins in upstream when
-    * wanted). The two kernels sum match contributions in different
-    * hash-iteration orders (Scala Map vs java.util.HashMap of UTF8String),
-    * so last-ulp summation-order drift is possible; the parity spec asserts
-    * 1e-12 tolerance, not bit equality. */
-  def fast_align(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      gamma: Double = 1.0): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.FastAlign(
-        org.apache.spark.sql.graftbridge.Bridge.expression(a),
-        org.apache.spark.sql.graftbridge.Bridge.expression(b),
-        gamma, alpha = 0.0))
 }

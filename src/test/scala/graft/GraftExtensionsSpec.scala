@@ -63,6 +63,63 @@ class GraftExtensionsSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit("abcdefghijklmnop"), 4, 8).as("a"))
       .head().getSeq[Long](0)
     assert(sqlAnchors === colAnchors)
+    // every table kernel is a SQL function under its table name; the ones
+    // without a SQL name are the Column-only kernels GraftExtensions names
+    graft.functions.Kernel.all.foreach { k =>
+      k.sql match {
+        case Some((fn, _)) => assert(spark.catalog.functionExists(fn), fn)
+        case None => assert(Set("adc_lookup", "quality_score", "distinct_token_ratio")(k.name),
+          s"${k.name} has no SQL twin")
+      }
+    }
+  }
+
+  /** The messages of `e` and of its causes. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  /** `q` fails while it is resolved, not per row when it runs, with a
+    * message that holds every one of `parts`. */
+  private def rejectedAtResolution(q: String, parts: String*): Unit = {
+    GraftExtensions.register(spark)
+    val m = messages(intercept[Exception](spark.sql(q)))
+    parts.foreach(p => assert(m.contains(p), m))
+  }
+
+  test("graft_shingles rejects k = 0 at resolution") {
+    rejectedAtResolution("SELECT graft_shingles(array('a', 'b'), 0)", "shingle_hashes", "k(0)")
+    // the Column API fails when the plan is built
+    val e = intercept[IllegalArgumentException](
+      graft.functions.shingle_hashes(org.apache.spark.sql.functions.lit("a"), 0))
+    assert(e.getMessage.contains("shingle_hashes: k(0)"), e.getMessage)
+  }
+
+  test("graft_srp_bucket rejects 65 bits at resolution") {
+    rejectedAtResolution("SELECT graft_srp_bucket(array(0.5F), 65)", "srp_bucket", "bits(65)")
+  }
+
+  test("graft_minhash_band_keys rejects more band rows than hashes at resolution") {
+    rejectedAtResolution("SELECT graft_minhash_band_keys(array(1L), 16, 8, 4)",
+      "minhash_band_keys", "bands(8) * rowsPerBand(4)", "numHashes(16)")
+  }
+
+  test("graft_minhash rejects a negative numHashes at resolution") {
+    rejectedAtResolution("SELECT graft_minhash(array(1L), -1)",
+      "minhash_signature", "numHashes(-1)")
+  }
+
+  test("graft_lcs_length rejects a negative maxLen at resolution") {
+    rejectedAtResolution("SELECT graft_lcs_length('a', 'b', -1)", "lcs_length", "maxLen(-1)")
+  }
+
+  test("graft_simhash64 rejects a string argument at analysis") {
+    rejectedAtResolution("SELECT graft_simhash64('x')",
+      "simhash64 requires an array<bigint> argument, got STRING")
+  }
+
+  test("graft_jaccard rejects string arguments at analysis") {
+    rejectedAtResolution("SELECT graft_jaccard('a', 'b')",
+      "jaccard_sim requires array<bigint> and array<bigint> arguments, got STRING and STRING")
   }
 
   test("text-analysis surface: SQL functions match the Column API") {

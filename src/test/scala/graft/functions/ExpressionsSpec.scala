@@ -73,7 +73,7 @@ class ExpressionsSpec extends SparkSpec {
       .withColumn("ta", split(concat_ws(" ", lit("a"), ($"id" % 5).cast("string")), " "))
       .withColumn("tb", split(concat_ws(" ", lit("a"), ($"id" % 3).cast("string")), " "))
     val plan = df.select(
-        graft.operators.TextScores.fast_align($"ta", $"tb").as("s"))
+        fast_align($"ta", $"tb").as("s"))
       .queryExecution.executedPlan
     val line = plan.toString.linesIterator
       .find(_.contains("fast_align")).getOrElse("")

@@ -298,6 +298,17 @@ class DedupSpec extends SparkSpec {
       val added = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(added.size <= sides, s"$name cached ${added.size} RDDs for $sides side(s)")
     }
+    // the MinHash operators cache only the feature columns they read
+    for (out <- Seq(Dedup.minhashLshPairs(docs, "doc_id", "text", cfg),
+        Dedup.incrementalNearDupPairs(docs,
+          docs.select(col("doc_id") + 500 as "doc_id", $"text"), "doc_id", "text", cfg))) {
+      val cachedCols = out.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          r.output.map(_.name)
+      }
+      assert(cachedCols.nonEmpty &&
+        cachedCols.forall(_ == Seq("id", "shingles", "band_keys")), cachedCols)
+    }
     assert(spark.sparkContext.getPersistentRDDs.keySet != start,
       "the operators cached nothing, so the release check below proves nothing")
     spark.catalog.clearCache()

@@ -48,7 +48,7 @@ class TextScoresSpec extends SparkSpec {
       (Array.empty[String], Array("z")))
     val df = cases.zipWithIndex
       .map { case ((a, b), i) => (i, a.toSeq, b.toSeq) }.toDF("i", "ta", "tb")
-    val got = df.select($"i", TextScores.fast_align($"ta", $"tb").as("s"))
+    val got = df.select($"i", graft.functions.fast_align($"ta", $"tb").as("s"))
       .as[(Int, Double)].collect().toMap
     cases.zipWithIndex.foreach { case ((a, b), i) =>
       assert(math.abs(got(i) - TextScores.fastAlignScore(a, b)) < 1e-12,
