@@ -340,9 +340,14 @@ object HashKernels {
 
   /** One 64-bit key per band: mix of band index and the band's r minhashes.
     * Signatures of empty shingle sets produce no usable bands downstream
-    * (they collide only with other empties — filtered by the caller). */
-  def bandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int, seed: Long): ArrayData =
-    bandKeysOf(sig.toLongArray(), bands, rowsPerBand, seed)
+    * (they collide only with other empties — filtered by the caller). A
+    * signature shorter than bands·rowsPerBand is rejected. */
+  def bandKeys(sig: ArrayData, bands: Int, rowsPerBand: Int, seed: Long): ArrayData = {
+    val s = sig.toLongArray()
+    require(s.length >= bands * rowsPerBand, s"lsh_band_keys: signature length " +
+      s"${s.length} < bands·rowsPerBand = ${bands * rowsPerBand}")
+    bandKeysOf(s, bands, rowsPerBand, seed)
+  }
 
   /** The banding loop every band-key kernel shares: band b's key mixes the
     * band index with its r signature values. */

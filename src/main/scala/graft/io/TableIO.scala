@@ -118,20 +118,25 @@ final class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
 
   override def upsert(df: DataFrame, name: String, keyCols: Seq[String]): Unit = {
     if (!exists(name)) { write(df, name); return }
-    val existing = read(name)
-    // kept = existing rows not matched by an incoming key (MERGE's
-    // WHEN MATCHED THEN UPDATE collapses to replace-by-key)
-    val kept = existing.join(df.select(keyCols.map(col): _*).distinct(),
-      keyCols, "left_anti")
-    val merged = kept.unionByName(df.select(existing.columns.map(col): _*))
     // write-then-swap: never overwrite in place while readers may exist
     val tmp = new org.apache.hadoop.fs.Path(path(name) + "__tmp")
     val dst = new org.apache.hadoop.fs.Path(path(name))
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    mergedWith(df, name, keyCols).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val f = fs(dst)
     f.delete(dst, true)
     if (!f.rename(tmp, dst))
       throw new java.io.IOException(s"upsert swap failed for ${path(name)}")
+  }
+
+  /** The table `name` with every row whose key `df` carries replaced by
+    * `df`'s rows (MERGE's WHEN MATCHED THEN UPDATE collapses to
+    * replace-by-key), in the table's column order — the anti-join moves its
+    * key columns first, so the kept rows are re-projected. */
+  private def mergedWith(df: DataFrame, name: String, keyCols: Seq[String]): DataFrame = {
+    val existing = read(name)
+    val cols = existing.columns.map(col)
+    existing.join(df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+      .select(cols: _*).unionByName(df.select(cols: _*))
   }
 
   override def exists(name: String): Boolean = {
@@ -177,15 +182,10 @@ final class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
   override def upsertBucketed(df: DataFrame, name: String, keyCol: String,
       numBuckets: Int, keyCols: Seq[String]): Unit = {
     if (!exists(name)) { writeBucketed(df, name, keyCol, numBuckets); return }
-    val existing = read(name) // plain scan: the merge rewrites every bucket
-    // the anti-join moves its key columns first — restore the table's column
-    // order so the rewritten files keep the original schema layout
-    val kept = existing.join(df.select(keyCols.map(col): _*).distinct(),
-      keyCols, "left_anti").select(existing.columns.map(col): _*)
-    val merged = kept.unionByName(df.select(existing.columns.map(col): _*))
-    // full rewrite is the parquet-directory price of keeping the layout; the
+    // the merge reads a plain scan and rewrites every bucket: the full
+    // rewrite is the parquet-directory price of keeping the layout; the
     // Iceberg backend's MERGE INTO rewrites only the touched files
-    writeBucketed(merged, name, keyCol, numBuckets)
+    writeBucketed(mergedWith(df, name, keyCols), name, keyCol, numBuckets)
   }
 
   /**

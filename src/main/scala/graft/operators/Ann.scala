@@ -1,10 +1,8 @@
 package graft.operators
 
 import graft.functions._
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -24,16 +22,15 @@ object Ann {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = c.crossJoin(broadcast(q))
+    topK(c.crossJoin(broadcast(q))
       .where(col("query_id") =!= col("item_id"))
-      .withColumn("cosine", cosine_sim(col("qv"), col("cv")))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("item_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "item_id", "cosine", "rank")
+      .withColumn("cosine", cosine_sim(col("qv"), col("cv"))), "cosine", k)
   }
+
+  /** (query_id, item_id, `score`, rank): the per-query top-k every search
+    * here ends in — [[Ranking.topKItems]]' rank, ties on item_id. */
+  private def topK(scored: DataFrame, score: String, k: Int): DataFrame =
+    Ranking.topKItems(scored, k, score).select("query_id", "item_id", score, "rank")
 
   /**
    * IVF (inverted-file) top-k — the FAISS `IndexIVFFlat` shape
@@ -87,15 +84,21 @@ object Ann {
     val init = localizeCentroids(sampleCentroids(c, nlist))
     (0 until iters).foldLeft(init) { case ((_, book), _) =>
       // driver round-trip: k rows, truncates the per-iteration lineage
-      localizeCentroids(
-        c.select(ivf_assign(book, col("cv")).as("cell"), posexplode(col("cv")))
-          .groupBy("cell", "pos").agg(avg("col").as("m"))
-          .groupBy("cell")
-          .agg(collect_list(struct(col("pos"), col("m"))).as("dims"))
-          .select(col("cell").as("cent_id"),
-            transform(array_sort(col("dims")), s => s("m").cast("float")).as("centv")))
+      localizeCentroids(meanVectors(
+        c.select(ivf_assign(book, col("cv")).as("cent_id"), col("cv")), Seq("cent_id"), "cv"))
     }._1
   }
+
+  /** The Lloyd M-step both quantizers share: (keys..., centv ARRAY<FLOAT>),
+    * the mean of `vec` per `keys` group — posexplode, avg per (keys, pos),
+    * the means re-assembled in position order. Two shuffles. */
+  private def meanVectors(df: DataFrame, keys: Seq[String], vec: String): DataFrame =
+    df.select(keys.map(col) :+ posexplode(col(vec)): _*)
+      .groupBy((keys :+ "pos").map(col): _*).agg(avg("col").as("m"))
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("pos"), col("m"))).as("dims"))
+      .select(keys.map(col) :+
+        transform(array_sort(col("dims")), s => s("m").cast("float")).as("centv"): _*)
 
   /** A local relation over driver-held artifact rows: scans and collects of
     * it run no Spark job. */
@@ -113,13 +116,8 @@ object Ann {
 
   private def ivfSearch(c: DataFrame, q: DataFrame, centroids: DataFrame,
       k: Int, nProbe: Int): DataFrame =
-    coarsePairs(c, q, centroids, nProbe)
-      .withColumn("cosine", cosine_sim(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("item_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "item_id", "cosine", "rank")
+    topK(coarsePairs(c, q, centroids, nProbe)
+      .withColumn("cosine", cosine_sim(col("qv"), col("cv"))), "cosine", k)
 
   /** The IVF coarse stage alone: cell-restricted (query, item) candidate
     * pairs — compose with [[pqScorePairs]] (IVFADC) or any custom verifier. */
@@ -146,10 +144,7 @@ object Ann {
       codebooks: DataFrame, idCol: String, vecCol: String, k: Int,
       nProbe: Int): DataFrame = {
     val book = collectBooks(codebooks)
-    requireDim(corpus, vecCol, book, "corpus")
-    requireDim(queries, vecCol, book, "query")
-    val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val (c, q) = pqSides(corpus, queries, book, idCol, vecCol)
     val (_, cents) = localizeCentroids(centroids)
     // the single corpus pass: assignment + encode, fused
     val codes = c.select(col("item_id"), ivf_assign(cents, col("cv")).as("cell"),
@@ -158,13 +153,7 @@ object Ann {
       .select("query_id", "cell").join(codes, "cell")
       .where(col("query_id") =!= col("item_id"))
     val qlut = q.select(col("query_id"), pq_lut(book, col("qv")).as("lut"))
-    cand.join(qlut, "query_id")
-      .withColumn("adc", adcScore(book))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc").desc, col("item_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "item_id", "adc", "rank")
+    topK(cand.join(qlut, "query_id").withColumn("adc", adcScore(book)), "adc", k)
   }
 
   /**
@@ -242,7 +231,8 @@ object Ann {
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
     // deterministic hash-order init sample (one TakeOrdered job, same trick
-    // as sampleCentroids); also pins the vector dim
+    // as sampleCentroids); also pins the vector dim every row is checked
+    // against in the slices frame below
     val initRows = c.orderBy(xxhash64(col("item_id")), col("item_id")).limit(k)
       .select("cv").collect().map(_.getSeq[Float](0).toArray)
     require(initRows.nonEmpty, "pqCodebooks: empty corpus")
@@ -255,19 +245,15 @@ object Ann {
     }
     // one exploded (sub, slice) frame drives every iteration — slices carry
     // dim/m floats each, so the shuffle bytes match a single full-vector pass
-    val slices = c.select(explode(array((0 until m).map(sub =>
+    val slices = c.select(dimChecked(col("cv"), dim, "corpus").as("cv"))
+      .select(explode(array((0 until m).map(sub =>
         struct(lit(sub).as("sub"),
           slice(col("cv"), sub * subDim + 1, subDim).as("sv"))): _*)).as("e"))
       .select(col("e.sub").as("sub"), col("e.sv").as("sv"))
     for (_ <- 0 until iters) {
-      val means = slices
-        .withColumn("code", pq_assign(new PqBook(books), col("sub"), col("sv")))
-        .select(col("sub"), col("code"), posexplode(col("sv")))
-        .groupBy("sub", "code", "pos").agg(avg("col").as("mv"))
-        .groupBy("sub", "code")
-        .agg(collect_list(struct(col("pos"), col("mv"))).as("dims"))
-        .select(col("sub"), col("code"),
-          transform(array_sort(col("dims")), s => s("mv").cast("float")).as("centv"))
+      val means = meanVectors(
+        slices.withColumn("code", pq_assign(new PqBook(books), col("sub"), col("sv"))),
+        Seq("sub", "code"), "sv")
         .collect() // <= m*k rows — the artifact, not data
       books = Array.tabulate(m) { sub =>
         means.filter(_.getInt(0) == sub)
@@ -305,20 +291,21 @@ object Ann {
         sorted.map(_.getSeq[Float](2).toArray)
       })
 
-  /** Dim check on the first non-null vector: a corpus/query whose vectors
-    * don't match the trained dim would otherwise be silently truncated by
-    * the kernels' min-length dot; per-row malformed data remains the
-    * caller's contract. The probe reads beneath the input's top-level
-    * repartitions ([[Bridge.withoutTopRepartitions]]), so it is one job
-    * and shuffles nothing, and it throws at plan time. */
-  private def requireDim(df: DataFrame, vecCol: String, book: PqBook,
-      what: String): Unit = {
+  /** `v` checked against the codebook dim on every row: a vector of any
+    * other length fails its task with "<side> vector dim n != codebook dim
+    * d" — the kernels' min-length dot would otherwise truncate it silently.
+    * A null vector passes through. A codegen'd expression: it runs no job. */
+  private def dimChecked(v: Column, dim: Int, side: String): Column =
+    when(v.isNotNull && size(v) =!= dim, raise_error(concat(lit(s"$side vector dim "),
+      size(v).cast("string"), lit(s" != codebook dim $dim")))).otherwise(v)
+
+  /** The corpus (item_id, cv) and query (query_id, qv) sides of a PQ
+    * operator, each vector checked against the codebook dim. */
+  private def pqSides(corpus: DataFrame, queries: DataFrame, book: PqBook,
+      idCol: String, vecCol: String): (DataFrame, DataFrame) = {
     val dim = book.m * book.subDim
-    Bridge.withoutTopRepartitions(df).where(col(vecCol).isNotNull)
-      .select(size(col(vecCol))).limit(1).collect().headOption.foreach { r =>
-        require(r.getInt(0) == dim,
-          s"$what vector dim ${r.getInt(0)} != codebook dim $dim")
-      }
+    (corpus.select(col(idCol).as("item_id"), dimChecked(col(vecCol), dim, "corpus").as("cv")),
+      queries.select(col(idCol).as("query_id"), dimChecked(col(vecCol), dim, "query").as("qv")))
   }
 
   /**
@@ -331,13 +318,9 @@ object Ann {
   def pqEncode(corpus: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val book = collectBooks(codebooks)
-    requireDim(corpus, vecCol, book, "corpus")
-    pqEncodeWith(corpus, book, idCol, vecCol)
+    corpus.select(col(idCol).as("item_id"),
+      pq_codes(book, dimChecked(col(vecCol), book.m * book.subDim, "corpus")).as("codes"))
   }
-
-  private def pqEncodeWith(corpus: DataFrame, book: PqBook,
-      idCol: String, vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("item_id"), pq_codes(book, col(vecCol)).as("codes"))
 
   /** Sum of m LUT lookups per candidate — the codegen'd [[adc_lookup]]
     * kernel over the [[pq_lut]] table (the per-query m*k scores
@@ -348,7 +331,7 @@ object Ann {
     * zip_with/aggregate HOF formulation evaluates its lambdas interpreted,
     * outside whole-stage codegen — measured ~10x slower on the q50
     * cross-score). */
-  private def adcScore(book: PqBook): org.apache.spark.sql.Column =
+  private def adcScore(book: PqBook): Column =
     adc_lookup(col("codes"), col("lut"), book.offsets.toSeq)
 
   /**
@@ -369,12 +352,7 @@ object Ann {
     val allPairs = corpus.select(col(idCol).as("item_id"))
       .crossJoin(broadcast(queries.select(col(idCol).as("query_id"))))
       .where(col("query_id") =!= col("item_id"))
-    pqScorePairs(allPairs, corpus, queries, codebooks, idCol, vecCol)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc").desc, col("item_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "item_id", "adc", "rank")
+    topK(pqScorePairs(allPairs, corpus, queries, codebooks, idCol, vecCol), "adc", k)
   }
 
   /**
@@ -388,13 +366,10 @@ object Ann {
   def pqScorePairs(pairs: DataFrame, corpus: DataFrame, queries: DataFrame,
       codebooks: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val book = collectBooks(codebooks)
-    requireDim(corpus, vecCol, book, "corpus")
-    requireDim(queries, vecCol, book, "query")
-    val q = queries.select(col(idCol).as("query_id"),
-      pq_lut(book, col(vecCol)).as("lut"))
+    val (c, q) = pqSides(corpus, queries, book, idCol, vecCol)
     pairs.select("query_id", "item_id")
-      .join(pqEncodeWith(corpus, book, idCol, vecCol), "item_id")
-      .join(q, "query_id")
+      .join(c.select(col("item_id"), pq_codes(book, col("cv")).as("codes")), "item_id")
+      .join(q.select(col("query_id"), pq_lut(book, col("qv")).as("lut")), "query_id")
       .withColumn("adc", adcScore(book))
       .select("query_id", "item_id", "adc")
   }
@@ -457,10 +432,8 @@ object Ann {
       queries: DataFrame, centroids: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val book = collectBooks(codebooks)
-    requireDim(corpus, vecCol, book, "corpus")
-    requireDim(queries, vecCol, book, "query")
-    val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    // checked before residualFrame's vec_sub, which truncates to the shorter input
+    val (c, q) = pqSides(corpus, queries, book, idCol, vecCol)
     val (localCents, cents) = localizeCentroids(centroids)
     val codes = residualFrame(c, localCents, cents)
       .select(col("item_id"), col("cell"), pq_codes(book, col("rv")).as("codes"))
@@ -506,10 +479,8 @@ object Ann {
       centroids: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
     val book = collectBooks(codebooks)
-    requireDim(corpus, vecCol, book, "corpus")
-    requireDim(queries, vecCol, book, "query")
-    val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    // checked before residualFrame's vec_sub, which truncates to the shorter input
+    val (c, q) = pqSides(corpus, queries, book, idCol, vecCol)
     val (localCents, cents) = localizeCentroids(centroids)
     // the single corpus pass: cell assignment + residual encode, fused
     val codes = residualFrame(c, localCents, cents)
@@ -518,12 +489,7 @@ object Ann {
     val cand = probes.select("query_id", "cell").join(codes, "cell")
       .where(col("query_id") =!= col("item_id"))
     // LUTs per (query, probed cell)
-    residualAdc(cand, probes, localCents, book)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("adc").desc, col("item_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "item_id", "adc", "rank")
+    topK(residualAdc(cand, probes, localCents, book), "adc", k)
   }
 
   /**
@@ -549,12 +515,6 @@ object Ann {
       .distinct() // a pair may collide in several tables
     // vectors join back exactly once per distinct candidate pair
     val cand = candIds.join(q, "query_id").join(c, "item_id")
-    cand
-      .withColumn("cosine", cosine_sim(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("item_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "item_id", "cosine", "rank")
+    topK(cand.withColumn("cosine", cosine_sim(col("qv"), col("cv"))), "cosine", k)
   }
 }

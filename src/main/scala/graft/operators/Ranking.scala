@@ -32,13 +32,14 @@ object Ranking {
       .where(col("rank") <= k)
   }
 
-  /** Per-query top-k items (reference retrieval top-n = 50,
+  /** Per-query top-k items by `scoreCol` descending, ties on item_id
+    * (reference retrieval top-n = 50,
     * ea/sim/main/methods/retrieval_model.py:15-21). */
-  def topKItems(pairScores: DataFrame, k: Int): DataFrame =
+  def topKItems(pairScores: DataFrame, k: Int, scoreCol: String = "score"): DataFrame =
     pairScores
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("item_id"))))
+          .orderBy(col(scoreCol).desc, col("item_id"))))
       .where(col("rank") <= k)
 
   /**

@@ -224,12 +224,6 @@ object TextScores {
           (lit(1 - b) + lit(b) * col("dl") / lit(avgdl)))).as("score"))
   }
 
-  /** [[bm25IndexScores]] + per-query top-k, ties on item_id (the
-    * [[Ranking.topKItems]] contract). */
-  def bm25IndexTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      textCol: String, k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    Ranking.topKItems(bm25IndexScores(corpus, queries, idCol, textCol, k1, b), k)
-
   /**
    * BOTH index scorers off ONE posting join — for consumers that score the
    * same (corpus, queries) against TF-IDF and BM25 together (rank fusion,

@@ -291,4 +291,12 @@ class HashKernelsSpec extends AnyFunSuite {
     assert(ka.take(3).sameElements(kb.take(3)))
     assert(ka(3) != kb(3))
   }
+
+  test("band keys: a signature shorter than bands·rowsPerBand is rejected by name") {
+    val sig = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array.tabulate(7)(_.toLong))
+    val e = intercept[IllegalArgumentException](HashKernels.bandKeys(sig, 4, 2, 42L))
+    assert(e.getMessage.contains("lsh_band_keys: signature length 7 < bands·rowsPerBand = 8"),
+      e.getMessage)
+  }
 }

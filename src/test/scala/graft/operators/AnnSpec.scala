@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.functions.HashKernels
+import org.apache.spark.sql.DataFrame
 
 class AnnSpec extends SparkSpec {
   import spark.implicits._
@@ -166,14 +167,61 @@ class AnnSpec extends SparkSpec {
       (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f)))
       .toDF("sub", "code", "centv")
     val short = Seq((1L, Array(1f, 0f, 1f))).toDF("vec_id", "embedding")
-    intercept[IllegalArgumentException] {
-      Ann.pqEncode(short, books, "vec_id", "embedding").collect()
-    }
+    assert(dimRejection(Ann.pqEncode(short, books, "vec_id", "embedding").collect()) ==
+      "corpus vector dim 3 != codebook dim 4")
     val sparse = Seq((0, 0, Seq(1f, 0f)), (0, 2, Seq(0f, 1f)))
       .toDF("sub", "code", "centv")
     val ok = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
       Ann.pqEncode(ok, sparse, "vec_id", "embedding").collect()
+    }
+  }
+
+  /** The message of the dim guard's error in the cause chain of what `run`
+    * throws. */
+  private def dimRejection(run: => Any): String = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case t: org.apache.spark.SparkThrowable if t.getCondition == "USER_RAISED_EXCEPTION" =>
+        t.getMessageParameters.get("errorMessage")
+    }.getOrElse(fail("no dim guard error in the cause chain", e))
+  }
+
+  test("pq: a wrong-dim row at any position is rejected by every PQ entry point") {
+    // the codebook dim is 4; the second row of one side is one float short
+    // or one float long. Every wrong-dim row must be rejected, not only a
+    // first row (a short row would be scored on its prefix, a long one on
+    // its first 4 floats)
+    val books = Seq(
+      (0, 0, Seq(1f, 0f)), (0, 1, Seq(0f, 1f)),
+      (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f)))
+      .toDF("sub", "code", "centv")
+    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 0f, 1f, 0f)))
+      .toDF("cent_id", "centv")
+    val good = (1L to 6L).map(i => (i, Array(i.toFloat, 1f, 0f, -i.toFloat)))
+    def frame(badDim: Int) = (good.head +: (2L, Array.tabulate(badDim)(_.toFloat)) +:
+      good.drop(2)).toDF("vec_id", "embedding")
+    val ok = good.toDF("vec_id", "embedding")
+    val pairs = ok.select($"vec_id".as("query_id")).crossJoin(ok.select($"vec_id".as("item_id")))
+      .where($"query_id" =!= $"item_id")
+    val entries: Seq[(String, Boolean, (DataFrame, DataFrame) => Any)] = Seq(
+      ("pqCodebooks", false,
+        (c, _) => Ann.pqCodebooks(c, "vec_id", "embedding", m = 2, k = 2, iters = 1)),
+      ("pqEncode", false, (c, _) => Ann.pqEncode(c, books, "vec_id", "embedding").collect()),
+      ("pqScorePairs", true,
+        (c, q) => Ann.pqScorePairs(pairs, c, q, books, "vec_id", "embedding").collect()),
+      ("pqTopK", true, (c, q) => Ann.pqTopK(c, q, books, "vec_id", "embedding", 2).collect()),
+      ("ivfPqTopK", true, (c, q) =>
+        Ann.ivfPqTopK(c, q, cents, books, "vec_id", "embedding", 2, nProbe = 2).collect()),
+      ("pqResidualScorePairs", true, (c, q) =>
+        Ann.pqResidualScorePairs(pairs, c, q, cents, books, "vec_id", "embedding").collect()),
+      ("ivfPqResidualTopK", true, (c, q) =>
+        Ann.ivfPqResidualTopK(c, q, cents, books, "vec_id", "embedding", 2, 2).collect()))
+    for ((name, hasQueries, run) <- entries; badDim <- Seq(3, 5);
+         side <- if (hasQueries) Seq("corpus", "query") else Seq("corpus")) {
+      val bad = frame(badDim)
+      val msg = dimRejection(if (side == "corpus") run(bad, ok) else run(ok, bad))
+      assert(msg == s"$side vector dim $badDim != codebook dim 4", s"$name, $side: $msg")
     }
   }
 
@@ -195,7 +243,7 @@ class AnnSpec extends SparkSpec {
     assert(top == Set((1L, 2L), (2L, 1L)))
   }
 
-  test("pq: artifacts collect without a job and the dim probes shuffle nothing") {
+  test("pq: artifacts collect and a pqScorePairs plan builds without a job") {
     import graft.obs.StageMetrics
     val df = vecs.toDF("vec_id", "embedding")
     val books = Ann.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 16, iters = 1)
@@ -203,7 +251,7 @@ class AnnSpec extends SparkSpec {
     assert(StageMetrics.measure(spark)(books.collect())._2.jobs.isEmpty)
     assert(StageMetrics.measure(spark)(cents.collect())._2.jobs.isEmpty)
     // an RDD-backed input spread by a round-robin repartition, as
-    // SparkEntry's inputs are: the probes read beneath the repartition
+    // SparkEntry's inputs are: the dims are checked per row inside the plan
     val rdd = spark.createDataFrame(spark.sparkContext.parallelize(vecs, 2))
       .toDF("vec_id", "embedding")
     val corpus = rdd.repartition(4).select("vec_id", "embedding")
@@ -213,8 +261,7 @@ class AnnSpec extends SparkSpec {
       ($"vec_id" - 1000L).as("item_id"))
     val (scored, setup) = StageMetrics.measure(spark)(
       Ann.pqScorePairs(pairs, corpus, queries, books, "vec_id", "embedding"))
-    assert(setup.jobs.size <= 2, setup.summary)
-    assert(setup.total.shuffleWriteBytes == 0L, setup.summary)
+    assert(setup.jobs.isEmpty, setup.summary)
     val want = Ann.pqScorePairs(pairs, df, queries, books, "vec_id", "embedding")
       .as[(Long, Long, Double)].collect().toSet
     assert(want.size == 10 && scored.as[(Long, Long, Double)].collect().toSet == want)
