@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.Decimal
  * [[graft.functions.KernelCall]]; static parameters (k, bands, seed…)
  * arrive as foldable SQL literals and are evaluated at resolution time.
  * Column-only are the kernels that take a driver-built object, which no SQL
- * literal can spell: `adc_lookup` (PQ subspace offsets), the PQ and IVF
- * codebook kernels and `bloom_count_contained` (a serialized sketch).
+ * literal can spell: `adc_lookup` (PQ subspace offsets) and the PQ and IVF
+ * codebook kernels.
  *
  * Reference analogue: the coder/method registry the reference wires by hand in
  * ea/sim/dev/scripts/training/training/common.py:47-74 — here it is one

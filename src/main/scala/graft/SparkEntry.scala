@@ -1795,13 +1795,10 @@ object SparkEntry {
       // lists and the fusion in SQL. Both scores come off ONE posting join
       // (TextScores.tfidfBm25IndexScores — the candidate sets are identical
       // by construction) and both per-list ranks plus the fused re-rank run
-      // as three windows over ONE query_id exchange, replacing the previous
-      // two independent index builds + list union (bit-identical output:
-      // each leg ranks the same rounded scores with the same item_id
-      // tie-break, and the fused score 1/(60+rt) + 1/(60+rb) is the same
-      // two-term IEEE sum rrfFuse aggregates; items outside a leg's top-10
-      // contribute nothing there, items outside both are absent here as in
-      // the union).
+      // as three windows over ONE query_id exchange: each leg ranks the
+      // rounded scores with an item_id tie-break, the fused score is the
+      // two-term IEEE sum 1/(60+rt) + 1/(60+rb), and items outside a leg's
+      // top-10 contribute nothing there.
       val docs = spread(t(s, d, "documents"))
       val queries = docs.where(col("doc_id") % 25 === 0)
       val k = 10

@@ -281,16 +281,6 @@ object Metrics {
         .otherwise(round(covN * covN / (varXN * varYN), 6)).as("r2"))
   }
 
-  /** Cluster-level pair recall: pairs implied by co-membership in predicted
-    * clusters vs pairs implied by truth clusters (assignment-level parity
-    * with the reference's cluster semantics). */
-  def clusterPairs(assignments: DataFrame, idCol: String, clusterCol: String): DataFrame = {
-    val x = assignments.select(col(idCol).as("id"), col(clusterCol).as("c"))
-    x.as("l").join(x.as("r"),
-        col("l.c") === col("r.c") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b"))
-  }
-
   /**
    * ROC-AUC via the rank-statistic (Mann-Whitney U) form, fully distributed:
    * AUC = (sum of positive ranks - P(P+1)/2) / (P*N), with average ranks on

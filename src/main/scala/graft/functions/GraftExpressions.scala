@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
  * row: its Column helper in `graft.functions` and its SQL function in
  * [[graft.GraftExtensions]] are one call into the row.
  *
- * The kernels that read a driver-built object keep their own classes:
- * [[BloomCountContained]] and the [[PqBook]]/[[CentroidBook]] kernels.
+ * The kernels that read a driver-built object keep their own classes: the
+ * [[PqBook]]/[[CentroidBook]] kernels.
  */
 
 /** The Java type of a kernel's literal parameter. */
@@ -298,41 +298,6 @@ case class KernelCall(name: String, children: Seq[Expression], params: Seq[Any])
 object KernelCall {
   /** The class whose static methods the kernels are. */
   private val Host = "graft.functions.HashKernels"
-}
-
-/** array<long> hashes -> int count of elements the inlined Bloom sketch
-  * might contain. The sketch rides in the expression (serialized with the
-  * plan) and deserializes ONCE per task via the lazy field; the per-row
-  * work is a few bit tests per element — zero-shuffle membership counting
-  * against a persisted corpus artifact (the novelty-scoring hot path).
-  * No false negatives: a truly-present element always counts. */
-case class BloomCountContained(child: Expression, sketch: Array[Byte])
-    extends UnaryExpression {
-  @transient private lazy val filter =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(sketch)
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bloom_count_contained"
-  /** Shared by interpreted eval and generated code. */
-  def count(arr: ArrayData): Int = {
-    val n = arr.numElements()
-    var c = 0
-    var i = 0
-    while (i < n) {
-      if (filter.mightContainLong(arr.getLong(i))) c += 1
-      i += 1
-    }
-    c
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    count(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomCounter", this,
-      classOf[BloomCountContained].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.count($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BloomCountContained =
-    copy(child = newChild)
 }
 
 /** A trained product-quantization codebook held on the driver:

@@ -39,9 +39,6 @@ object HashKernels {
     mix64(h)
   }
 
-  def hashString(s: String, seed: Long): Long =
-    hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8), seed)
-
   // ---------------------------------------------------------------------
   // Shingling (reference n-gram extraction, ea/sim/main/preprocess/seq_coder.py:69-81)
   // ---------------------------------------------------------------------
@@ -306,10 +303,6 @@ object HashKernels {
    */
   def phashRot90(p: Long): Long = phashFlipH(phashTranspose(p))
 
-  /** 90-degree-counter-clockwise (= 270 cw) transform: flipV after
-    * transpose (see [[phashRot90]]). */
-  def phashRot270(p: Long): Long = phashFlipV(phashTranspose(p))
-
   /**
    * Full-dihedral orbit-canonical phash: the signed-long minimum over all
    * EIGHT grid symmetries {id, flipH, flipV, rot180, transpose, rot90,
@@ -525,8 +518,7 @@ object HashKernels {
    * reference's df damping term is applied upstream as a join (it needs the
    * corpus df table), keeping this kernel a pure per-pair function.
    *
-   * Intentional deviations from the cited reference (shared with
-   * [[graft.operators.TextScores.fastAlignScore]]): (a) no gap penalty for
+   * Intentional deviations from the cited reference: (a) no gap penalty for
    * unmatched tokens — the reference subtracts unmatched weight, giving a
    * score range of [-1, 1] vs [0, 1] here; (b) tokens align at their
    * FIRST-occurrence 0-based position, where the reference merges every

@@ -113,12 +113,12 @@ package object functions {
     column(IvfProbe(expression(vec), book, nProbe))
 
   /** FaST positional alignment score of two token arrays (see
-    * [[HashKernels.fastAlignData]]), numerically equivalent to
-    * [[graft.operators.TextScores.fastAlignScore]] with empty df (the df
-    * damping joins in upstream when wanted). The two kernels sum match
-    * contributions in different hash-iteration orders (Scala Map vs
-    * java.util.HashMap of UTF8String), so last-ulp summation-order drift is
-    * possible; the parity spec asserts 1e-12 tolerance, not bit equality. */
+    * [[HashKernels.fastAlignData]]), numerically equivalent to the parity
+    * spec's Scala reference with empty df (the df damping joins in upstream
+    * when wanted). The two sum match contributions in different
+    * hash-iteration orders (Scala Map vs java.util.HashMap of UTF8String),
+    * so last-ulp summation-order drift is possible; the parity spec asserts
+    * 1e-12 tolerance, not bit equality. */
   def fast_align(a: Column, b: Column, gamma: Double = 1.0, alpha: Double = 0.0): Column =
     call("fast_align", a, b)(gamma, alpha)
 
@@ -169,12 +169,6 @@ package object functions {
     * init, then each row is a few bit tests. Build the sketch with
     * [[graft.operators.Dedup.bloomSketch]] (hash contract: both sides must
     * hash the same way — `xxhash64` here and there). */
-  /** Count of a hash array's elements the inlined Bloom sketch might
-    * contain — the zero-shuffle novelty-scoring kernel (see
-    * [[BloomCountContained]]; sketch deserialized once per task). */
-  def bloom_count_contained(sketch: Array[Byte], hashes: Column): Column =
-    column(BloomCountContained(expression(hashes), sketch))
-
   def bloom_might_contain(sketch: Array[Byte], hash: Column): Column =
     column(org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
       org.apache.spark.sql.catalyst.expressions.Literal(
@@ -240,15 +234,6 @@ package object functions {
   def distinct_token_ratio(c: Column): Column =
     call("distinct_token_ratio", F.coalesce(c, F.lit("")))()
 
-  /** Regex/array spelling of [[distinct_token_ratio]] — the equivalence
-    * oracle for the single-pass kernel (ExpressionsSpec). */
-  private[graft] def distinct_token_ratio_arrays(c: Column): Column = {
-    val toks = rawTokens(c)
-    val n = F.size(toks)
-    F.round(F.when(n === 0, 1.0)
-      .otherwise(F.size(F.array_distinct(toks)).cast("double") / n), 4)
-  }
-
   /** Duplicate-bigram fraction (same family), rounded to 4 places;
     * fewer than two tokens -> 0.0. See [[distinct_token_ratio]]. */
   def dup_bigram_frac(c: Column): Column = {
@@ -262,26 +247,12 @@ package object functions {
         F.size(F.array_distinct(bigrams)).cast("double") / F.size(bigrams)), 4)
   }
 
-  private val StopWords = Seq("the", "a", "an", "and", "or", "of", "to", "in",
-    "is", "it", "that", "for", "on", "with", "as", "was", "at", "by")
-
   /** Fraction of tokens that are English stopwords (language-ID heuristic).
     * Counted with one codegen'd regexp_count over the normalized text —
     * \b-bounded alternation on [a-z0-9 ] text matches exactly the tokens
     * that equal a stopword (no interpreted filter() lambda in the hot path). */
   def stopword_ratio(c: Column): Column =
     call("stopword_ratio", c)()
-
-  /** The regex spelling of [[stopword_ratio]] — kept as the equivalence
-    * oracle for the single-pass kernel (ExpressionsSpec pins kernel ==
-    * regex on generated and edge-case inputs; the kernel is ~12x cheaper
-    * on the bench corpus). */
-  private[graft] def stopword_ratio_regex(c: Column): Column = {
-    val n = normalize_text(c)
-    val nToks = F.regexp_count(n, F.lit("[^ ]+"))
-    val nStop = F.regexp_count(n, F.lit(StopWords.mkString("\\b(", "|", ")\\b")))
-    F.when(nToks === 0, F.lit(0.0)).otherwise(nStop.cast("double") / nToks)
-  }
 
   /** n-gram-free language ID heuristic: 'en' when stopword density clears a
     * threshold, 'other' otherwise. */
@@ -303,18 +274,4 @@ package object functions {
     * the null-intolerant kernel is coalesced to match. */
   def quality_score(c: Column): Column =
     F.coalesce(call("quality_score", c)(), F.lit(0.0))
-
-  /** Expression-chain spelling of [[quality_score]] — the equivalence
-    * oracle for the single-pass kernel (ExpressionsSpec). */
-  private[graft] def quality_score_exprs(c: Column): Column = {
-    val nChars = F.length(c).cast("double")
-    val nPunct = F.regexp_count(c, F.lit("[.!?,;:]")).cast("double")
-    val nToks = token_count(c).cast("double")
-    val meanWord = F.when(nToks === 0, F.lit(0.0)).otherwise(nChars / nToks)
-    val punctRatio = F.when(nChars === 0, F.lit(1.0)).otherwise(nPunct / nChars)
-    val wordScore = F.when(meanWord.between(3.0, 12.0), F.lit(0.4)).otherwise(F.lit(0.0))
-    val punctScore = F.when(punctRatio <= 0.1, F.lit(0.3)).otherwise(F.lit(0.0))
-    val stopScore = F.when(stopword_ratio_regex(c) >= 0.05, F.lit(0.3)).otherwise(F.lit(0.0))
-    F.round(wordScore + punctScore + stopScore, 2)
-  }
 }

@@ -1,7 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
-
 /**
  * Core row types of the engine (typed `Dataset[T]` encoders derive from these).
  *
@@ -23,24 +21,6 @@ final case class ImageRow(
     fmt: String,       // "png" | "jpg"
     caption: String,
     phash: Long)
-
-/**
- * One attach action from the label stream.
- * Reference analogue: `StackAdditionEvent`
- * (reference: ea/sim/main/data/buckets/event_state_model.py:12-17).
- */
-final case class AttachEvent(
-    event_id: Long,
-    image_id: String,
-    cluster_id: Long,  // -1 = unassigned / new-issue event
-    ts: Timestamp,
-    label: Boolean)
-
-/** Final cluster assignment (reference `Issue` membership as a column). */
-final case class ClusterAssignment(image_id: String, cluster_id: Long)
-
-/** A verified duplicate pair, canonical a < b. */
-final case class DupPair(a: String, b: String, jaccard: Double, hamming: Int)
 
 /** Ground truth emitted by the synthetic generator (FIXTURES.md section 3). */
 final case class ExpectedCluster(image_id: String, cluster_id: Long)

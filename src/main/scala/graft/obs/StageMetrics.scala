@@ -42,16 +42,8 @@ object StageMetrics {
   final case class Report(wallS: Double, jobs: Seq[Job], stages: Seq[Stage]) {
     lazy val total: Cost = stages.map(_.cost).foldLeft(Cost())(_ + _)
 
-    def summary: String = {
-      val t = total
-      f"wall=$wallS%.2f s cpu=${t.cpuS}%.2f s run=${t.runS}%.2f s " +
-        f"gc=${t.gcS}%.2f s fetchWait=${t.fetchWaitS}%.2f s " +
-        f"shWrite=${t.shuffleWriteBytes / 1e6}%.1f MB spill=${t.spillBytes / 1e6}%.1f MB " +
-        s"jobs=${jobs.size} stages=${stages.size} tasks=${t.tasks}"
-    }
-
     /** One line per job and per stage whose wall is at least 0.1 s;
-      * [[summary]] covers the rest. */
+      * [[total]] covers the rest. */
     def breakdown: Seq[String] =
       jobs.filter(_.wallS >= BreakdownMinWallS).map(j =>
         f"[job]   id=${j.id}%4d wall=${j.wallS}%6.2f s stages=${j.stages}%3d ${j.name}") ++

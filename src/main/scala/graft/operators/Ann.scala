@@ -41,28 +41,24 @@ object Ann {
    * the full corpus.
    *
    * Centroids are a deterministic hash-order sample of the corpus
-   * ([[sampleCentroids]]); [[kmeansCentroids]] refines them. The nlist-row
-   * centroid table is collected into one driver-held [[CentroidBook]], so cell
-   * assignment ([[ivf_assign]]) and probe selection ([[ivf_probe]]) are
-   * NARROW per-row kernels (whole-stage codegen, zero shuffle) at any
-   * nlist; the only shuffles are the cell equi-join and the final rank.
+   * ([[sampleCentroids]]); [[kmeansCentroids]] refines them for the
+   * operators that take a centroid table. The nlist-row centroid table is
+   * collected into one driver-held [[CentroidBook]], so cell assignment
+   * ([[ivf_assign]]) and probe selection ([[ivf_probe]]) are NARROW per-row
+   * kernels (whole-stage codegen, zero shuffle) at any nlist; the only
+   * shuffles are the cell equi-join and the final rank.
    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 64, nProbe: Int = 8): DataFrame = {
     val c = corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv"))
-    ivfSearch(c, queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      sampleCentroids(c, nlist), k, nProbe)
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val (_, cents) = localizeCentroids(sampleCentroids(c, nlist))
+    val cand = probeCells(q, cents, nProbe)
+      .join(c.withColumn("cell", ivf_assign(cents, col("cv"))), "cell")
+      .where(col("query_id") =!= col("item_id"))
+    topK(cand.withColumn("cosine", cosine_sim(col("qv"), col("cv"))), "cosine", k)
   }
-
-  /** [[ivfTopK]] against caller-supplied centroids (e.g. [[kmeansCentroids]]
-    * output, or a persisted centroid table maintained across corpus
-    * snapshots — the index artifact the reference stores via FAISS,
-    * ea/sim/main/methods/index/faiss.py:40-51). */
-  def ivfTopKWith(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame =
-    ivfSearch(corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), centroids, k, nProbe)
 
   /**
    * Distributed Lloyd refinement of the IVF coarse quantizer: E-step is the
@@ -76,7 +72,7 @@ object Ann {
    * Init and tie-breaks are deterministic; the M-step's floating-point avg()
    * merges partials in shuffle arrival order, so exact bit-reproducibility
    * across DIFFERENT cluster topologies is not guaranteed (last-ulp drift) —
-   * persist the trained centroids (ivfTopKWith) when runs must agree.
+   * persist the trained centroids when runs must agree.
    */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int = 3): DataFrame = {
@@ -114,48 +110,6 @@ object Ann {
     c.orderBy(xxhash64(col("item_id")), col("item_id")).limit(nlist)
       .select(col("item_id").as("cent_id"), col("cv").as("centv"))
 
-  private def ivfSearch(c: DataFrame, q: DataFrame, centroids: DataFrame,
-      k: Int, nProbe: Int): DataFrame =
-    topK(coarsePairs(c, q, centroids, nProbe)
-      .withColumn("cosine", cosine_sim(col("qv"), col("cv"))), "cosine", k)
-
-  /** The IVF coarse stage alone: cell-restricted (query, item) candidate
-    * pairs — compose with [[pqScorePairs]] (IVFADC) or any custom verifier. */
-  def ivfCandidates(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, nProbe: Int): DataFrame =
-    coarsePairs(corpus.select(col(idCol).as("item_id"), col(vecCol).as("cv")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), centroids, nProbe)
-      .select("query_id", "item_id")
-
-  /**
-   * Full IVFADC (the FAISS `IndexIVFPQ` shape): the coarse quantizer
-   * restricts each query's candidates to its `nProbe` cells, the PQ codes
-   * score the survivors in the compressed domain, and only (id, id, score)
-   * rows reach the final rank — at 10^9+ vectors neither the candidate
-   * shuffle nor the scoring ever carries a full float vector. The corpus is
-   * touched exactly ONCE per search: cell assignment and PQ encode are fused
-   * into a single pass whose (cell, codes) output feeds the candidate join
-   * directly — composing [[ivfCandidates]] with [[pqScorePairs]] would scan
-   * the corpus twice for identical results. (Sandbox note: a production run
-   * persists the encoded (item_id, cell, codes) table once — [[pqEncode]]
-   * output — and joins that instead.)
-   */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-      codebooks: DataFrame, idCol: String, vecCol: String, k: Int,
-      nProbe: Int): DataFrame = {
-    val book = collectBooks(codebooks)
-    val (c, q) = pqSides(corpus, queries, book, idCol, vecCol)
-    val (_, cents) = localizeCentroids(centroids)
-    // the single corpus pass: assignment + encode, fused
-    val codes = c.select(col("item_id"), ivf_assign(cents, col("cv")).as("cell"),
-      pq_codes(book, col("cv")).as("codes"))
-    val cand = probeCells(q, cents, nProbe)
-      .select("query_id", "cell").join(codes, "cell")
-      .where(col("query_id") =!= col("item_id"))
-    val qlut = q.select(col("query_id"), pq_lut(book, col("qv")).as("lut"))
-    topK(cand.join(qlut, "query_id").withColumn("adc", adcScore(book)), "adc", k)
-  }
-
   /**
    * Public surface of the coarse quantizer: ONE corpus pass of
    * nearest-centroid assignment, returning (id, cell). The building block
@@ -164,22 +118,12 @@ object Ann {
    * scores within-cell pairs — and for maintaining a persisted assignment
    * table alongside the centroid artifact between corpus snapshots. Every
    * row keeps its own cell from the search's own [[ivf_assign]] kernel, so
-   * this table is exactly the one [[ivfTopKWith]] would recompute.
+   * this table is exactly the one [[ivfPqResidualTopK]] would recompute.
    */
   def cellAssignments(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val (_, cents) = localizeCentroids(centroids)
     corpus.select(col(idCol).as("id"), ivf_assign(cents, col(vecCol)).as("cell"))
-  }
-
-  /** (query_id, qv, item_id, cv) pairs sharing a probed cell — the shared
-    * candidate stage of [[ivfSearch]]/[[ivfCandidates]]. */
-  private def coarsePairs(c: DataFrame, q: DataFrame, centroids: DataFrame,
-      nProbe: Int): DataFrame = {
-    val (_, cents) = localizeCentroids(centroids)
-    probeCells(q, cents, nProbe)
-      .join(c.withColumn("cell", ivf_assign(cents, col("cv"))), "cell")
-      .where(col("query_id") =!= col("item_id"))
   }
 
   /** Per-query probe cells (query_id, qv, cell), exploded from one
@@ -308,20 +252,6 @@ object Ann {
       queries.select(col(idCol).as("query_id"), dimChecked(col(vecCol), dim, "query").as("qv")))
   }
 
-  /**
-   * PQ-encode a corpus: (item_id, codes ARRAY<INT> length m) — nearest
-   * centroid per slice by squared L2 via the dot identity (the measure
-   * training and ADC lookup share; encode-argmin and lookup-table scoring
-   * must agree or ranking guarantees break). One [[pq_codes]] kernel per
-   * row — zero shuffle, whole-stage codegen.
-   */
-  def pqEncode(corpus: DataFrame, codebooks: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
-    val book = collectBooks(codebooks)
-    corpus.select(col(idCol).as("item_id"),
-      pq_codes(book, dimChecked(col(vecCol), book.m * book.subDim, "corpus")).as("codes"))
-  }
-
   /** Sum of m LUT lookups per candidate — the codegen'd [[adc_lookup]]
     * kernel over the [[pq_lut]] table (the per-query m*k scores
     * q_sub.c - ||c||^2/2, subspace-major: descending total == ascending
@@ -343,9 +273,8 @@ object Ann {
    * trap: whole-stage codegen DEFERS the stream side's projection into the
    * nested-loop's inner loop, so the m*k-dot-product encode expression
    * re-evaluates per PAIR (measured 107 s vs 1.8 s on a 2000 x 2000 cross
-   * score at m = 4, k = 16). Composing an IVF cell restriction
-   * ([[ivfCandidates]] -> [[pqScorePairs]]) is the full IVFADC
-   * ([[ivfPqTopK]]) — this flat variant is the `IndexPQ` shape.
+   * score at m = 4, k = 16). [[ivfPqResidualTopK]] is the cell-restricted
+   * IVFADC; this flat variant is the `IndexPQ` shape.
    */
   def pqTopK(corpus: DataFrame, queries: DataFrame, codebooks: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
@@ -463,17 +392,16 @@ object Ann {
   }
 
   /**
-   * Residual IVFADC top-k — the FAISS `IndexIVFPQ` default, where
-   * [[ivfPqTopK]] is the raw-vector-codes variant. The corpus is touched
-   * exactly ONCE per search: the same nearest-centroid pass yields the cell
-   * (the candidate join key) AND the residual codes, and the candidate join
-   * ships the m small codes directly — composing [[ivfCandidates]] with
-   * [[pqResidualScorePairs]] would run the nlist-way assignment scan over
-   * the full corpus twice. Scores match that composition exactly (same
-   * pairs, same per-(query, cell) LUT, same cross-cell bias subtraction).
-   * Sandbox note: this still derives (item_id, cell, codes) inside the
-   * plan; a production run persists that table once ([[pqEncode]]'s
-   * residual analogue) and joins it instead.
+   * Residual IVFADC top-k — the FAISS `IndexIVFPQ` default. The corpus is
+   * touched exactly ONCE per search: the same nearest-centroid pass yields
+   * the cell (the candidate join key) AND the residual codes, and the
+   * candidate join ships the m small codes directly — scoring cell-restricted
+   * candidate pairs with [[pqResidualScorePairs]] would run the nlist-way
+   * assignment scan over the full corpus twice. Scores match that
+   * composition exactly (same pairs, same per-(query, cell) LUT, same
+   * cross-cell bias subtraction). Sandbox note: this still derives
+   * (item_id, cell, codes) inside the plan; a production run persists that
+   * table once and joins it instead.
    */
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, codebooks: DataFrame,

@@ -40,23 +40,15 @@ object Curation {
   }
 
   /**
-   * Deterministic uniform sample: keeps each row iff
-   * md5(salt || key) < rate — a NARROW zero-shuffle filter (the scan's
-   * predicate at 100 TB), reproducible across runs, engines, and partial
-   * recomputes. Sampling is BY KEY: duplicate keys are kept or dropped
-   * together (sample-then-dedup stays coherent).
-   */
-  def deterministicSample(df: DataFrame, keyCol: String, rate: Double,
-      salt: String = "graft"): DataFrame =
-    if (rate >= 1.0) df
-    else df.where(hashHex(col(keyCol), salt) < lit(thresholdHex(rate)))
-
-  /**
-   * Deterministic STRATIFIED sample: per-stratum rates (the corpus-mixture
-   * knob — e.g. keep 80% of high-quality strata, 5% of boilerplate ones),
-   * still a narrow zero-shuffle filter: the rates map becomes a literal
-   * when-chain on the stratum column, so no join and no rand(). Strata
-   * absent from the map use `defaultRate`; NULL strata use `defaultRate`.
+   * Deterministic STRATIFIED sample: keeps each row iff
+   * md5(salt || key) < its stratum's rate — per-stratum rates being the
+   * corpus-mixture knob (e.g. keep 80% of high-quality strata, 5% of
+   * boilerplate ones). A NARROW zero-shuffle filter (the scan's predicate
+   * at 100 TB), reproducible across runs, engines, and partial recomputes:
+   * the rates map becomes a literal when-chain on the stratum column, so no
+   * join and no rand(). Sampling is BY KEY: duplicate keys are kept or
+   * dropped together (sample-then-dedup stays coherent). Strata absent from
+   * the map use `defaultRate`; NULL strata use `defaultRate`.
    */
   def stratifiedSample(df: DataFrame, keyCol: String, strataCol: String,
       rates: Map[String, Double], defaultRate: Double,
@@ -252,7 +244,7 @@ object Curation {
   /**
    * Deterministic mixture sample: keeps each row iff its stratum's
    * [[mixtureRates]] rate admits the row's md5 selection value — the same
-   * by-key threshold device as [[deterministicSample]], with the rate now
+   * by-key threshold device as [[stratifiedSample]], with the rate now
    * DERIVED from the corpus's per-stratum token totals instead of given.
    * The rates frame is broadcast (one row per weighted stratum), so the
    * sample itself is a zero-shuffle filter after one stratum aggregation.
@@ -315,7 +307,7 @@ object Curation {
    * near-duplicate of an eval document can sit in train (the contamination
    * mode [[Dedup.contaminationReport]] measures; this operator prevents it
    * at split time). Docs absent from `assignments` are singletons and split
-   * as their own unit. Membership is the [[deterministicSample]]
+   * as their own unit. Membership is the [[stratifiedSample]]
    * md5-threshold device on the unit key — reproducible across runs,
    * engines, and partial recomputes, and stable under corpus growth: a
    * cluster's side never changes when unrelated docs arrive.
@@ -352,7 +344,7 @@ object Curation {
    * exactly 1 — head strata are sampled down toward the flattened target,
    * the smallest stratum keeps every row, and nothing is ever up-weighted
    * (no duplication, so the output stays a subset — compose with
-   * [[deterministicSample]] per stratum for the reproducible row filter).
+   * [[stratifiedSample]] for the reproducible row filter).
    * alpha = 1 is a no-op (every rate 1), alpha -> 0 flattens toward
    * uniform. Differs from [[mixtureRates]] in where the target comes from:
    * there the caller names absolute weights + a token budget; here the
@@ -548,7 +540,7 @@ object Curation {
    * −ln(u_i)/w_i with u_i a pure function of (salt, key) — the k smallest
    * priorities are the sample, each row's inclusion probability
    * proportional to its weight. The weighted companion of
-   * [[deterministicSample]]: same reproducible-by-construction guarantee
+   * [[stratifiedSample]]: same reproducible-by-construction guarantee
    * (no rand(), no execution-order dependence — the oracle recomputes the
    * identical selection in SQL), but mass-aware, e.g. sample training docs
    * proportional to token count or dedup weight ([[dedupWeights]]'

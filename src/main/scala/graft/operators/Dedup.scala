@@ -522,27 +522,6 @@ object Dedup {
       .select("a", "b", "jaccard")
   }
 
-  /** Brute-force directional containment — the exact O(n^2) oracle for
-    * [[containmentPairs]] (small inputs only), same DISTINCT shingle sets
-    * (textFeatures' raw shingle array keeps repeats; containment is a set
-    * measure), same integer-form boundary gate. */
-  def bruteForceContainmentPairs(docs: DataFrame, idCol: String,
-      textCol: String, cfg: DedupConfig, containMin: Double): DataFrame = {
-    val EPS = 1e-9
-    val feat = docs.select(col(idCol).as("id"),
-        array_distinct(
-          shingle_hashes(tokens(col(textCol)), cfg.shingleK, cfg.seed)).as("sh"))
-      .where(size(col("sh")) > 0)
-    val fa = feat.select(col("id").as("a"), col("sh").as("sh_a"))
-    val fb = feat.select(col("id").as("b"), col("sh").as("sh_b"))
-    fa.crossJoin(fb).where(col("a") =!= col("b"))
-      .withColumn("overlap", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .where(col("overlap") >= ceil(size(col("sh_a")) * containMin - EPS))
-      .withColumn("containment",
-        round(col("overlap").cast("double") / size(col("sh_a")), 4))
-      .select("a", "b", "containment")
-  }
-
   /**
    * Exact long-match (shared-substring) pair detection at corpus scale —
    * the distributed replacement for the north rule's suffix-array substring
@@ -760,18 +739,16 @@ object Dedup {
   }
 
   /**
-   * Near-dups of a NEW batch against an EXISTING corpus only — the daily-
-   * ingest shape at 100 TB. The corpus side's band rows are the big,
+   * Near-dups of a NEW batch against an EXISTING corpus only — the
+   * daily-ingest shape at 100 TB. The corpus side's band rows are the big,
    * precomputable dimension (in production, persist `textFeatures` + band
    * explode across runs and only the new batch is featurized per run — the
    * batch analogue of the reference's incremental index insert,
-   * ea/sim/main/methods/index/faiss.py:40-51, and of
-   * [[graft.streaming.StreamingDedup.flagKnownNearDups]], which shares the
-   * band-key scheme). The band equi-join generates only new-vs-corpus
-   * candidates: never corpus-corpus (the corpus is already deduped by
-   * contract) and never new-new (self-dedup the batch with
-   * [[minhashLshPairs]] separately when wanted). Hot band keys are bounded
-   * by [[CandidateGen.bipartitePairsFromBuckets]]: AQE skew-splitting alone
+   * ea/sim/main/methods/index/faiss.py:40-51). The band equi-join generates
+   * only new-vs-corpus candidates: never corpus-corpus (the corpus is already
+   * deduped by contract) and never new-new (self-dedup the batch with
+   * [[minhashLshPairs]] separately when wanted). Hot band keys are bounded by
+   * [[CandidateGen.bipartitePairsFromBuckets]]: AQE skew-splitting alone
    * would fix task balance but not candidate VOLUME — a degenerate band key
    * shared by 1e5 corpus and 1e4 new rows would emit 1e9 verify pairs, the
    * first thing a daily ingest hits at a 100 TB corpus. Keys over the
@@ -824,9 +801,8 @@ object Dedup {
 
   /**
    * Serialized Bloom sketch over a corpus's exact content hashes — the O(1)
-   * membership artifact a daily ingest probes INSTEAD of touching the corpus
-   * (the exact-identity counterpart of [[graft.streaming.StreamingDedup
-   * .corpusBands]]): built once per corpus snapshot by one distributed
+   * membership artifact a daily ingest probes INSTEAD of touching the corpus:
+   * built once per corpus snapshot by one distributed
    * aggregation pass (`DataFrameStatFunctions.bloomFilter` — mergeable
    * per-partition sketches, bit-OR combine), persisted next to the snapshot,
    * reused across every batch until the corpus changes.
@@ -1059,7 +1035,7 @@ object Dedup {
 
   /**
    * [[semanticDedupGroups]] against CALLER-SUPPLIED centroids — the
-   * [[Ann.ivfTopKWith]] pattern: at 10^12 rows the coarse quantizer is a
+   * [[Ann.ivfPqResidualTopK]] pattern: at 10^12 rows the coarse quantizer is a
    * persisted artifact trained once per corpus snapshot (reference FAISS
    * index store, ea/sim/main/methods/index/faiss.py:40-51), not something
    * every dedup pass re-runs Lloyd iterations for. Pass the

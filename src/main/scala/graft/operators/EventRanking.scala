@@ -153,40 +153,11 @@ object EventRanking {
    * @param k           final ranking truncation (reference top-10)
    * @param minScore    default for in-window clusters with no retrieved
    *                    member (reference model.min_score)
+   * @param lastUpdateWindow false (default) = per-report slicing
+   *        (`ReportTimeIssueSelector`); true = cluster-last-update candidacy
+   *        (`LastUpdateIssueSelector`) — see [[asOfCandidatesLastUpdate]].
    * @return (query_id, cluster_id, cluster_score, rank)
    */
-  /**
-   * Config-driven form: admission (labels + `cfg.dupAttach` first-of-content
-   * semantics, reference event_state_model.py:81-104) feeds the replay, and
-   * the retention window comes from `cfg.forgetDays`. `forgetDays = None`
-   * (unlimited candidacy — the reference's DummyRetrievalModel diagnostic
-   * path, retrieval_model.py:50-58) derives the window from the log's actual
-   * day span: the day-bucket explode factor then equals the span, which is
-   * the honest cost of all-prior candidacy — prefer a bounded window at
-   * scale.
-   */
-  def replayRankAdmitted(events: DataFrame, contentHashes: DataFrame,
-      cfg: graft.config.DedupConfig, onlyLabeled: Boolean,
-      queryFilter: Column, score: Column,
-      retrievalTopN: Int, k: Int, minScore: Double,
-      idCol: String = "event_id", clusterCol: String = "cluster_id",
-      tsCol: String = "ts", valueCol: String = "value",
-      entityCol: String = "image_id"): DataFrame = {
-    val admitted = EventReplay.admitted(events, contentHashes, onlyLabeled,
-      cfg.dupAttach, entityCol, clusterCol, tsCol, idCol)
-    val days = cfg.forgetDays.getOrElse {
-      val r = admitted.agg(
-        floor(max(col(tsCol).cast("timestamp").cast("long")) / DaySec) -
-        floor(min(col(tsCol).cast("timestamp").cast("long")) / DaySec)).head()
-      if (r.isNullAt(0)) 0 else r.getLong(0).toInt + 1
-    }
-    replayRank(admitted, queryFilter, score, days, retrievalTopN, k, minScore,
-      idCol, clusterCol, tsCol, valueCol)
-  }
-
-  /** @param lastUpdateWindow false (default) = per-report slicing
-    *        (`ReportTimeIssueSelector`); true = cluster-last-update candidacy
-    *        (`LastUpdateIssueSelector`) — see [[asOfCandidatesLastUpdate]]. */
   def replayRank(events: DataFrame, queryFilter: Column, score: Column,
       forgetDays: Int, retrievalTopN: Int, k: Int, minScore: Double,
       idCol: String = "event_id", clusterCol: String = "cluster_id",

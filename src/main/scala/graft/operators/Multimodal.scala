@@ -35,11 +35,6 @@ object Multimodal {
     * ships no codecs for them, so they take the stub path below. */
   private val jdkDecodable = Set("png", "jpg", "jpeg", "gif", "bmp", "wbmp")
 
-  /** Formats [[resizeTo]] may rewrite: the JDK writes faithful png/jpeg, but
-    * its gif/bmp/wbmp writers lose animation/palette semantics — decodable
-    * formats outside this set are measured, never re-encoded. */
-  private val jdkReencodable = Set("png", "jpg", "jpeg")
-
   /** Real decode only for the formats the in-JDK codec handles; anything else
     * (or a corrupt payload) returns None and the caller stubs/passes through
     * instead of failing the task. */
@@ -293,94 +288,5 @@ object Multimodal {
         }
       }
     }(enc).toDF()
-  }
-
-  val resizeSchema: StructType = StructType(Seq(
-    StructField("image_id", StringType),
-    StructField("bytes", BinaryType),
-    StructField("w", IntegerType),
-    StructField("h", IntegerType),
-    StructField("fmt", StringType)))
-
-  /**
-   * Batch resize of image payloads to a bounding box (aspect preserved, no
-   * upscale) — the preprocessing step a training pipeline runs before feature
-   * extraction. PNG/JPEG are decoded/re-encoded for real (in-JDK codec);
-   * gif/bmp/wbmp are decoded for their true dimensions but never rewritten
-   * (the JDK has no faithful re-encoder for them — animation/palette would
-   * be destroyed and the `fmt` column would lie about the bytes); formats the
-   * JDK cannot decode pass through untouched with a `fmt` suffix marker —
-   * same honest-stub policy as [[decodeFeatures]]. One decoder per partition,
-   * binary-in/binary-out so the payload never round-trips the driver.
-   */
-  def resizeTo(images: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val enc = ExpressionEncoder(resizeSchema)
-    images.select(col("image_id"), col("bytes"), col("fmt")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getString(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        val fmt = r.getString(2)
-        tryDecode(bytes, fmt) match {
-          case Some(img) if (img.getWidth > maxW || img.getHeight > maxH) &&
-              jdkReencodable(fmt) =>
-            val scale = math.min(maxW.toDouble / img.getWidth,
-              maxH.toDouble / img.getHeight)
-            val w = math.max(1, (img.getWidth * scale).round.toInt)
-            val h = math.max(1, (img.getHeight * scale).round.toInt)
-            val out = ImageCodec.resize(img, w, h)
-            val b = if (fmt == "png") ImageCodec.encodePng(out)
-                    else ImageCodec.encodeJpg(out)
-            Row(id, b, w, h, fmt)
-          case Some(img) => Row(id, bytes, img.getWidth, img.getHeight, fmt)
-          case None      => Row(id, bytes, -1, -1, s"$fmt+passthrough")
-        }
-      }
-    }(enc).toDF()
-  }
-
-  val frameSchema: StructType = StructType(Seq(
-    StructField("image_id", StringType),
-    StructField("frame_idx", IntegerType),
-    StructField("frame_hash", LongType)))
-
-  /**
-   * Frame sampling for video payloads: emit `everyNth`-spaced frame records
-   * per clip. STUB decode (no video codec ships in this container): frame
-   * hashes are derived deterministically from (payload bytes, frame index),
-   * while the Spark-side shape — one generator pass, (clip, frame_idx) rows,
-   * partition-local decoding — is the real 100 TB plumbing. `nFrames` comes
-   * from a metadata column (containers carry frame counts in headers).
-   */
-  def frameSamples(videos: DataFrame, nFramesCol: String, everyNth: Int): DataFrame = {
-    val enc = ExpressionEncoder(frameSchema)
-    videos.select(col("image_id"), col("bytes"), col(nFramesCol).cast("int"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          // null payloads / null / un-castable frame counts yield zero rows,
-          // not a task failure — same bad-row policy as decodeFeatures/resizeTo
-          if (r.isNullAt(1) || r.isNullAt(2)) Iterator.empty
-          else {
-            val id = r.getString(0)
-            val bytes = r.getAs[Array[Byte]](1)
-            val n = r.getInt(2)
-            val payloadH = graft.functions.HashKernels.hashBytes(bytes, 11L)
-            (0 until n by math.max(1, everyNth)).iterator.map { i =>
-              // STUB: replace with a real frame decode when a codec is present
-              Row(id, i, graft.functions.HashKernels.mix64(payloadH ^ i.toLong))
-            }
-          }
-        }
-      }(enc).toDF()
-  }
-
-  /** PSNR-based per-row fidelity check of a lossy payload vs reference pixels
-    * (BASELINE.json input_hint: PSNR >= 40 dB for lossy fmt). Driver-side
-    * helper for validation sampling, not a bulk operator. */
-  def psnrAgainst(reference: java.awt.image.BufferedImage, bytes: Array[Byte]): Double = {
-    val img = ImageCodec.decode(bytes)
-    val ref =
-      if (img.getWidth == reference.getWidth && img.getHeight == reference.getHeight) reference
-      else ImageCodec.resize(reference, img.getWidth, img.getHeight)
-    ImageCodec.psnr(ImageCodec.toRgb(ref), ImageCodec.toRgb(img))
   }
 }

@@ -140,35 +140,6 @@ object Ranking {
   }
 
   /**
-   * Reciprocal-rank fusion of N ranked retrieval lists (Cormack et al.,
-   * SIGIR 2009): fused score = Σ_lists 1/(kConst + rank), item absent from
-   * a list contributes nothing. The standard score-free way to combine
-   * heterogeneous indexes (here: the TF-IDF and BM25 posting joins, whose
-   * raw scores live on incomparable scales) without tuning weights.
-   *
-   * Scale: a union of already-top-k lists (≤ N·k rows per query) and one
-   * aggregation — the fusion input is the RETRIEVED lists, never the
-   * corpus. Score rounded to 6 before re-ranking so the rank/tie-break is
-   * reproducible across engines (1/(kConst+rank) is exact IEEE division
-   * on both).
-   *
-   * @param lists each (query_id, item_id, rank) — ranks 1-based as
-   *              produced by [[topKItems]]
-   * @return per-query fused top-k: (query_id, item_id, rank, score)
-   */
-  def rrfFuse(lists: Seq[DataFrame], topK: Int, kConst: Int = 60): DataFrame = {
-    require(lists.nonEmpty, "rrfFuse: at least one ranked list")
-    require(topK >= 1, s"rrfFuse: topK($topK) must be >= 1")
-    require(kConst >= 1, s"rrfFuse: kConst($kConst) must be >= 1")
-    val contrib = lists.map(_.select(col("query_id"), col("item_id"),
-        (lit(1.0) / (lit(kConst.toDouble) + col("rank"))).as("c")))
-      .reduce(_ unionByName _)
-    val fused = contrib.groupBy("query_id", "item_id")
-      .agg(round(sum(col("c")), 6).as("score"))
-    topKItems(fused, topK)
-  }
-
-  /**
    * EXACT global top-fraction gate without a global window — the
    * FineWeb-style "keep the best `frac` of the corpus by quality score" step
    * at 10^12 rows. A row is kept iff #{rows with a strictly greater score}

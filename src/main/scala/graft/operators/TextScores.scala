@@ -119,7 +119,7 @@ object TextScores {
    * omission.
    *
    * @return (query_id, item_id, score) — unranked; compose with
-   *         [[Ranking.topKItems]] (or [[tfidfIndexTopK]]) for retrieval
+   *         [[Ranking.topKItems]] for retrieval
    */
   def tfidfIndexScores(corpus: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, minIdf: Double = 0.0): DataFrame = {
@@ -138,14 +138,6 @@ object TextScores {
       .groupBy("query_id", "item_id")
       .agg(sum(col("idf") * col("idf")).as("score"))
   }
-
-  /** [[tfidfIndexScores]] + per-query top-k — the full retrieval model
-    * (reference retrieval top-n, ea/sim/main/methods/retrieval_model
-    * .py:15-21, with the TF-IDF index in place of FAISS). Rank ties break
-    * on item_id (the [[Ranking.topKItems]] contract). */
-  def tfidfIndexTopK(corpus: DataFrame, queries: DataFrame,
-      idCol: String, textCol: String, k: Int, minIdf: Double = 0.0): DataFrame =
-    Ranking.topKItems(tfidfIndexScores(corpus, queries, idCol, textCol, minIdf), k)
 
   /**
    * BM25 retrieval scores — the standard probabilistic index scorer next to
@@ -316,8 +308,7 @@ object TextScores {
    *
    * Scale shape: a posting equi-join on 8-byte shingle hashes — the new
    * side ships (id, shingle) rows, the corpus side DISTINCT shingles only;
-   * never a doc-by-doc comparison. For the zero-shuffle scoring path
-   * against a persisted corpus artifact see [[noveltyBloom]].
+   * never a doc-by-doc comparison.
    *
    * @return (id, n_shingles, novelty) with novelty rounded to 6 places
    */
@@ -337,42 +328,6 @@ object TextScores {
             coalesce(col("__seen"), lit(0L)).cast("double") / col("n_shingles")),
           6).as("novelty"))
   }
-
-  /** One mergeable Bloom sketch over the corpus's DISTINCT shingle hashes —
-    * the persisted novelty artifact [[noveltyBloom]] probes (size set by
-    * (expectedItems, fpp), not corpus rows; the [[graft.operators.Dedup
-    * .bloomSketch]] ceiling discussion applies). */
-  def shingleSketch(corpus: DataFrame, textCol: String,
-      cfg: graft.config.DedupConfig, expectedItems: Long = 4000000L,
-      fpp: Double = 0.01): Array[Byte] = {
-    val bf = corpus.select(explode(array_distinct(
-        text_shingles(col(textCol), cfg))).as("__g"))
-      .stat.bloomFilter("__g", expectedItems, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /**
-   * Zero-shuffle novelty scoring against a persisted [[shingleSketch]]: the
-   * whole computation is one narrow projection (the per-array membership
-   * count is a single codegen'd expression, sketch deserialized once per
-   * task) — novelty at scan speed with NO corpus contact at score time.
-   * Bloom false positives make this a LOWER BOUND on [[noveltyExact]]
-   * (never an overestimate: no false negatives means every truly-seen
-   * shingle counts as seen), within fpp of exact when the sketch is sized
-   * to the corpus's distinct-shingle count.
-   */
-  def noveltyBloom(newDocs: DataFrame, idCol: String, textCol: String,
-      cfg: graft.config.DedupConfig, sketch: Array[Byte]): DataFrame =
-    shingleSets(newDocs, idCol, textCol, cfg)
-      .select(col("id"), size(col("sh")).as("n_shingles"),
-        bloom_count_contained(sketch, col("sh")).as("__seen"))
-      .select(col("id"), col("n_shingles"),
-        round(when(col("n_shingles") === 0, 0.0)
-          .otherwise(lit(1.0) -
-            col("__seen").cast("double") / col("n_shingles")),
-          6).as("novelty"))
 
   /**
    * Repetition-based quality signals per document — the Gopher/FineWeb
@@ -423,8 +378,6 @@ object TextScores {
    * (the report needs the text back, so hashing would force a rejoin);
    * map-side partial aggregation collapses per-partition repeats before the
    * exchange, and the `minDf` filter keeps the result boilerplate-sized.
-   * For a probe-only variant at 100 TB (is this n-gram heavy?) sketch the
-   * output with [[shingleSketch]] instead of shipping strings twice.
    *
    * @return (ngram, doc_freq, total_freq) for doc_freq >= minDf
    */
@@ -641,36 +594,5 @@ object TextScores {
       .agg(count(lit(1)).as("n_tokens"),
         round(-avg(log((coalesce(col("c2"), lit(0L)) + alpha) /
           (coalesce(col("c1"), lit(0L)) + alpha * v))), 6).as("log_ppl"))
-  }
-
-  /**
-   * FaST-style alignment score (reference: ea/sim/main/methods/classic/fast.py:49-133):
-   * df-damped positional weights w(pos) = (pos+1)^-alpha * exp(-beta * df/N);
-   * matched tokens contribute (w1 + w2) * exp(-gamma * |pos1 - pos2|);
-   * normalized by total weight mass of both docs. Pair-level kernel over
-   * token arrays; the df map rides in as a broadcast plan via the idf join
-   * being pre-applied by the caller (here: unweighted df=0 default).
-   */
-  def fastAlignScore(a: Array[String], b: Array[String],
-      df: collection.Map[String, Long] = Map.empty, n: Long = 1L,
-      alpha: Double = 0.0, beta: Double = 0.0, gamma: Double = 1.0): Double = {
-    def weights(t: Array[String]): Array[Double] =
-      t.zipWithIndex.map { case (tok, pos) =>
-        math.pow(pos + 1.0, -alpha) *
-          math.exp(-beta * df.getOrElse(tok, 0L).toDouble / n)
-      }
-    val wa = weights(a); val wb = weights(b)
-    // first-occurrence position per token (reference aligns sorted id lists)
-    def firstPos(t: Array[String]): Map[String, Int] =
-      t.zipWithIndex.reverse.toMap
-    val pa = firstPos(a); val pb = firstPos(b)
-    var score = 0.0
-    pa.foreach { case (tok, i) =>
-      pb.get(tok).foreach { j =>
-        score += (wa(i) + wb(j)) * math.exp(-gamma * math.abs(i - j))
-      }
-    }
-    val norm = wa.sum + wb.sum
-    if (norm == 0.0) 0.0 else score / norm
   }
 }

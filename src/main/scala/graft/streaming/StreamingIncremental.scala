@@ -16,9 +16,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
  * into the state so the next micro-batch sees it. This is the `foreachBatch`
  * shape Structured Streaming documents for stream-to-batch-sink work: the
  * per-batch body is deterministic batch code ([[DedupPipeline]]), the
- * streaming engine only owns offsets/triggers. The watermarked operators in
- * [[StreamingDedup]] remain the low-latency in-stream filters; this is the
- * stateful corpus-building leg.
+ * streaming engine only owns offsets/triggers.
  *
  * State tables under `stateRoot` ([[TableIO]]): the [[CorpusState]]
  * tables `Main --corpus-features` uses (batch 0 bootstraps them, freezing

@@ -379,29 +379,4 @@ object ImageCodec {
     }
     (x0, y0, x1 - x0, y1 - y0)
   }
-
-  /** PSNR in dB between two same-size images (Double.PositiveInfinity if equal). */
-  def psnr(a: BufferedImage, b: BufferedImage): Double = {
-    require(a.getWidth == b.getWidth && a.getHeight == b.getHeight,
-      "psnr requires equal dimensions")
-    var mse = 0.0
-    val n = a.getWidth * a.getHeight * 3
-    var y = 0
-    while (y < a.getHeight) {
-      var x = 0
-      while (x < a.getWidth) {
-        val pa = a.getRGB(x, y); val pb = b.getRGB(x, y)
-        var shift = 0
-        while (shift <= 16) {
-          val d = ((pa >> shift) & 0xFF) - ((pb >> shift) & 0xFF)
-          mse += d.toDouble * d
-          shift += 8
-        }
-        x += 1
-      }
-      y += 1
-    }
-    mse /= n
-    if (mse == 0.0) Double.PositiveInfinity else 10.0 * math.log10(255.0 * 255.0 / mse)
-  }
 }

@@ -142,7 +142,7 @@ class MetricsSpec extends SparkSpec {
 
   test("clusterPairs emits all intra-cluster pairs") {
     val asg = Seq(("a", 1L), ("b", 1L), ("c", 1L), ("d", 2L)).toDF("id", "cluster")
-    val pairs = Metrics.clusterPairs(asg, "id", "cluster")
+    val pairs = Oracles.clusterPairs(asg, "id", "cluster")
       .as[(String, String)].collect().toSet
     assert(pairs == Set(("a", "b"), ("a", "c"), ("b", "c")))
   }

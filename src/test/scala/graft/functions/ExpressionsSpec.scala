@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.functions.Oracles._
 import org.apache.spark.sql.functions._
 
 /** The Catalyst expressions must (a) produce the same bits as the kernels
@@ -27,7 +28,7 @@ class ExpressionsSpec extends SparkSpec {
       val toks = t.toLowerCase.replaceAll("[^a-z0-9 ]", " ")
         .replaceAll(" +", " ").trim.split(" ").filter(_.nonEmpty)
       val sh = HashKernels.shingleHashesFromTokenHashes(
-        toks.map(HashKernels.hashString(_, 42L)), 3, 42L)
+        toks.map(Oracles.hashString(_, 42L)), 3, 42L)
       val (_, gsh, gsig, gsim, _) = got(i)
       assert(gsh.sameElements(sh), s"shingles differ for '$t'")
       assert(gsig.sameElements(HashKernels.minhashArray(sh, 16, 42L)))

@@ -89,12 +89,19 @@ class AnnSpec extends SparkSpec {
     assert(cents.collect().map(_.toString).sorted.toSeq ==
       train().collect().map(_.toString).sorted.toSeq, "kmeans not deterministic")
     val queries = df.where($"vec_id" < 10)
-    val exact = Ann.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
+    val books = Ann.pqResidualCodebooks(df, cents, "vec_id", "embedding",
+      m = 4, k = 16, iters = 1)
+    // probing every cell removes the coarse restriction: the top-10 is the
+    // residual ADC top-10 over every (query, item) pair
+    val allPairs = queries.select($"vec_id".as("query_id"))
+      .crossJoin(df.select($"vec_id".as("item_id")))
+      .where($"query_id" =!= $"item_id")
+    val exact = Ranking.topKItems(Ann.pqResidualScorePairs(allPairs, df, queries,
+        cents, books, "vec_id", "embedding"), 10, "adc")
       .select("query_id", "item_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val ivf = Ann.ivfTopKWith(df, queries, cents, "vec_id", "embedding", 10,
-      nProbe = 8) // probes every cell -> approximation removed
-    val got = ivf.select("query_id", "item_id", "rank")
-      .as[(Long, Long, Int)].collect().toSet
+    val got = Ann.ivfPqResidualTopK(df, queries, cents, books, "vec_id", "embedding",
+        k = 10, nProbe = 8)
+      .select("query_id", "item_id", "rank").as[(Long, Long, Int)].collect().toSet
     assert(got == exact,
       s"missing=${(exact diff got).take(5)} extra=${(got diff exact).take(5)}")
   }
@@ -104,15 +111,19 @@ class AnnSpec extends SparkSpec {
     val queries = df.where($"vec_id" < 20)
     val exact = Ann.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
       .select("query_id", "item_id").as[(Long, Long)].collect().toSet
-    def recallOf(res: org.apache.spark.sql.DataFrame): Double = {
-      val s = res.select("query_id", "item_id").as[(Long, Long)].collect().toSet
+    // recall of the probed cells: with k above the corpus size the search
+    // returns every candidate its nProbe cells hold
+    def recallOf(iters: Int): Double = {
+      val cents = Ann.kmeansCentroids(df, "vec_id", "embedding", nlist = 16, iters = iters)
+      val books = Ann.pqResidualCodebooks(df, cents, "vec_id", "embedding",
+        m = 4, k = 16, iters = 1)
+      val s = Ann.ivfPqResidualTopK(df, queries, cents, books, "vec_id", "embedding",
+          k = vecs.size, nProbe = 4)
+        .select("query_id", "item_id").as[(Long, Long)].collect().toSet
       (exact intersect s).size.toDouble / exact.size
     }
-    val sampled = recallOf(Ann.ivfTopK(df, queries, "vec_id", "embedding", 10,
-      nlist = 16, nProbe = 4))
-    val cents = Ann.kmeansCentroids(df, "vec_id", "embedding", nlist = 16, iters = 3)
-    val trained = recallOf(Ann.ivfTopKWith(df, queries, cents, "vec_id", "embedding",
-      10, nProbe = 4))
+    val sampled = recallOf(iters = 0) // the hash-order sample, unrefined
+    val trained = recallOf(iters = 3)
     assert(trained >= sampled - 0.05, s"trained=$trained sampled=$sampled")
     assert(trained >= 0.7, s"trained recall too low: $trained")
   }
@@ -167,13 +178,14 @@ class AnnSpec extends SparkSpec {
       (1, 0, Seq(1f, 0f)), (1, 1, Seq(0f, 1f)))
       .toDF("sub", "code", "centv")
     val short = Seq((1L, Array(1f, 0f, 1f))).toDF("vec_id", "embedding")
-    assert(dimRejection(Ann.pqEncode(short, books, "vec_id", "embedding").collect()) ==
-      "corpus vector dim 3 != codebook dim 4")
+    val query = Seq((2L, Array(1f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
+    assert(dimRejection(Ann.pqTopK(short, query, books, "vec_id", "embedding", 1)
+        .collect()) == "corpus vector dim 3 != codebook dim 4")
     val sparse = Seq((0, 0, Seq(1f, 0f)), (0, 2, Seq(0f, 1f)))
       .toDF("sub", "code", "centv")
     val ok = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
-      Ann.pqEncode(ok, sparse, "vec_id", "embedding").collect()
+      Ann.pqTopK(ok, ok, sparse, "vec_id", "embedding", 1).collect()
     }
   }
 
@@ -207,12 +219,9 @@ class AnnSpec extends SparkSpec {
     val entries: Seq[(String, Boolean, (DataFrame, DataFrame) => Any)] = Seq(
       ("pqCodebooks", false,
         (c, _) => Ann.pqCodebooks(c, "vec_id", "embedding", m = 2, k = 2, iters = 1)),
-      ("pqEncode", false, (c, _) => Ann.pqEncode(c, books, "vec_id", "embedding").collect()),
       ("pqScorePairs", true,
         (c, q) => Ann.pqScorePairs(pairs, c, q, books, "vec_id", "embedding").collect()),
       ("pqTopK", true, (c, q) => Ann.pqTopK(c, q, books, "vec_id", "embedding", 2).collect()),
-      ("ivfPqTopK", true, (c, q) =>
-        Ann.ivfPqTopK(c, q, cents, books, "vec_id", "embedding", 2, nProbe = 2).collect()),
       ("pqResidualScorePairs", true, (c, q) =>
         Ann.pqResidualScorePairs(pairs, c, q, cents, books, "vec_id", "embedding").collect()),
       ("ivfPqResidualTopK", true, (c, q) =>
@@ -235,9 +244,13 @@ class AnnSpec extends SparkSpec {
       .toDF("sub", "code", "centv")
     val df = Seq((1L, null: Array[Float]), (2L, Array(1f, 0f, 0f, 1f)))
       .toDF("vec_id", "embedding")
-    val codes = Ann.pqEncode(df, books, "vec_id", "embedding")
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(codes == Map(1L -> Seq(1, 1), 2L -> Seq(0, 1)))
+    // against the probe (1, 0, 1, 0) each code pair scores differently:
+    // (1, 1) -> -1.0, (0, 1) -> 0.0, (1, 0) -> 0.0, (0, 0) -> 1.0
+    val probe = Seq((9L, Array(1f, 0f, 1f, 0f))).toDF("vec_id", "embedding")
+    val pairs = Seq((9L, 1L), (9L, 2L)).toDF("query_id", "item_id")
+    val adc = Ann.pqScorePairs(pairs, df, probe, books, "vec_id", "embedding")
+      .select("item_id", "adc").as[(Long, Double)].collect().toMap
+    assert(adc == Map(1L -> -1.0, 2L -> 0.0))
     val top = Ann.pqTopK(df, df, books, "vec_id", "embedding", k = 1)
       .select("query_id", "item_id").as[(Long, Long)].collect().toSet
     assert(top == Set((1L, 2L), (2L, 1L)))
@@ -261,7 +274,7 @@ class AnnSpec extends SparkSpec {
       ($"vec_id" - 1000L).as("item_id"))
     val (scored, setup) = StageMetrics.measure(spark)(
       Ann.pqScorePairs(pairs, corpus, queries, books, "vec_id", "embedding"))
-    assert(setup.jobs.isEmpty, setup.summary)
+    assert(setup.jobs.isEmpty, setup.jobs.mkString("; "))
     val want = Ann.pqScorePairs(pairs, df, queries, books, "vec_id", "embedding")
       .as[(Long, Long, Double)].collect().toSet
     assert(want.size == 10 && scored.as[(Long, Long, Double)].collect().toSet == want)
@@ -275,17 +288,16 @@ class AnnSpec extends SparkSpec {
     assert(perSub.values.forall(c => c >= 2 && c <= 16))
     val copies = df.unionByName(
       df.select(($"vec_id" + 1000L).as("vec_id"), $"embedding"))
-    val codes = Ann.pqEncode(copies, books, "vec_id", "embedding")
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(codes.values.forall(_.size == 4))
-    codes.foreach { case (_, cs) =>
-      cs.zipWithIndex.foreach { case (c, sub) =>
-        assert(c >= 0 && c < perSub(sub), s"code $c out of range in sub $sub")
-      }
-    }
-    (0L until 200L).foreach { i =>
-      assert(codes(i) == codes(i + 1000L), s"copy of $i encoded differently")
-    }
+    // a copy scores exactly like its original against every query, so both
+    // carry the same codes
+    val queries = df.where($"vec_id" < 5)
+    val pairs = queries.select($"vec_id".as("query_id"))
+      .crossJoin(copies.select($"vec_id".as("item_id")))
+    val adc = Ann.pqScorePairs(pairs, copies, queries, books, "vec_id", "embedding")
+      .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(adc.size == 5 * 400)
+    for (q <- 0L until 5L; i <- 0L until 200L)
+      assert(adc((q, i)) == adc((q, i + 1000L)), s"copy of $i encoded differently")
   }
 
   test("pq: no item ADC-outscores the query's own original (q50 invariant)") {
@@ -301,23 +313,6 @@ class AnnSpec extends SparkSpec {
     assert(joined.count() == 200L)
     assert(joined.where($"own_adc" < $"adc").count() == 0L,
       "an item out-scored the query's own vector under ADC")
-  }
-
-  test("ivfpq: probing every cell equals flat PQ ranking (approximations compose)") {
-    // with all coarse cells probed the candidate set is the whole corpus, so
-    // IVFADC must reproduce the flat ADC ranking row-for-row (same scores,
-    // same tie-break) — pins the candidate join and the shared scoring path
-    val df = vecs.toDF("vec_id", "embedding")
-    val queries = df.where($"vec_id" < 10)
-    val books = Ann.pqCodebooks(df, "vec_id", "embedding", m = 4, k = 16, iters = 1)
-    val cents = Ann.kmeansCentroids(df, "vec_id", "embedding", nlist = 8, iters = 1)
-    val flat = Ann.pqTopK(df, queries, books, "vec_id", "embedding", 10)
-      .select("query_id", "item_id", "rank").as[(Long, Long, Int)].collect().toSet
-    val ivfpq = Ann.ivfPqTopK(df, queries, cents, books, "vec_id", "embedding",
-        k = 10, nProbe = 8)
-      .select("query_id", "item_id", "rank").as[(Long, Long, Int)].collect().toSet
-    assert(ivfpq == flat,
-      s"missing=${(flat diff ivfpq).take(5)} extra=${(ivfpq diff flat).take(5)}")
   }
 
   test("pq: decent recall@10 vs exact on clustered vectors") {
@@ -406,8 +401,9 @@ class AnnSpec extends SparkSpec {
 
   test("residual codebooks beat flat codebooks at equal (m, k) on clustered data") {
     // the reason IndexIVFPQ encodes residuals: displacement-local codewords.
-    // Same coarse structure, same (m, k) budget — full-probe recall@10 must
-    // not be worse than the flat-vector codes variant on clustered vectors.
+    // Same (m, k) budget — full-probe recall@10 must not be worse than the
+    // flat-vector codes (a full probe restricts nothing, so that is pqTopK)
+    // on clustered vectors.
     val df = vecs.toDF("vec_id", "embedding")
     val queries = df.where($"vec_id" < 20)
     val exact = Ann.bruteForceTopK(df, queries, "vec_id", "embedding", 10)
@@ -420,8 +416,7 @@ class AnnSpec extends SparkSpec {
       val s = top.select("query_id", "item_id").as[(Long, Long)].collect().toSet
       (exact intersect s).size.toDouble / exact.size
     }
-    val flat = recallOf(Ann.ivfPqTopK(df, queries, cents, flatBooks,
-      "vec_id", "embedding", k = 10, nProbe = 8))
+    val flat = recallOf(Ann.pqTopK(df, queries, flatBooks, "vec_id", "embedding", k = 10))
     val res = recallOf(Ann.ivfPqResidualTopK(df, queries, cents, resBooks,
       "vec_id", "embedding", k = 10, nProbe = 8))
     assert(res >= flat, s"residual recall $res < flat recall $flat")
@@ -490,14 +485,12 @@ class AnnSpec extends SparkSpec {
     }
     for (np <- Seq(0, -1)) {
       rejects("nProbe")(Ann.ivfTopK(df, df, "vec_id", "embedding", 5, nlist = 8, nProbe = np))
-      rejects("nProbe")(Ann.ivfTopKWith(df, df, cents, "vec_id", "embedding", 5, np))
-      rejects("nProbe")(Ann.ivfCandidates(df, df, cents, "vec_id", "embedding", np))
-      rejects("nProbe")(Ann.ivfPqTopK(df, df, cents, books, "vec_id", "embedding", 5, np))
       rejects("nProbe")(Ann.ivfPqResidualTopK(df, df, cents, books,
         "vec_id", "embedding", 5, np))
     }
     val empty = Seq.empty[(Long, Array[Float])].toDF("cent_id", "centv")
-    rejects("centroids")(Ann.ivfTopKWith(df, df, empty, "vec_id", "embedding", 5, 1))
+    rejects("centroids")(Ann.ivfPqResidualTopK(df, df, empty, books,
+      "vec_id", "embedding", 5, 1))
     rejects("centroids")(Ann.cellAssignments(df, empty, "vec_id", "embedding"))
   }
 }

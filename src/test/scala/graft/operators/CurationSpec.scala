@@ -10,29 +10,30 @@ class CurationSpec extends SparkSpec {
     .map(i => (i.toLong, s"stratum${i % 4}", s"host${i % 37}", 1 + (i * 7) % 90))
     .toDF("doc_id", "lang", "source", "n_tokens")
 
-  test("deterministicSample: reproducible, rate-accurate, nested across rates") {
-    val s20 = Curation.deterministicSample(docs, "doc_id", 0.2)
-      .select("doc_id").as[Long].collect().toSet
-    val s20b = Curation.deterministicSample(docs, "doc_id", 0.2)
-      .select("doc_id").as[Long].collect().toSet
+  /** A single-rate sample: no stratum has its own rate. */
+  private def sampleAt(df: org.apache.spark.sql.DataFrame, rate: Double,
+      salt: String = "graft") =
+    Curation.stratifiedSample(df, "doc_id", "lang", Map.empty, rate, salt)
+
+  test("stratifiedSample: reproducible, rate-accurate, nested across rates") {
+    val s20 = sampleAt(docs, 0.2).select("doc_id").as[Long].collect().toSet
+    val s20b = sampleAt(docs, 0.2).select("doc_id").as[Long].collect().toSet
     assert(s20 == s20b)
     assert(math.abs(s20.size / 2000.0 - 0.2) < 0.05, s"rate off: ${s20.size}")
     // threshold monotonicity: a lower rate is a SUBSET of a higher one
-    val s50 = Curation.deterministicSample(docs, "doc_id", 0.5)
-      .select("doc_id").as[Long].collect().toSet
+    val s50 = sampleAt(docs, 0.5).select("doc_id").as[Long].collect().toSet
     assert(s20.subsetOf(s50))
     // different salt = a different (still rate-accurate) sample
-    val alt = Curation.deterministicSample(docs, "doc_id", 0.2, salt = "other")
-      .select("doc_id").as[Long].collect().toSet
+    val alt = sampleAt(docs, 0.2, salt = "other").select("doc_id").as[Long].collect().toSet
     assert(alt != s20)
     // boundary rates
-    assert(Curation.deterministicSample(docs, "doc_id", 1.0).count() == 2000)
-    assert(Curation.deterministicSample(docs, "doc_id", 0.0).count() == 0)
+    assert(sampleAt(docs, 1.0).count() == 2000)
+    assert(sampleAt(docs, 0.0).count() == 0)
   }
 
-  test("deterministicSample keeps duplicate keys together") {
+  test("stratifiedSample keeps duplicate keys together") {
     val dup = docs.union(docs) // every key twice
-    val n = Curation.deterministicSample(dup, "doc_id", 0.3)
+    val n = sampleAt(dup, 0.3)
       .groupBy("doc_id").count().select("count").as[Long].collect()
     assert(n.nonEmpty && n.forall(_ == 2), "a key was split by sampling")
   }
@@ -46,10 +47,9 @@ class CurationSpec extends SparkSpec {
     assert(math.abs(got("stratum1") / 500.0 - 0.1) < 0.08, got.toString)
     assert(math.abs(got("stratum2") / 500.0 - 0.4) < 0.08, got.toString)
     assert(math.abs(got("stratum3") / 500.0 - 0.4) < 0.08, got.toString)
-    // membership within a stratum matches the plain sampler at that rate
+    // membership within a stratum matches a single-rate sample at that rate
     // (same salt, same key -> same hash -> same decision)
-    val plain = Curation.deterministicSample(
-        docs.where(col("lang") === "stratum0"), "doc_id", 0.8)
+    val plain = sampleAt(docs.where(col("lang") === "stratum0"), 0.8)
       .select("doc_id").as[Long].collect().toSet
     val strat = Curation.stratifiedSample(docs, "doc_id", "lang", rates, 0.4)
       .where(col("lang") === "stratum0")

@@ -98,7 +98,7 @@ class DedupSpec extends SparkSpec {
       .select("a", "b").as[(Long, Long)].collect().toSet
     // brute force with the same kernels
     val sims = corpus.map { case (id, text) =>
-      val toks = text.split(" ").map(t => HashKernels.hashString(t, cfg.seed))
+      val toks = text.split(" ").map(t => graft.functions.Oracles.hashString(t, cfg.seed))
       val sh = HashKernels.shingleHashesFromTokenHashes(toks, cfg.shingleK, cfg.seed)
       id -> HashKernels.simhash64Array(sh, cfg.seed)
     }
@@ -180,7 +180,7 @@ class DedupSpec extends SparkSpec {
       val got = Dedup.containmentPairs(docs, "doc_id", "text", cfg, t)
         .select("a", "b", "containment").as[(Long, Long, Double)].collect()
         .map { case (a, b, c) => (a, b) -> c }.toMap
-      val want = Dedup.bruteForceContainmentPairs(docs, "doc_id", "text", cfg, t)
+      val want = Oracles.bruteForceContainmentPairs(docs, "doc_id", "text", cfg, t)
         .select("a", "b", "containment").as[(Long, Long, Double)].collect()
         .map { case (a, b, c) => (a, b) -> c }.toMap
       assert(want.nonEmpty, s"t=$t oracle empty — corpus broken")

@@ -3,7 +3,6 @@ package graft.operators
 import java.sql.Timestamp
 
 import graft.SparkSpec
-import graft.config.DedupConfig
 import org.apache.spark.sql.functions._
 
 class EventRankingAdmittedSpec extends SparkSpec {
@@ -24,31 +23,28 @@ class EventRankingAdmittedSpec extends SparkSpec {
   private val hashes = Seq(("a", 7L), ("b", 7L), ("c", 8L), ("d", 9L), ("q", 1L))
     .toDF("image_id", "content_hash")
 
-  test("dupAttach=false drops later same-content events before ranking") {
-    val got = EventRanking.replayRankAdmitted(log(), hashes,
-        DedupConfig.default.copy(dupAttach = false, forgetDays = Some(2)),
-        onlyLabeled = true,
+  /** Admission then the replay ranking, as q22 and q37 run them: (cluster_id,
+    * cluster_score, rank) for the query event, a two-day window. */
+  private def admittedRanking(dupAttach: Boolean): Seq[(Long, Double, Int)] =
+    EventRanking.replayRank(
+        EventReplay.admitted(log(), hashes, onlyLabeled = true, dupAttach = dupAttach),
         queryFilter = col("image_id") === "q",
         score = -abs(col("q_val") - col("c_val")),
-        retrievalTopN = 10, k = 10, minScore = -100.0)
+        forgetDays = 2, retrievalTopN = 10, k = 10, minScore = -100.0)
       .select("cluster_id", "cluster_score", "rank")
-      .as[(Long, Double, Int)].collect().sortBy(_._3)
+      .as[(Long, Double, Int)].collect().sortBy(_._3).toSeq
+
+  test("dupAttach=false drops later same-content events before ranking") {
+    val got = admittedRanking(dupAttach = false)
     // event 2 (image b, same content hash as a) is not admitted, so cluster
     // 100's best is event 1: -|5-1| = -4; cluster 200: -|5-9| = -4; tie
     // breaks by cluster_id
-    assert(got.toSeq == Seq((100L, -4.0, 1), (200L, -4.0, 2)))
+    assert(got == Seq((100L, -4.0, 1), (200L, -4.0, 2)))
   }
 
-  test("dupAttach=true keeps the duplicate and forgetDays=None covers the span") {
-    val got = EventRanking.replayRankAdmitted(log(), hashes,
-        DedupConfig.default.copy(dupAttach = true, forgetDays = None),
-        onlyLabeled = true,
-        queryFilter = col("image_id") === "q",
-        score = -abs(col("q_val") - col("c_val")),
-        retrievalTopN = 10, k = 10, minScore = -100.0)
-      .select("cluster_id", "cluster_score", "rank")
-      .as[(Long, Double, Int)].collect().sortBy(_._3)
+  test("dupAttach=true keeps the duplicate before ranking") {
+    val got = admittedRanking(dupAttach = true)
     // event 2 admitted: cluster 100's best is -|5-5| = 0
-    assert(got.toSeq == Seq((100L, 0.0, 1), (200L, -4.0, 2)))
+    assert(got == Seq((100L, 0.0, 1), (200L, -4.0, 2)))
   }
 }

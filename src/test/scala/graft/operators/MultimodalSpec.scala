@@ -21,42 +21,6 @@ class MultimodalSpec extends SparkSpec {
     bos.toByteArray
   }
 
-  test("resizeTo: oversize images shrink aspect-preserved, small ones pass through") {
-    val smallBytes = ImageCodec.encodePng(gradient(40, 30))
-    val gifBytes = encVia("gif", gradient(200, 80))
-    val rows = Seq(
-      ("big_png", ImageCodec.encodePng(gradient(200, 100)), "png"),
-      ("big_jpg", ImageCodec.encodeJpg(gradient(100, 200)), "jpg"),
-      ("big_gif", gifBytes, "gif"),
-      ("small", smallBytes, "png"),
-      ("opaque", Array[Byte](1, 2, 3, 4), "webm"))
-      .toDF("image_id", "bytes", "fmt")
-    val out = Multimodal.resizeTo(rows, maxW = 64, maxH = 64)
-      .collect().map(r => r.getString(0) ->
-        ((r.getInt(2), r.getInt(3), r.getString(4), r.getAs[Array[Byte]](1)))).toMap
-
-    val (bw, bh, bf, bb) = out("big_png")
-    assert((bw, bh, bf) == ((64, 32, "png")))
-    val dec = ImageCodec.decode(bb)
-    assert(dec.getWidth == 64 && dec.getHeight == 32)
-
-    val (jw, jh, jf, _) = out("big_jpg")
-    assert((jw, jh, jf) == ((32, 64, "jpg")))
-
-    val (sw, sh, _, sb) = out("small")
-    assert((sw, sh) == ((40, 30)))
-    assert(sb sameElements smallBytes, "small payload must pass through untouched")
-
-    // decodable but not faithfully re-encodable: dims measured, bytes and
-    // fmt untouched — resizeTo must never swap a gif payload for jpeg bytes
-    val (gw, gh, gf, gb) = out("big_gif")
-    assert((gw, gh, gf) == ((200, 80, "gif")))
-    assert(gb sameElements gifBytes, "gif payload must pass through untouched")
-
-    val (_, _, of, ob) = out("opaque")
-    assert(of == "webm+passthrough" && (ob sameElements Array[Byte](1, 2, 3, 4)))
-  }
-
   test("decodeFeatures: gif and bmp decode for real via the in-JDK registry") {
     val enc = encVia _
     val rows = Seq(
@@ -72,21 +36,5 @@ class MultimodalSpec extends SparkSpec {
     assert(out("b") == ((true, 16, 10)))
     assert(out("p") == ((true, 8, 8)))
     assert(out("w")._1 == false, "webp must take the honest stub path")
-  }
-
-  test("frameSamples: every-nth frame rows, deterministic hashes") {
-    val vids = Seq(
-      ("clip_a", Some(Array[Byte](9, 9, 9)), Some(10)),
-      ("clip_b", Some(Array[Byte](7, 7)), Some(3)),
-      ("clip_null", Some(Array[Byte](5)), Option.empty[Int]), // null count -> 0 rows
-      ("clip_nobytes", Option.empty[Array[Byte]], Some(5)))   // null payload -> 0 rows
-      .toDF("image_id", "bytes", "n_frames")
-    val out = Multimodal.frameSamples(vids, "n_frames", everyNth = 4)
-      .as[(String, Int, Long)].collect().sortBy(r => (r._1, r._2))
-    assert(out.map(r => (r._1, r._2)).toSeq ==
-      Seq(("clip_a", 0), ("clip_a", 4), ("clip_a", 8), ("clip_b", 0)))
-    val rerun = Multimodal.frameSamples(vids, "n_frames", everyNth = 4)
-      .as[(String, Int, Long)].collect().sortBy(r => (r._1, r._2))
-    assert(out.toSeq == rerun.toSeq, "frame hashes must be deterministic")
   }
 }

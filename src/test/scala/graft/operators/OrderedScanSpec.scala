@@ -100,28 +100,6 @@ class OrderedScanSpec extends SparkSpec {
     assert(all == rows.size)
   }
 
-  test("rrfFuse: hand-computed fusion, absent-list items, tie-break, guards") {
-    // query 1: list A ranks (x=1, y=2), list B ranks (y=1, z=2).
-    // scores (k=60): y = 1/62 + 1/61, x = 1/61, z = 1/62 -> order y, x, z
-    val a = Seq((1L, "x", 1), (1L, "y", 2)).toDF("query_id", "item_id", "rank")
-    val b = Seq((1L, "y", 1), (1L, "z", 2)).toDF("query_id", "item_id", "rank")
-    val got = Ranking.rrfFuse(Seq(a, b), topK = 3)
-      .select("item_id", "rank", "score")
-      .as[(String, Int, Double)].collect().sortBy(_._2)
-    assert(got.map(_._1).toSeq == Seq("y", "x", "z"))
-    val r6 = (x: Double) => math.round(x * 1e6) / 1e6
-    assert(got(0)._3 == r6(1.0 / 62 + 1.0 / 61))
-    assert(got(1)._3 == r6(1.0 / 61))
-    assert(got(2)._3 == r6(1.0 / 62))
-    // equal fused scores tie-break by item_id ascending (topKItems rule)
-    val t1 = Seq((1L, "m", 1), (1L, "n", 1)).toDF("query_id", "item_id", "rank")
-    val tied = Ranking.rrfFuse(Seq(t1), topK = 2)
-      .select("item_id", "rank").as[(String, Int)].collect().sortBy(_._2)
-    assert(tied.map(_._1).toSeq == Seq("m", "n"))
-    intercept[IllegalArgumentException] { Ranking.rrfFuse(Seq.empty, 5) }
-    intercept[IllegalArgumentException] { Ranking.rrfFuse(Seq(a), 0) }
-  }
-
   test("percentileRanks: percent_rank semantics with ties, nulls, " +
     "degenerate input, partitioning-independent") {
     // scores 10, 20, 20, 30: pct = below/(n-1) -> 0, 1/3, 1/3, 1

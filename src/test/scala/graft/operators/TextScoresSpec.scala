@@ -31,11 +31,11 @@ class TextScoresSpec extends SparkSpec {
   }
 
   test("fast align: identical docs score high, disjoint score zero, shift decays") {
-    val same = TextScores.fastAlignScore(Array("a", "b", "c"), Array("a", "b", "c"))
+    val same = Oracles.fastAlignScore(Array("a", "b", "c"), Array("a", "b", "c"))
     assert(math.abs(same - 1.0) < 1e-9) // every token matches at distance 0
-    val disjoint = TextScores.fastAlignScore(Array("a", "b"), Array("x", "y"))
+    val disjoint = Oracles.fastAlignScore(Array("a", "b"), Array("x", "y"))
     assert(disjoint == 0.0)
-    val shifted = TextScores.fastAlignScore(Array("a", "b", "c"), Array("x", "a", "b"))
+    val shifted = Oracles.fastAlignScore(Array("a", "b", "c"), Array("x", "a", "b"))
     assert(shifted > 0.0 && shifted < same)
   }
 
@@ -51,8 +51,8 @@ class TextScoresSpec extends SparkSpec {
     val got = df.select($"i", graft.functions.fast_align($"ta", $"tb").as("s"))
       .as[(Int, Double)].collect().toMap
     cases.zipWithIndex.foreach { case ((a, b), i) =>
-      assert(math.abs(got(i) - TextScores.fastAlignScore(a, b)) < 1e-12,
-        s"case $i: got=${got(i)} want=${TextScores.fastAlignScore(a, b)}")
+      assert(math.abs(got(i) - Oracles.fastAlignScore(a, b)) < 1e-12,
+        s"case $i: got=${got(i)} want=${Oracles.fastAlignScore(a, b)}")
     }
   }
 
@@ -84,7 +84,8 @@ class TextScoresSpec extends SparkSpec {
     // corpus idf (N=3): red/fox df=2 -> idf=1; jumps/sleeps/blue/whale/sings
     // df=1 -> idf = 1 + ln(1.5)
     val queries = docs.where($"doc_id" === 1L)
-    val got = TextScores.tfidfIndexTopK(docs, queries, "doc_id", "text", k = 3)
+    val got = Ranking.topKItems(
+        TextScores.tfidfIndexScores(docs, queries, "doc_id", "text"), 3)
       .select("query_id", "item_id", "rank", "score")
       .as[(Long, Long, Int, Double)].collect().sortBy(_._3)
     val w1 = { val i = 1.0 + math.log(3.0 / 2); i * i } // df=1 tokens
@@ -96,8 +97,8 @@ class TextScoresSpec extends SparkSpec {
     assert(math.abs(got(1)._4 - 2.0) < 1e-9)        // doc2: red^2+fox^2
     // minIdf above the df=2 tokens' idf (1.0) prunes red/fox postings:
     // only 'jumps' remains indexed for the query -> self-match only
-    val pruned = TextScores.tfidfIndexTopK(docs, queries, "doc_id", "text",
-        k = 3, minIdf = 1.1)
+    val pruned = Ranking.topKItems(
+        TextScores.tfidfIndexScores(docs, queries, "doc_id", "text", minIdf = 1.1), 3)
       .select("item_id").as[Long].collect().toSeq
     assert(pruned == Seq(1L))
   }
@@ -122,7 +123,7 @@ class TextScoresSpec extends SparkSpec {
     assert(got(5L) == ((5L, 0, 1.0, 0.0)))
   }
 
-  test("noveltyExact: hand-computed fractions; bloom path is an exact lower bound") {
+  test("noveltyExact: hand-computed fractions") {
     val cfg = graft.config.DedupConfig.default
     // corpus with enough token variety that probe trigrams cannot collide
     val corpus = (0 until 120).map { i =>
@@ -139,17 +140,6 @@ class TextScoresSpec extends SparkSpec {
     assert(got(2000L) == ((2000L, 1, 1.0)))
     assert(got(3000L)._2 == 3 &&
       got(3000L)._3 == math.rint(2.0 / 3 * 1e6) / 1e6)
-    // bloom path: no false negatives -> seen_bloom >= seen_exact -> novelty
-    // lower-bounds exact; generously-sized sketch keeps the gap at zero here
-    val sketch = TextScores.shingleSketch(corpus, "text", cfg,
-      expectedItems = 100000L)
-    val bloom = TextScores.noveltyBloom(batch, "doc_id", "text", cfg, sketch)
-      .as[(Long, Int, Double)].collect().map(r => r._1 -> r).toMap
-    got.foreach { case (id, (_, n, nov)) =>
-      assert(bloom(id)._2 == n)
-      assert(bloom(id)._3 <= nov + 1e-9, s"bloom novelty exceeds exact at $id")
-    }
-    assert(bloom(1000L)._3 == 0.0) // a re-crawl can never look novel
   }
 
   test("heavyNgrams: df and total counts by hand; short docs emit nothing") {

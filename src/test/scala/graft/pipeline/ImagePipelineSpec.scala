@@ -2,11 +2,9 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.config.DedupConfig
-import graft.eval.Metrics
 import graft.functions.HashKernels
 import graft.io.CheckpointStore
 import graft.model.ImageRow
-import graft.operators.Multimodal
 import graft.synth.{ImageCodec, ImageGen}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +27,7 @@ class ImagePipelineSpec extends SparkSpec {
     val feats = rows.map { case (id, caption, phash) =>
       val toks = caption.toLowerCase.replaceAll("[^a-z0-9 ]", " ")
         .replaceAll(" +", " ").trim.split(" ").filter(_.nonEmpty)
-        .map(t => HashKernels.hashString(t, cfg.seed))
+        .map(t => graft.functions.Oracles.hashString(t, cfg.seed))
       val sh = HashKernels.shingleHashesFromTokenHashes(toks, cfg.shingleK, cfg.seed)
       val sim = HashKernels.simhash64Array(HashKernels.phashTokens(phash), cfg.seed)
       (id, sh, sim)
@@ -45,7 +43,7 @@ class ImagePipelineSpec extends SparkSpec {
     // recall: every oracle dup pair must land in one cluster (the pipeline
     // emits representative-level evidence pairs; members reach their reps via
     // exact-identity star edges, so co-membership is the full pair set)
-    val clusterPairs = Metrics.clusterPairs(result.assignments, "image_id", "cluster_id")
+    val clusterPairs = graft.eval.Oracles.clusterPairs(result.assignments, "image_id", "cluster_id")
       .as[(String, String)].collect().toSet
     assert(oraclePairs.nonEmpty)
     val recall = (oraclePairs intersect clusterPairs).size.toDouble / oraclePairs.size
@@ -84,7 +82,7 @@ class ImagePipelineSpec extends SparkSpec {
       members.foreach { r =>
         assert(r.caption.nonEmpty && r.w > 0 && r.h > 0)
         if (r.fmt == "jpg") {
-          val p = Multimodal.psnrAgainst(base, r.bytes)
+          val p = graft.operators.Oracles.psnrAgainst(base, r.bytes)
           assert(p >= 40.0, s"${r.image_id}: PSNR=$p")
         }
       }
